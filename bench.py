@@ -33,9 +33,12 @@ if str(REPO_ROOT) not in sys.path:
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Headline set: scan-agg, multi-join, window, sort-limit, temporal
-# join, streaming batch-twin, tier-X ops.
-BENCH_QUERIES = [
+# Per-query subset printed on the final stdout line (the full map
+# lives in BENCH_LOCAL.json): scan-agg, multi-join, window,
+# sort-limit, temporal join, streaming batch-twin and the costliest
+# tier-X ops. Keys are only ever appended, so the printed times stay
+# comparable across bench records.
+PRINTED_QUERIES = [
     "q1_pricing_summary",
     "q3_shipping_priority",
     "q5_local_supplier_volume",
@@ -58,79 +61,6 @@ BENCH_QUERIES = [
     "x_ann_cosine_topk",
     "x_text_quality",
     "x_pipeline_corpus_curation",
-    # round-3 additions (compare from BENCH_r03 on)
-    "x_semdedup",
-    "x_text_boilerplate",
-    "x_text_tfidf_topk",
-    # round-4 additions (compare from BENCH_r04 on)
-    "x_text_unigram_logprob",
-    "x_dsir_importance",
-    "x_quality_stratified_sample",
-    "x_text_exactsubstr_scrub",
-    "x_source_overlap_matrix",
-    "x_text_pmi_bigrams",
-    "x_text_bigram_logprob",
-    # round-5 additions (compare from BENCH_r05 on)
-    "x_text_zipf_fit",
-    "x_embed_gram_matrix",
-    "x_multimodal_phash_dedup",
-    "x_semdedup_hier_assign",
-    "x_graph_pagerank",
-    "x_layout_zorder",
-    "x_text_chunking",
-    "x_text_bm25_topk",
-    "x_graph_triangles",
-    "x_text_novelty",
-    "s_anomaly_zscore",
-    "s_locf_resample",
-    "x_graph_label_prop",
-    "s_attribution_last_touch",
-    "s_cohort_retention",
-    "s_session_paths",
-    "s_scd2_intervals",
-    "x_diag_key_skew",
-    "x_dq_audit",
-    "s_counter_increase",
-    "x_dedup_levenshtein",
-    "x_graph_kcore",
-    "x_graph_adamic_adar",
-    "x_market_basket_lift",
-    "x_ab_test_ztest",
-    "s_time_weighted_avg",
-    "s_cdc_upsert_apply",
-    "s_rolling_active_users",
-    "x_outlier_mad",
-    "x_embed_pq_encode",
-    "x_ann_pq_adc_topk",
-    "x_ann_pq_rerank_topk",
-    "x_ann_ivfpq_topk",
-    "o_recursive_cte",
-    "s_user_rfm",
-    "x_diag_join_blowup",
-    "j_scd2_asof",
-    "s_latency_percentiles",
-    "x_skyline_pareto",
-    "s_trending_decay",
-    "q23_fulfillment_latency",
-    # round-6 additions (compare from BENCH_r06 on)
-    "s_latency_percentiles_approx",
-    "x_sketch_hll_rolling",
-    "x_quality_classifier_score",
-    "x_mix_sample_weights",
-    "x_corpus_snapshot_diff",
-    "s_agg_delta_merge",
-    "x_text_char_entropy",
-]
-
-# Baseline-comparable subset printed per-query on the final stdout
-# line (the round-1 headline set; full map lives in BENCH_LOCAL.json).
-# Round 15 (VERDICT r14 item 6, additions-only — the original 22 keys
-# stay untouched): the printed headline gains the top tier-x costs the
-# optimization rounds actually touched, so the driver's
-# round-over-round per-query comparison covers the optimized surface
-# instead of only the TPC-H-dominated r1 set. Compare these five from
-# BENCH_r15 on.
-PRINTED_QUERIES = BENCH_QUERIES[:22] + [
     "x_dedup_minhash_mllib",
     "x_graph_pagerank",
     "x_multimodal_phash_jpeg_robust",
@@ -290,14 +220,8 @@ def main() -> None:
     def builder_for(name):
         return overrides.get(name, registry.QUERIES[name].builder)
 
-    # Full-registry coverage (round-6 VERDICT item 3: "bench the whole
-    # registry, not 80 of 236"): the historical BENCH_QUERIES order
-    # leads so round-over-round keys stay comparable, then every other
-    # registered query follows in registration order — a regression in
-    # the w/f/p/o families or a round-N-new op is now visible in the
-    # committed BENCH_LOCAL.json map instead of unmeasured.
-    names = [n for n in BENCH_QUERIES if n in registry.QUERIES]
-    names += [n for n in registry.QUERIES if n not in set(names)]
+    # every registered query, in registration order
+    names = list(registry.QUERIES)
     # optional subset (comma-separated) for targeted runs, e.g. the
     # sf-scaling spot-check of the text/dedup heavyweights
     subset = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
@@ -456,11 +380,10 @@ def main() -> None:
     local_path.write_text(json.dumps(full, indent=1) + "\n")
 
     # Printed line: suite total, per-family subtotals, and the
-    # baseline-comparable per-query subset (the round-1 headline set,
-    # so q1/q3/q5 etc. stay machine-readable round over round).
-    # Guaranteed < 1500 bytes: families are bounded (~10) and the
-    # printed subset is the fixed 22-query r1 list; as a belt-and-
-    # braces guard, drop printed queries from the back until it fits.
+    # PRINTED_QUERIES subset, so q1/q3/q5 etc. stay machine-readable
+    # round over round. Guaranteed < 1500 bytes: families are bounded
+    # (~10) and the printed subset is fixed; as a belt-and-braces
+    # guard, drop printed queries from the back until it fits.
     families: dict[str, float] = {}
     for name, secs in per_query.items():
         families[_family(name)] = round(

@@ -15,7 +15,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mcp_iceberg_duckdb_spark.sources.tables import Tables, load
+from mcp_iceberg_duckdb_spark.sources.tables import TABLE_NAMES, Tables, load
 
 
 def t(spark: SparkSession, sf_dir: str) -> Tables:
@@ -23,7 +23,10 @@ def t(spark: SparkSession, sf_dir: str) -> Tables:
 
 
 def views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    """Register fixture tables as temp views for spark.sql builders."""
+    """Register fixture tables as temp views so spark.sql (builders,
+    the router) resolves bare table names — the Spark analogue of the
+    reference registering the scanned Arrow table into DuckDB
+    (IcebergConnection.py:114)."""
     for name in names:
         load(spark, sf_dir, name).createOrReplaceTempView(name)
 
@@ -273,20 +276,7 @@ def sql_query(sql: str):
     registers every fixture view, then runs Catalyst on the text."""
 
     def builder(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(
-            spark,
-            sf_dir,
-            "region",
-            "nation",
-            "customer",
-            "supplier",
-            "part",
-            "orders",
-            "lineitem",
-            "events",
-            "documents",
-            "embeddings",
-        )
+        views(spark, sf_dir, *TABLE_NAMES)
         return spark.sql(sql)
 
     return builder

@@ -1844,8 +1844,6 @@ def x_quality_perplexity_buckets(spark, sf_dir):
     )
 
 
-_EPOCH_SHARDS = 16  # 2^4 range buckets over the 24-bit hash space
-
 _EPOCH_ORACLE = """
     WITH h AS (
         SELECT doc_id,

@@ -3,5 +3,4 @@ from mcp_iceberg_duckdb_spark.sources.tables import (  # noqa: F401
     TABLE_NAMES,
     Tables,
     load,
-    register_views,
 )

@@ -1782,21 +1782,6 @@ def _read_with_deletes(spark, loc, files, ice_schema, snapshot_id=None):
     )
 
 
-def _apply_filters(df, filters):
-    from pyspark.sql import functions as F
-
-    ops = {
-        "=": lambda c, v: F.col(c) == v,
-        "<": lambda c, v: F.col(c) < v,
-        "<=": lambda c, v: F.col(c) <= v,
-        ">": lambda c, v: F.col(c) > v,
-        ">=": lambda c, v: F.col(c) >= v,
-    }
-    for col, op, val in filters:
-        df = df.filter(ops[op](col, val))
-    return df
-
-
 def _residual_filters(filters, ice_schema):
     """Filters re-typed for ROW-LEVEL evaluation inside Spark:
     plan_files takes DATE literals as epoch-day ints (the bound and

@@ -150,8 +150,6 @@ SCHEMAS: dict[str, T.StructType] = {
     ),
 }
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # events schema variant for µs/ms fixtures: ts binds directly as NTZ
 # (no int64 + convert dance). Shared by the batch loader and
 # streaming.events.read_event_stream so the two paths can never
@@ -235,12 +233,3 @@ class Tables:
         if name not in self._cache:
             self._cache[name] = load(self._spark, self._sf_dir, name)
         return self._cache[name]
-
-
-def register_views(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> None:
-    """Register every fixture table as a temp view so the SQL entry
-    point (spark.sql / the router) can resolve bare table names —
-    the Spark analogue of the reference registering the scanned Arrow
-    table into DuckDB (IcebergConnection.py:114)."""
-    for name in names:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -201,25 +201,13 @@ def main() -> None:  # pragma: no cover - exercised via subprocess test
 
     from mcp_iceberg_duckdb_spark.operators._util import views
     from mcp_iceberg_duckdb_spark.session import build_session
+    from mcp_iceberg_duckdb_spark.sources.tables import TABLE_NAMES
 
     spark = build_session(app_name="mcp-stdio")
     spark.sparkContext.setLogLevel("ERROR")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
     if sf_dir:
-        views(
-            spark,
-            sf_dir,
-            "region",
-            "nation",
-            "customer",
-            "supplier",
-            "part",
-            "orders",
-            "lineitem",
-            "events",
-            "documents",
-            "embeddings",
-        )
+        views(spark, sf_dir, *TABLE_NAMES)
     StdioServer(spark).run()
 
 

@@ -56,9 +56,15 @@ def test_aqe_splits_skewed_join_partition(spark, sf_dir_large):
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
             "spark.sql.adaptive.coalescePartitions.enabled",
             "spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.shuffle.partitions",
         )
     }
     try:
+        # pinned, not inherited from the core count: at 4 shuffle
+        # partitions AQE never marked the hot partition skewed (each
+        # cold partition then holds a quarter of the cold keys, which
+        # raises the median the factor-2 rule compares against)
+        conf.set("spark.sql.shuffle.partitions", "32")
         conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
         conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
         conf.set(

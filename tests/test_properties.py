@@ -157,56 +157,34 @@ def test_salt_spreads_fully_duplicated_rows(spark_mod):
     assert len(buckets) >= 6, f"duplicated rows collapsed into {buckets}"
 
 
-def test_driver_order_contract():
-    """The driver samples the FIRST 50 registered queries: previously
-    red first, then the EXPLICITLY PINNED round-6 sample (the 10
-    round-5-late never-checked queries + the 40 oldest-verified stale
-    greens — VERDICT.md round-5 items 1 and 4; pinning means round-6
-    registrations queue at slot 51+ and cannot displace the sample),
-    then never-checked oracle-backed (family round-robin), then
-    never-checked rows-only, then the remaining already-green tail
-    oldest-verified-first."""
+def test_driver_order_contract(tmp_path, monkeypatch):
+    """The driver samples a prefix of driver_order(): queries red in
+    the LATEST round first, then never-checked ones, then the green
+    rest oldest-verified first, ties in registration order."""
+    import json
+
     from mcp_iceberg_duckdb_spark import registry
 
-    registry.load_all()
-    order = registry.driver_order()
-    assert set(order) == set(registry.QUERIES), "ordering must be a permutation"
-    n_red = len([n for n in registry._DRIVER_RED if n in registry.QUERIES])
-    assert order[:n_red] == [
-        n for n in registry._DRIVER_RED if n in registry.QUERIES
+    g = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+    bad = dict(g, hash_match=False)
+    (tmp_path / "CORRECTNESS_r01.json").write_text(
+        json.dumps({"g1a": g, "g1b": g, "old_red": bad, "regressed": g})
+    )
+    (tmp_path / "CORRECTNESS_r02.json").write_text(
+        json.dumps({"g2": g, "red_new": bad, "regressed": bad})
+    )
+    names = ["g2", "never_b", "g1b", "red_new", "never_a", "regressed",
+             "g1a", "old_red"]
+    fake = {n: registry.QuerySpec(n, lambda s, d: None, "SELECT 1") for n in names}
+    monkeypatch.setattr(registry, "QUERIES", fake)
+    monkeypatch.setattr(registry, "_HISTORY_DIR", str(tmp_path))
+    assert registry.driver_order() == [
+        "red_new", "regressed",                  # red in r02
+        "never_b", "never_a", "old_red",         # no green row yet
+        "g1b", "g1a",                            # last green r01
+        "g2",                                    # last green r02
     ]
-    # the pin self-expires once the round-6 correctness file exists
-    # (registry._N_ROUNDS > 5) — from then on the standard ordering
-    # puts round-6-new queries first and this degenerates to the
-    # original contract
-    pin = (
-        [
-            n
-            for n in registry._DRIVER_PIN_R6
-            if n in registry.QUERIES and n not in registry._DRIVER_RED
-        ]
-        if registry._N_ROUNDS <= 5
-        else []
-    )
-    assert order[n_red : n_red + len(pin)] == pin, (
-        "pinned round-6 sample must immediately follow the red head"
-    )
-    # beyond red+pin the original contract holds on the remainder
-    rest = order[n_red + len(pin) :]
-    greens = [n for n in rest if n in registry._DRIVER_GREEN]
-    assert rest[-len(greens):] == greens, "green tail must come last"
-    never = rest[: len(rest) - len(greens)]
-    oracles = {n for n, s in registry.QUERIES.items() if s.oracle is not None}
-    n_oracle_backed = sum(n in oracles for n in never)
-    # oracle-backed never-checked queries all outrank rows-only ones
-    assert all(n in oracles for n in never[:n_oracle_backed]), (
-        "rows-only queries must sort behind every oracle-backed "
-        "never-checked query"
-    )
-    # while active, the pin covers a full driver sample: nothing
-    # registered later can displace an intended member
-    if registry._N_ROUNDS <= 5:
-        assert n_red + len(pin) >= min(50, len(order))
+    assert list(registry.all_oracles()) == registry.driver_order()
 
 
 # --- prefix-filtered exact similarity join vs brute force ----------------
@@ -347,10 +325,9 @@ def test_approx_contracts_pin_true(spark_mod, sf_dir):
 
 
 def test_load_driver_history_parses_rounds(tmp_path):
-    """The self-maintaining green/red sets: every CORRECTNESS_r*.json
-    at the repo root feeds the rotation, greens union across rounds,
-    failures in the LATEST round (only) become the red head, and a
-    query that failed then later passed counts green."""
+    """Every CORRECTNESS_r*.json feeds the history: failures in the
+    LATEST round (only) are red, and each query keeps its latest green
+    round number, so a query that failed then later passed is green."""
     import json
 
     from mcp_iceberg_duckdb_spark import registry
@@ -365,32 +342,23 @@ def test_load_driver_history_parses_rounds(tmp_path):
     (tmp_path / "CORRECTNESS_r02.json").write_text(
         json.dumps({"q_c": g, "q_d": bad_hash, "q_e": rows_only, "q_fixed": g})
     )
-    green, red, last_green, n_rounds = registry._load_driver_history(
-        base_dir=str(tmp_path)
-    )
-    assert n_rounds == 2
-    # unions the static baseline with both rounds' greens
-    assert registry._DRIVER_GREEN_STATIC <= green
-    assert {"q_a", "q_c", "q_e", "q_fixed"} <= green
+    red, last_green = registry._load_driver_history(str(tmp_path))
     # q_b failed in r01 (not latest) — not red; q_d failed in r02 — red
-    assert red == ("q_d",)
-    assert "q_b" not in green and "q_d" not in green
+    assert red == {"q_d"}
+    assert "q_b" not in last_green and "q_d" not in last_green
     # latest-green round numbers drive the staleness rotation
-    assert last_green["q_a"] == 1
-    assert last_green["q_c"] == last_green["q_fixed"] == 2
+    assert last_green == {"q_a": 1, "q_c": 2, "q_e": 2, "q_fixed": 2}
     # a REGRESSION (green earlier, failed in the latest round) must
-    # re-head the sample: red, and excluded from the green tail
+    # re-head the sample
     (tmp_path / "CORRECTNESS_r03.json").write_text(
         json.dumps({"q_a": dict(g, hash_match=False)})
     )
-    green3, red3, _, _ = registry._load_driver_history(base_dir=str(tmp_path))
-    assert "q_a" in red3 and "q_a" not in green3
-    # no files → static baseline, no reds
+    red3, _ = registry._load_driver_history(str(tmp_path))
+    assert red3 == {"q_a"}
+    # no files → empty history
     empty = tmp_path / "empty"
     empty.mkdir()
-    green0, red0, lg0, nr0 = registry._load_driver_history(base_dir=str(empty))
-    assert green0 == registry._DRIVER_GREEN_STATIC and red0 == ()
-    assert lg0 == {} and nr0 == 0
+    assert registry._load_driver_history(str(empty)) == (frozenset(), {})
 
 
 # --- ExactSubstr interval-union formula (x_text_exactsubstr_scrub) -------

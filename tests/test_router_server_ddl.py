@@ -10,12 +10,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from mcp_iceberg_duckdb_spark import ddl, router, server
-from mcp_iceberg_duckdb_spark.sources.tables import register_views
+from mcp_iceberg_duckdb_spark.operators._util import views
+from mcp_iceberg_duckdb_spark.sources.tables import TABLE_NAMES
 
 
 @pytest.fixture(scope="module", autouse=True)
 def _views(spark, sf_dir):
-    register_views(spark, sf_dir)
+    views(spark, sf_dir, *TABLE_NAMES)
 
 
 # ------------------------------------------------------------------ router
