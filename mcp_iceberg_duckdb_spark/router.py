@@ -27,7 +27,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 
 # `IN` is optional before the namespace — the reference's parser
 # accepts both `LIST TABLES ns` and `LIST TABLES IN ns`
@@ -62,8 +62,9 @@ def classify(query: str) -> Routed:
     return Routed("sql", query)
 
 
-def execute(spark: SparkSession, query: str) -> DataFrame:
-    """Route and run one statement, always returning a DataFrame."""
+def execute(spark: SparkSession, query: str) -> DataFrame | list[Row]:
+    """Route and run one statement. Returns its DataFrame, except for
+    the all-namespace LIST TABLES, which returns the collected rows."""
     routed = classify(query)
     if routed.kind == "list_namespaces":
         if routed.argument:
@@ -73,12 +74,17 @@ def execute(spark: SparkSession, query: str) -> DataFrame:
         if routed.argument:
             return spark.sql(f"SHOW TABLES IN {routed.argument}")
         # all-namespaces variant: the reference loops list_namespaces
-        # then list_tables per namespace (IcebergConnection.py:55-63)
-        dfs = None
-        for row in spark.sql("SHOW NAMESPACES").collect():
-            df = spark.sql(f"SHOW TABLES IN {row[0]}")
-            dfs = df if dfs is None else dfs.unionByName(df)
-        return dfs if dfs is not None else spark.sql("SHOW TABLES")
+        # then list_tables per namespace (IcebergConnection.py:55-63).
+        # Each SHOW TABLES runs eagerly and collects with no Spark job;
+        # a union of them would need one.
+        namespaces = spark.sql("SHOW NAMESPACES").collect()
+        if not namespaces:
+            return spark.sql("SHOW TABLES")
+        return [
+            r
+            for ns in namespaces
+            for r in spark.sql(f"SHOW TABLES IN {ns[0]}").collect()
+        ]
     if routed.kind == "describe_table":
         return spark.sql(f"DESCRIBE TABLE EXTENDED {routed.argument}")
     return spark.sql(query)

@@ -47,8 +47,12 @@ class ToolResult:
 def _rows_to_json(df, limit: int = MAX_RESULT_ROWS) -> list[dict[str, Any]]:
     """Row-oriented dict conversion at the client edge only — inside
     the engine everything stays columnar (the reference converted
-    per-row in a Python loop, IcebergConnection.py:119-127)."""
-    return [r.asDict(recursive=True) for r in df.limit(limit).collect()]
+    per-row in a Python loop, IcebergConnection.py:119-127). ``df`` is
+    a DataFrame, collected under the row cap, or a list of Rows the
+    driver already holds (catalog and status answers), sliced to it
+    without running a Spark job."""
+    rows = df[:limit] if isinstance(df, list) else df.limit(limit).collect()
+    return [r.asDict(recursive=True) for r in rows]
 
 
 def _respond(rows: list[dict[str, Any]], elapsed: float) -> ToolResult:

@@ -39,7 +39,7 @@ import os
 import re
 import shutil
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Row, functions as F
 
 from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
 
@@ -1043,21 +1043,21 @@ class FsCatalog:
 
     # ---- the SQL entry point ----
 
-    def execute(self, spark, sql: str) -> DataFrame:
-        """Run one statement against the warehouse; always returns a
-        DataFrame (DML returns a one-row summary, like Spark's
-        own v2 DML commands return metrics)."""
+    def execute(self, spark, sql: str) -> DataFrame | list[Row]:
+        """Run one statement against the warehouse. A SELECT returns
+        its DataFrame; every other statement returns its answer as a
+        list of Rows built on the driver from catalog metadata (DDL,
+        DML and maintenance return a one-row status), so serving it
+        runs no Spark job."""
         if not sql or not sql.strip():
             raise ValueError("empty query")
         if _LIST_NS.match(sql):
-            return spark.createDataFrame(
-                [(n,) for n in self.list_namespaces()], "namespace string"
-            )
+            return [Row(namespace=n) for n in self.list_namespaces()]
         if m := _LIST_TBLS.match(sql):
-            return spark.createDataFrame(
-                self.list_tables(m.group(1)) or [],
-                "namespace string, tableName string",
-            )
+            return [
+                Row(namespace=ns, tableName=t)
+                for ns, t in self.list_tables(m.group(1))
+            ]
         if m := _DESCRIBE.match(sql):
             _, _, loc, _ = self._resolve(m.group(1))
             meta = ice.read_table_meta(loc)
@@ -1073,54 +1073,45 @@ class FsCatalog:
                     out.append(f"sort({sort_pos[name]})")
                 return " ".join(out)
 
-            return spark.createDataFrame(
-                [
-                    (
-                        f["name"],
-                        ice.ice_type_str(f["type"]),
-                        _facets(f["name"]),
-                    )
-                    for f in meta["schema"]["fields"]
-                ],
-                "col_name string, data_type string, comment string",
-            )
+            return [
+                Row(
+                    col_name=f["name"],
+                    data_type=ice.ice_type_str(f["type"]),
+                    comment=_facets(f["name"]),
+                )
+                for f in meta["schema"]["fields"]
+            ]
         if m := _SNAPSHOTS.match(sql):
             _, _, loc, _ = self._resolve(m.group(1))
             meta = ice.read_table_meta(loc)
-            return spark.createDataFrame(
-                [
-                    (
-                        s["snapshot-id"],
-                        s.get("parent-snapshot-id"),
-                        s["timestamp-ms"],
-                        s["summary"]["operation"],
-                    )
-                    for s in meta["snapshots"]
-                ],
-                "snapshot_id bigint, parent_id bigint, "
-                "committed_at_ms bigint, operation string",
-            )
+            return [
+                Row(
+                    snapshot_id=s["snapshot-id"],
+                    parent_id=s.get("parent-snapshot-id"),
+                    committed_at_ms=s["timestamp-ms"],
+                    operation=s["summary"]["operation"],
+                )
+                for s in meta["snapshots"]
+            ]
         if m := _SHOW_PROPS.match(sql):
             _, _, loc, _ = self._resolve(m.group(1))
             props = ice.read_table_meta(loc).get("properties", {})
-            return spark.createDataFrame(
-                sorted(props.items()) or [], "key string, value string"
-            )
+            return [Row(key=k, value=v) for k, v in sorted(props.items())]
         if m := _CREATE_NS.match(sql):
             os.makedirs(os.path.join(self.warehouse, m.group(1)), exist_ok=True)
-            return self._ok(spark, "create_namespace")
+            return self._ok("create_namespace")
         if m := _DROP_NS.match(sql):
             ns = m.group(1)
             if self.list_tables(ns):
                 raise ValueError(f"namespace {ns!r} is not empty")
             shutil.rmtree(os.path.join(self.warehouse, ns))
-            return self._ok(spark, "drop_namespace")
+            return self._ok("drop_namespace")
         if m := _ALTER_PROPS.match(sql):
             _, _, loc, _ = self._resolve(m.group(1))
             key = m.group(2).replace("''", "'")
             val = m.group(3).replace("''", "'")
             ice.set_table_property(loc, key, val)
-            return self._ok(spark, "set_tblproperties", key=key, value=val)
+            return self._ok("set_tblproperties", key=key, value=val)
         if m := _WRITE_ORDERED.match(sql):
             _, _, loc, _ = self._resolve(m.group(1))
             meta = ice.read_table_meta(loc)
@@ -1135,7 +1126,6 @@ class FsCatalog:
             ]
             out = ice.set_sort_order(loc, cols)
             return self._ok(
-                spark,
                 "write_ordered_by",
                 order_id=str(out["order-id"]),
                 columns=",".join(cols),
@@ -1143,7 +1133,7 @@ class FsCatalog:
         if m := _WRITE_UNORDERED.match(sql):
             _, _, loc, _ = self._resolve(m.group(1))
             ice.set_sort_order(loc, [])
-            return self._ok(spark, "write_unordered", order_id="0")
+            return self._ok("write_unordered", order_id="0")
         if m := _WRITE_BRANCH.match(sql):
             _, _, loc, _ = self._resolve(m.group(1))
             name = m.group(2)
@@ -1155,12 +1145,11 @@ class FsCatalog:
                 if r["type"] != "branch":
                     raise ValueError(f"ref {name!r} is a tag")
             ice.set_table_property(loc, "write.branch", name)
-            return self._ok(spark, "write_to_branch", branch=name)
+            return self._ok("write_to_branch", branch=name)
         if m := _FAST_FORWARD.match(sql):
             _, _, loc, _ = self._resolve(m.group(1))
             out = ice.fast_forward(loc, m.group(2), m.group(3))
             return self._ok(
-                spark,
                 "fast_forward",
                 target=m.group(2),
                 snapshot_id=str(out["snapshot-id"]),
@@ -1175,7 +1164,6 @@ class FsCatalog:
                 snapshot_id=int(m.group(4)) if m.group(4) else None,
             )
             return self._ok(
-                spark,
                 f"create_{ref['type']}",
                 name=ref["name"],
                 snapshot_id=str(ref["snapshot-id"]),
@@ -1183,18 +1171,14 @@ class FsCatalog:
         if m := _DROP_REF.match(sql):
             _, _, loc, _ = self._resolve(m.group(1))
             ref = ice.drop_ref(loc, m.group(2))
-            return self._ok(spark, "drop_ref", name=ref["name"])
+            return self._ok("drop_ref", name=ref["name"])
         if m := _SHOW_REFS.match(sql):
             _, _, loc, _ = self._resolve(m.group(1))
             refs = ice.read_table_meta(loc).get("refs") or {}
-            return spark.createDataFrame(
-                [
-                    (n, r["type"], r["snapshot-id"])
-                    for n, r in sorted(refs.items())
-                ]
-                or [],
-                "name string, type string, snapshot_id bigint",
-            )
+            return [
+                Row(name=n, type=r["type"], snapshot_id=r["snapshot-id"])
+                for n, r in sorted(refs.items())
+            ]
         if m := _ALTER_ADD_PART.match(sql):
             # ADD PARTITION FIELD day(d) / bucket(8, k) /
             # truncate(10, s) / bare column (identity)
@@ -1225,7 +1209,6 @@ class FsCatalog:
                     )
             spec = ice.add_partition_field(loc, part)
             return self._ok(
-                spark,
                 "add_partition_field",
                 spec_id=str(spec["spec-id"]),
                 field=spec["fields"][-1]["name"],
@@ -1234,7 +1217,6 @@ class FsCatalog:
             _, _, loc, _ = self._resolve(m.group(1))
             spec = ice.drop_partition_field(loc, m.group(2))
             return self._ok(
-                spark,
                 "drop_partition_field",
                 spec_id=str(spec["spec-id"]),
                 field=m.group(2),
@@ -1256,7 +1238,6 @@ class FsCatalog:
                 )
             out = ice.promote_column_type(loc, col, new_t)
             return self._ok(
-                spark,
                 "alter_column_type",
                 column=col,
                 from_type=ice.ice_type_str(out["from"]),
@@ -1265,20 +1246,18 @@ class FsCatalog:
         if m := _ALTER_RENAME.match(sql):
             _, _, loc, _ = self._resolve(m.group(1))
             ice.rename_column(loc, m.group(2), m.group(3))
-            return self._ok(
-                spark, "rename_column", old=m.group(2), new=m.group(3)
-            )
+            return self._ok("rename_column", old=m.group(2), new=m.group(3))
         if m := _ALTER_DROP.match(sql):
             _, _, loc, _ = self._resolve(m.group(1))
             ice.drop_column(loc, m.group(2))
-            return self._ok(spark, "drop_column", column=m.group(2))
+            return self._ok("drop_column", column=m.group(2))
         if m := _ALTER_ADD.match(sql):
             _, _, loc, _ = self._resolve(m.group(1))
             # element-id for a list type is minted by add_column
             # itself (it knows the table's last-column-id)
             typ = _sql_type_to_ice(m.group(3), next_id=lambda: 0)
             ice.add_column(loc, m.group(2), typ)
-            return self._ok(spark, "add_column", column=m.group(2))
+            return self._ok("add_column", column=m.group(2))
         if m := _OPTIMIZE.match(sql):
             _, _, loc, _ = self._resolve(m.group(1))
             snap = ice.compact_files(
@@ -1293,7 +1272,6 @@ class FsCatalog:
                 ),
             )
             return self._ok(
-                spark,
                 "optimize",
                 rewritten_files=snap["summary"]["deleted-data-files"],
                 new_files=snap["summary"]["added-data-files"],
@@ -1302,7 +1280,6 @@ class FsCatalog:
             _, _, loc, _ = self._resolve(m.group(1))
             snap = ice.rewrite_position_deletes(spark, loc)
             return self._ok(
-                spark,
                 "rewrite_position_deletes",
                 rewritten_delete_files=snap["summary"][
                     "rewritten-delete-files"
@@ -1313,7 +1290,6 @@ class FsCatalog:
             _, _, loc, _ = self._resolve(m.group(1))
             snap = ice.convert_equality_deletes(spark, loc)
             return self._ok(
-                spark,
                 "convert_equality_deletes",
                 converted_equality_delete_files=snap["summary"][
                     "converted-equality-delete-files"
@@ -1325,7 +1301,7 @@ class FsCatalog:
             res = ice.expire_snapshots(
                 loc, keep_last=int(m.group(2) or 1)
             )
-            return self._ok(spark, "expire_snapshots", **res)
+            return self._ok("expire_snapshots", **res)
         if m := _CTAS.match(sql):
             return self._ctas(
                 spark, m.group(2), m.group(3), m.group(4),
@@ -1333,7 +1309,7 @@ class FsCatalog:
             )
         if m := _CREATE_TBL.match(sql):
             return self._create_table(
-                spark, m.group(2), m.group(3), m.group(4),
+                m.group(2), m.group(3), m.group(4),
                 if_not_exists=bool(m.group(1)),
             )
         if m := _TRUNCATE.match(sql):
@@ -1341,7 +1317,6 @@ class FsCatalog:
             _no_write_branch(loc, "TRUNCATE")
             snap = ice.overwrite_table(spark, loc, None)
             return self._ok(
-                spark,
                 "truncate",
                 removed_files=snap["summary"]["deleted-data-files"],
             )
@@ -1356,7 +1331,7 @@ class FsCatalog:
         if m := _DROP_TBL.match(sql):
             _, _, loc, _ = self._resolve(m.group(1))
             shutil.rmtree(loc)
-            return self._ok(spark, "drop_table")
+            return self._ok("drop_table")
         if m := _INSERT.match(sql):
             return self._insert(
                 spark, m.group(1), m.group(3), cols_sql=m.group(2)
@@ -1373,15 +1348,11 @@ class FsCatalog:
         raise ValueError(f"unsupported statement: {sql.strip()[:80]!r}")
 
     @staticmethod
-    def _ok(spark, op: str, **extra) -> DataFrame:
-        cols = {"operation": op, **{k: str(v) for k, v in extra.items()}}
-        return spark.createDataFrame(
-            [tuple(cols.values())],
-            ", ".join(f"{k} string" for k in cols),
-        )
+    def _ok(op: str, **extra) -> list[Row]:
+        return [Row(operation=op, **{k: str(v) for k, v in extra.items()})]
 
-    def _create_table(self, spark, ident, cols_sql, part_sql,
-                      if_not_exists=False):
+    def _create_table(self, ident, cols_sql, part_sql,
+                      if_not_exists=False) -> list[Row]:
         ns, tbl, loc, exists = self._resolve(ident, must_exist=False)
         if exists:
             # the flag comes from the statement HEAD (regex capture),
@@ -1389,7 +1360,7 @@ class FsCatalog:
             # containing "if not exists" must not flip the error into
             # a silent no-op (review r13)
             if if_not_exists:
-                return self._ok(spark, "create_table", skipped=True)
+                return self._ok("create_table", skipped=True)
             raise ValueError(f"table {ns}.{tbl} already exists")
         coldefs = _split_top_level(cols_sql)
         # list element-ids continue the counter after all top columns
@@ -1418,17 +1389,17 @@ class FsCatalog:
             {"type": "struct", "schema-id": 0, "fields": fields},
             part_cols=part_cols,
         )
-        return self._ok(spark, "create_table")
+        return self._ok("create_table")
 
     def _ctas(self, spark, ident, part_sql, select_sql,
-              if_not_exists=False) -> DataFrame:
+              if_not_exists=False) -> list[Row]:
         """CREATE TABLE ... AS SELECT: schema inferred from the
         query, table created (optionally partitioned), result
         appended as the first snapshot."""
         ns, tbl, loc, exists = self._resolve(ident, must_exist=False)
         if exists:
             if if_not_exists:
-                return self._ok(spark, "create_table", skipped=True)
+                return self._ok("create_table", skipped=True)
             raise ValueError(f"table {ns}.{tbl} already exists")
         src = self._run_select(spark, select_sql)
         schema = ice.spark_schema_to_iceberg(src)
@@ -1437,10 +1408,10 @@ class FsCatalog:
         os.makedirs(os.path.join(self.warehouse, ns), exist_ok=True)
         ice.create_table(loc, schema, part_cols=part_cols)
         ice.append(spark, loc, src)
-        return self._ok(spark, "create_table_as_select")
+        return self._ok("create_table_as_select")
 
     def _insert(self, spark, ident, tail, cols_sql=None,
-                overwrite=False) -> DataFrame:
+                overwrite=False) -> list[Row]:
         _, _, loc, _ = self._resolve(ident)
         if re.match(r"^\s*VALUES\b", tail, re.I):
             # Spark SQL parses the tuples — no hand-rolled literal
@@ -1494,20 +1465,18 @@ class FsCatalog:
                 )
             snap = ice.overwrite_table(spark, loc, aligned)
             return self._ok(
-                spark,
                 "insert_overwrite",
                 replaced_files=snap["summary"]["deleted-data-files"],
                 new_files=snap["summary"]["added-data-files"],
             )
         snap = ice.append(spark, loc, aligned, branch=branch)
         return self._ok(
-            spark,
             "insert",
             added_records=snap["summary"].get("added-records", "0"),
             **({"branch": branch} if branch else {}),
         )
 
-    def _update(self, spark, ident, set_sql, where) -> DataFrame:
+    def _update(self, spark, ident, set_sql, where) -> list[Row]:
         _, _, loc, _ = self._resolve(ident)
         _no_write_branch(loc, "UPDATE")
         meta = ice.read_table_meta(loc)
@@ -1548,7 +1517,6 @@ class FsCatalog:
                 spark, loc, pred, assignments, prune_filters=prune
             )
             return self._ok(
-                spark,
                 "update",
                 rewritten_files="0",
                 added_delete_files=snap["summary"]["added-delete-files"],
@@ -1568,12 +1536,11 @@ class FsCatalog:
             spark, loc, pred, rewrite, prune_filters=prune
         )
         return self._ok(
-            spark,
             "update",
             rewritten_files=snap["summary"]["deleted-data-files"],
         )
 
-    def _delete(self, spark, ident, where) -> DataFrame:
+    def _delete(self, spark, ident, where) -> list[Row]:
         _, _, loc, _ = self._resolve(ident)
         _no_write_branch(loc, "DELETE")
         meta = ice.read_table_meta(loc)
@@ -1595,7 +1562,6 @@ class FsCatalog:
                 spark, loc, pred, prune_filters=prune
             )
             return self._ok(
-                spark,
                 "delete",
                 rewritten_files="0",
                 added_delete_files=snap["summary"]["added-delete-files"],
@@ -1609,12 +1575,11 @@ class FsCatalog:
             prune_filters=prune,
         )
         return self._ok(
-            spark,
             "delete",
             rewritten_files=snap["summary"]["deleted-data-files"],
         )
 
-    def _merge(self, spark, m) -> DataFrame:
+    def _merge(self, spark, m) -> list[Row]:
         (tgt_ident, tgt_alias, sub_sql, src_ident, src_alias, on_sql,
          action_sql) = (
             m.group(1), m.group(2), m.group(3), m.group(4), m.group(5),
@@ -1675,7 +1640,6 @@ class FsCatalog:
             fn = ice.mor_merge_delete if mor else ice.merge_delete
             snap = fn(spark, loc, keys, on_cols=on_cols)
             return self._ok(
-                spark,
                 "merge_delete",
                 rewritten_files=snap["summary"].get(
                     "deleted-data-files", "0"
@@ -1792,7 +1756,6 @@ class FsCatalog:
             not_matched_by_source=nmbs,
         )
         return self._ok(
-            spark,
             "merge",
             rewritten_files=snap["summary"]["deleted-data-files"],
             added_files=snap["summary"]["added-data-files"],

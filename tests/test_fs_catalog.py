@@ -39,12 +39,12 @@ def loaded(cat, spark):
 
 def test_catalog_verbs(loaded, spark):
     cat, run = loaded
-    assert [r[0] for r in run("LIST NAMESPACES").collect()] == ["sales"]
-    assert [tuple(r) for r in run("LIST TABLES IN sales").collect()] == [
+    assert [r[0] for r in run("LIST NAMESPACES")] == ["sales"]
+    assert [tuple(r) for r in run("LIST TABLES IN sales")] == [
         ("sales", "orders")
     ]
     desc = {r["col_name"]: (r["data_type"], r["comment"])
-            for r in run("DESCRIBE TABLE sales.orders").collect()}
+            for r in run("DESCRIBE TABLE sales.orders")}
     assert desc == {
         "k": ("long", ""),
         "region": ("string", "partition"),
@@ -105,7 +105,7 @@ def test_update_where_is_pruned_cow(loaded, spark):
     res = run(
         "UPDATE sales.orders SET amount = amount + 100, k = k"
         " WHERE region = 'us' AND k <= 2"
-    ).collect()[0]
+    )[0]
     # partition-value pruning bounded the rewrite to the us file
     assert res["rewritten_files"] == "1"
     post = set(ice.plan_files(loc)[0])
@@ -167,7 +167,7 @@ def test_show_snapshots_history(loaded):
     cat, run = loaded
     run("DELETE FROM sales.orders WHERE k = 1")
     ops = [r["operation"]
-           for r in run("SHOW SNAPSHOTS IN sales.orders").collect()]
+           for r in run("SHOW SNAPSHOTS IN sales.orders")]
     assert ops == ["append", "overwrite"]
 
 
@@ -184,7 +184,7 @@ def test_create_drop_contracts(loaded):
         run("DROP NAMESPACE sales")
     run("DROP TABLE sales.orders")
     run("DROP NAMESPACE sales")
-    assert run("LIST NAMESPACES").count() == 0
+    assert len(run("LIST NAMESPACES")) == 0
     with pytest.raises(ValueError, match="does not exist"):
         run("DELETE FROM sales.orders")
 
@@ -194,7 +194,7 @@ def test_default_namespace_bare_names(cat, spark):
     run("CREATE TABLE t (k bigint)")
     run("INSERT INTO t VALUES (7)")
     assert run("SELECT k FROM t x").collect()[0][0] == 7
-    assert run("LIST TABLES").collect()[0]["namespace"] == "default"
+    assert run("LIST TABLES")[0]["namespace"] == "default"
 
 
 def test_unsupported_statement_raises(cat, spark):
@@ -339,14 +339,14 @@ def test_maintenance_statements(loaded, spark):
     cat, run = loaded
     run("ALTER TABLE sales.orders ADD COLUMN tag bigint")
     assert "tag" in [r["col_name"]
-                     for r in run("DESCRIBE TABLE sales.orders").collect()]
+                     for r in run("DESCRIBE TABLE sales.orders")]
     assert run(
         "SELECT count(*) AS n FROM sales.orders o WHERE tag IS NULL"
     ).collect()[0]["n"] == 3
     run("INSERT INTO sales.orders VALUES (10, 'eu', 1.0, 7)")
-    res = run("OPTIMIZE sales.orders SORT BY k SLICES 2").collect()[0]
+    res = run("OPTIMIZE sales.orders SORT BY k SLICES 2")[0]
     assert res["operation"] == "optimize" and int(res["new_files"]) >= 2
-    res = run("EXPIRE SNAPSHOTS IN sales.orders KEEP 1").collect()[0]
+    res = run("EXPIRE SNAPSHOTS IN sales.orders KEEP 1")[0]
     assert int(res["removed_snapshots"]) >= 2
     got = sorted(r["k"] for r in run("SELECT k FROM sales.orders o").collect())
     assert got == [1, 2, 3, 10]
@@ -356,7 +356,7 @@ def test_maintenance_statements(loaded, spark):
 
 def test_version_as_of_time_travel(loaded, spark):
     cat, run = loaded
-    snap1 = run("SHOW SNAPSHOTS IN sales.orders").collect()[0]["snapshot_id"]
+    snap1 = run("SHOW SNAPSHOTS IN sales.orders")[0]["snapshot_id"]
     run("DELETE FROM sales.orders WHERE k = 1")
     assert run("SELECT count(*) AS n FROM sales.orders o").collect()[0]["n"] == 2
     old = run(
@@ -382,7 +382,7 @@ def test_create_table_transform_partitions(cat, spark):
     run("INSERT INTO default.ev SELECT id, concat('u', id)"
         " FROM (SELECT explode(sequence(0, 99)) AS id)")
     desc = {r["col_name"]: r["comment"]
-            for r in run("DESCRIBE TABLE default.ev").collect()}
+            for r in run("DESCRIBE TABLE default.ev")}
     assert desc == {"k": "", "name": ""}  # hidden: not a schema column
     assert run("SELECT count(*) AS n FROM default.ev e").collect()[0]["n"] == 100
     loc = cat._resolve("default.ev")[2]
@@ -423,7 +423,7 @@ def test_dml_date_literal_prunes_not_crashes(cat, spark):
     run("INSERT INTO default.logs SELECT id,"
         " date_add(to_date('2023-01-15'), CAST(id * 40 AS INT))"
         " FROM (SELECT explode(sequence(0, 9)) AS id)")
-    res = run("DELETE FROM default.logs WHERE d = '2023-01-15'").collect()[0]
+    res = run("DELETE FROM default.logs WHERE d = '2023-01-15'")[0]
     # pruning bounded the rewrite to the one month partition
     assert int(res["rewritten_files"]) == 1
     assert run("SELECT count(*) AS n FROM default.logs l").collect()[0]["n"] == 9
@@ -588,7 +588,7 @@ def test_sql_merge_on_read_delete_property(loaded, spark):
     snap_pre = ice.read_table_meta(loc)["current-snapshot-id"]
     res = run(
         "DELETE FROM sales.orders WHERE region = 'eu' AND amount >= 20.0"
-    ).collect()[0]
+    )[0]
     assert res["rewritten_files"] == "0" and res["deleted_rows"] == "1"
     assert set(ice.plan_files(loc)[0]) == pre_files  # no rewrite
     got = sorted(r["k"] for r in run("SELECT k FROM sales.orders o").collect())
@@ -617,7 +617,7 @@ def test_sql_merge_on_read_update_property(loaded, spark):
     res = run(
         "UPDATE sales.orders SET region = 'ap', amount = amount + 1.0"
         " WHERE k = 1"
-    ).collect()[0]
+    )[0]
     assert res["rewritten_files"] == "0" and res["updated_rows"] == "1"
     assert pre_files <= set(ice.plan_files(loc)[0])  # nothing rewritten
     got = {r["k"]: (r["region"], r["amount"])
@@ -634,7 +634,7 @@ def test_sql_merge_on_read_merge_and_show_tblproperties(loaded, spark):
     run("ALTER TABLE sales.orders SET TBLPROPERTIES"
         "('write.merge.mode'='merge-on-read')")
     props = {r["key"]: r["value"]
-             for r in run("SHOW TBLPROPERTIES sales.orders").collect()}
+             for r in run("SHOW TBLPROPERTIES sales.orders")}
     assert props["write.merge.mode"] == "merge-on-read"
     assert props["write.format.default"] == "parquet"
     pre_files = set(ice.plan_files(loc)[0])
@@ -645,7 +645,7 @@ def test_sql_merge_on_read_merge_and_show_tblproperties(loaded, spark):
         " ON t.k = s.k"
         " WHEN MATCHED THEN UPDATE SET *"
         " WHEN NOT MATCHED THEN INSERT *"
-    ).collect()[0]
+    )[0]
     assert res["rewritten_files"] == "0"
     assert pre_files <= set(ice.plan_files(loc)[0])
     got = {r["k"]: r["amount"]
@@ -938,7 +938,7 @@ def test_sql_rewrite_deletes(loaded, spark):
     run("DELETE FROM sales.orders WHERE k = 2")
     _, _, loc, _ = cat._resolve("sales.orders")
     assert len(ice.plan_delete_files(loc)) >= 2
-    row = run("REWRITE DELETES IN sales.orders").collect()[0]
+    row = run("REWRITE DELETES IN sales.orders")[0]
     assert row["operation"] == "rewrite_position_deletes"
     assert int(row["rewritten_delete_files"]) >= 2
     assert len(ice.plan_delete_files(loc)) == 1
@@ -1081,7 +1081,7 @@ def test_alter_partition_field_sql(cat, spark):
     run = lambda s: cat.execute(spark, s)  # noqa: E731
     run("CREATE TABLE default.ev (k bigint, r string)")
     run("INSERT INTO default.ev VALUES (1, 'eu'), (2, 'us')")
-    res = run("ALTER TABLE default.ev ADD PARTITION FIELD r").collect()[0]
+    res = run("ALTER TABLE default.ev ADD PARTITION FIELD r")[0]
     assert res["operation"] == "add_partition_field"
     assert res["field"] == "r" and res["spec_id"] == "1"
     run("INSERT INTO default.ev VALUES (3, 'eu'), (4, 'us')")
@@ -1091,7 +1091,7 @@ def test_alter_partition_field_sql(cat, spark):
     # the post-evolution us-file pruned; both pre-evolution files and
     # the eu file planned
     assert plan["files_planned"] < plan["files_total"]
-    res = run("ALTER TABLE default.ev DROP PARTITION FIELD r").collect()[0]
+    res = run("ALTER TABLE default.ev DROP PARTITION FIELD r")[0]
     assert res["operation"] == "drop_partition_field"
     run("INSERT INTO default.ev VALUES (5, 'eu')")
     rows = run("SELECT k FROM default.ev WHERE r = 'eu'").collect()
@@ -1108,11 +1108,11 @@ def test_alter_partition_field_transforms_sql(cat, spark):
     )
     res = run(
         "ALTER TABLE default.evt ADD PARTITION FIELD day(d)"
-    ).collect()[0]
+    )[0]
     assert res["field"] == "d_day"
     res = run(
         "ALTER TABLE default.evt ADD PARTITION FIELD bucket(8, k)"
-    ).collect()[0]
+    )[0]
     assert res["field"] == "k_bucket" and res["spec_id"] == "2"
     run(
         "INSERT INTO default.evt VALUES (3, DATE '2023-01-03'),"
@@ -1139,7 +1139,7 @@ def test_sql_convert_deletes(loaded, spark):
     )
     assert len(ice.plan_equality_deletes(loc)) == 1
     pre_files = sorted(ice.plan_files(loc)[0])
-    row = run("CONVERT DELETES IN sales.orders").collect()[0]
+    row = run("CONVERT DELETES IN sales.orders")[0]
     assert row["operation"] == "convert_equality_deletes"
     assert row["converted_equality_delete_files"] == "1"
     assert ice.plan_equality_deletes(loc) == []
@@ -1147,14 +1147,14 @@ def test_sql_convert_deletes(loaded, spark):
     got = sorted(r["k"] for r in run("SELECT k FROM sales.orders o").collect())
     assert got == [2, 3]
     # idempotent no-op when nothing to convert
-    row = run("CONVERT DELETES IN sales.orders").collect()[0]
+    row = run("CONVERT DELETES IN sales.orders")[0]
     assert row["converted_equality_delete_files"] == "0"
 
 def test_sql_snapshot_refs(loaded, spark):
     """CREATE TAG / VERSION AS OF 'tag' / SHOW REFS / DROP TAG
     through the SQL surface — the audit/WAP workflow."""
     cat, run = loaded
-    res = run("ALTER TABLE sales.orders CREATE TAG audited").collect()[0]
+    res = run("ALTER TABLE sales.orders CREATE TAG audited")[0]
     assert res["operation"] == "create_tag" and res["name"] == "audited"
     run("INSERT INTO sales.orders VALUES (9, 'ap', 90.0)")
     old = run(
@@ -1165,13 +1165,13 @@ def test_sql_snapshot_refs(loaded, spark):
     # a ref name containing the word AND must not break literal-aware
     # parsing anywhere
     refs = {(r["name"], r["type"])
-            for r in run("SHOW REFS IN sales.orders").collect()}
+            for r in run("SHOW REFS IN sales.orders")}
     assert refs == {("audited", "tag")}
     run("ALTER TABLE sales.orders CREATE BRANCH wip")
-    assert run("SHOW REFS IN sales.orders").count() == 2
+    assert len(run("SHOW REFS IN sales.orders")) == 2
     run("ALTER TABLE sales.orders DROP TAG audited")
     run("ALTER TABLE sales.orders DROP BRANCH wip")
-    assert run("SHOW REFS IN sales.orders").count() == 0
+    assert len(run("SHOW REFS IN sales.orders")) == 0
 
 def test_identifier_case_and_quoting(cat, spark):
     """Hostile-probe r13: unquoted SQL identifiers are
@@ -1192,7 +1192,7 @@ def test_identifier_case_and_quoting(cat, spark):
     ):
         assert [tuple(r) for r in run(q).collect()] == [(1,)], q
     assert [r["col_name"] for r in
-            run("DESCRIBE TABLE default.t1").collect()] == ["k", "V"]
+            run("DESCRIBE TABLE default.t1")] == ["k", "V"]
     run("INSERT INTO DEFAULT.t1 VALUES (2, 'b')")
     assert run("SELECT count(*) AS n FROM t1").collect()[0]["n"] == 2
     # quoted column name stores WITHOUT backticks
@@ -1300,17 +1300,17 @@ def test_ctas_truncate_insert_overwrite(cat, spark):
     res = run(
         "CREATE TABLE default.ctas PARTITIONED BY (r) AS"
         " SELECT k, r FROM default.src WHERE r = 'eu'"
-    ).collect()[0]
+    )[0]
     assert res["operation"] == "create_table_as_select"
     assert [tuple(r) for r in
             run("SELECT k, r FROM default.ctas c").collect()] == [(1, "eu")]
     desc = {r["col_name"]: r["comment"]
-            for r in run("DESCRIBE TABLE default.ctas").collect()}
+            for r in run("DESCRIBE TABLE default.ctas")}
     assert desc["r"] == "partition"
     with pytest.raises(ValueError, match="already exists"):
         run("CREATE TABLE default.ctas AS SELECT 1 AS x")
     # INSERT OVERWRITE replaces contents in one snapshot
-    snaps = run("SHOW SNAPSHOTS IN default.src").collect()
+    snaps = run("SHOW SNAPSHOTS IN default.src")
     pre = snaps[-1]["snapshot_id"]
     run("INSERT OVERWRITE default.src VALUES (9, 'ap')")
     assert [tuple(r) for r in
@@ -1324,7 +1324,7 @@ def test_ctas_truncate_insert_overwrite(cat, spark):
     assert [tuple(r) for r in
             run("SELECT * FROM default.src s").collect()] == [(7, None)]
     # TRUNCATE empties; history intact
-    res = run("TRUNCATE TABLE default.src").collect()[0]
+    res = run("TRUNCATE TABLE default.src")[0]
     assert res["operation"] == "truncate"
     assert run("SELECT count(*) AS n FROM default.src s").collect()[0]["n"] == 0
 
@@ -1397,7 +1397,7 @@ def test_ctas_if_not_exists_from_head_not_literals(cat, spark):
         )
     res = run(
         "CREATE TABLE IF NOT EXISTS default.c AS SELECT 1 AS x"
-    ).collect()[0]
+    )[0]
     assert res["skipped"] == "True"
 
 
@@ -1434,7 +1434,7 @@ def test_merge_matched_delete_and_column_set(loaded, spark):
     res = run(
         "MERGE INTO sales.orders t USING sales.tomb s ON t.k = s.k"
         " WHEN MATCHED THEN DELETE"
-    ).collect()[0]
+    )[0]
     assert res["operation"] == "merge_delete"
     got = sorted(r["k"] for r in run("SELECT k FROM sales.orders o").collect())
     assert got == [2, 3]
@@ -1460,14 +1460,14 @@ def test_merge_matched_delete_and_column_set(loaded, spark):
     res = run(
         "MERGE INTO sales.orders t USING sales.tomb s ON t.k = s.k"
         " WHEN MATCHED THEN DELETE"
-    ).collect()[0]
+    )[0]
     # tomb still holds (1, 99): nothing matches now (k=1 already
     # deleted) — exercise a real match
     run("INSERT INTO sales.tomb VALUES (3)")
     res = run(
         "MERGE INTO sales.orders t USING sales.tomb s ON t.k = s.k"
         " WHEN MATCHED THEN DELETE"
-    ).collect()[0]
+    )[0]
     assert res["operation"] == "merge_delete"
     assert int(res["added_delete_files"]) >= 1
     assert sorted(ice.plan_files(loc)[0]) == pre  # no data rewrite
@@ -1552,7 +1552,7 @@ def test_merge_set_case_insensitive(loaded, spark):
         "MERGE INTO sales.orders TGT USING sales.src SRC ON tgt.k = src.k"
         " WHEN MATCHED THEN UPDATE SET TGT.AMOUNT = SRC.amount"
         " WHEN NOT MATCHED THEN INSERT *"
-    ).collect()[0]
+    )[0]
     assert res["operation"] in ("merge", "merge_into")
     got = {
         r["k"]: r["amount"]
@@ -1592,7 +1592,7 @@ def test_wap_branch_write_publish(loaded, spark):
             run(stmt)
     res = run(
         "ALTER TABLE sales.orders FAST FORWARD main audit"
-    ).collect()[0]
+    )[0]
     assert res["operation"] == "fast_forward"
     assert int(res["advanced"]) == 2
     main = sorted(
@@ -1652,7 +1652,7 @@ def test_merge_not_matched_by_source(cat, spark, mode):
     assert got == [(2, "B", 20.0), (4, "D", 40.0)]
     # the vanished rows remain time-travelable
     snaps = [
-        r["snapshot_id"] for r in run("SHOW SNAPSHOTS IN t").collect()
+        r["snapshot_id"] for r in run("SHOW SNAPSHOTS IN t")
     ]
     pre = sorted(
         r["k"]
@@ -1663,7 +1663,7 @@ def test_merge_not_matched_by_source(cat, spark, mode):
     assert pre == [1, 2, 3]
     if mode == "mor":
         # MoR mirrors via position deletes: no data file rewritten
-        res = run("SHOW SNAPSHOTS IN t").collect()[-1]
+        res = run("SHOW SNAPSHOTS IN t")[-1]
         assert res["operation"] == "overwrite"
 
     # the UPDATE SET form: vanished rows soft-flagged, not dropped
@@ -1770,11 +1770,11 @@ def test_write_ordered_by_and_default_compaction(cat, spark):
         )
         run(f"INSERT INTO ord VALUES {vals}")
     loc = cat.warehouse + "/default/ord"
-    res = run("ALTER TABLE ord WRITE ORDERED BY (k)").collect()[0]
+    res = run("ALTER TABLE ord WRITE ORDERED BY (k)")[0]
     assert res["operation"] == "write_ordered_by"
     desc = {
         r["col_name"]: r["comment"]
-        for r in run("DESCRIBE TABLE ord").collect()
+        for r in run("DESCRIBE TABLE ord")
     }
     assert desc["k"] == "sort(1)"
     meta = ice.read_table_meta(loc)
@@ -1795,6 +1795,6 @@ def test_write_ordered_by_and_default_compaction(cat, spark):
     assert ice.read_table_meta(loc)["default-sort-order-id"] == 0
     desc = {
         r["col_name"]: r["comment"]
-        for r in run("DESCRIBE TABLE ord").collect()
+        for r in run("DESCRIBE TABLE ord")
     }
     assert desc["k"] == ""

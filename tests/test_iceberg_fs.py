@@ -661,7 +661,7 @@ def test_optimize_target_size_sql(spark, tmp_path):
     total = sum(_os.path.getsize(p) for p in ice.plan_files(loc)[0])
     res = run(
         f"OPTIMIZE default.flat TARGET SIZE {max(1, total // 2)}"
-    ).collect()[0]
+    )[0]
     assert int(res["new_files"]) >= 2
     assert run("SELECT count(*) AS n FROM default.flat f").collect()[0]["n"] == 10_000
 
@@ -1425,7 +1425,7 @@ def test_sql_rename_and_drop_column(spark, tmp_path):
            for r in run("SELECT k, amount FROM default.t").collect()}
     assert got == {1: 1.5, 2: 2.5}
     run("ALTER TABLE default.t DROP COLUMN b")
-    desc = [r["col_name"] for r in run("DESCRIBE TABLE default.t").collect()]
+    desc = [r["col_name"] for r in run("DESCRIBE TABLE default.t")]
     assert desc == ["k", "amount"]
 
 
@@ -2467,7 +2467,7 @@ def test_rich_types_dml_and_sql_surface(spark, tmp_path):
     )
     desc = {
         r["col_name"]: r["data_type"]
-        for r in run("DESCRIBE TABLE rich").collect()
+        for r in run("DESCRIBE TABLE rich")
     }
     assert desc["price"] == "decimal(10,2)"
     assert desc["ts"] == "timestamptz"
@@ -2489,7 +2489,7 @@ def test_rich_types_dml_and_sql_surface(spark, tmp_path):
     run("ALTER TABLE rich ADD COLUMN emb2 array<float>")
     desc = {
         r["col_name"]: r["data_type"]
-        for r in run("DESCRIBE TABLE rich").collect()
+        for r in run("DESCRIBE TABLE rich")
     }
     assert desc["tax"] == "decimal(6,3)"
     assert desc["emb2"] == "list<float>"

@@ -179,3 +179,55 @@ def test_stdio_frames_are_single_lines_and_notifications_silent(spark):
     for f in frames:
         json.loads(f)  # every stdout line is one valid JSON object
     assert json.loads(frames[1])["error"]["code"] == -32700
+
+
+def test_stdio_frames_with_warehouse_set(spark, tmp_path, monkeypatch):
+    """With SPARK_GRAFT_FS_WAREHOUSE set every statement goes through
+    the Iceberg warehouse: CREATE → INSERT → DESCRIBE → LIST TABLES,
+    one response frame each, bodies as the tools return them."""
+    from mcp_iceberg_duckdb_spark.stdio import StdioServer
+
+    monkeypatch.setenv("SPARK_GRAFT_FS_WAREHOUSE", str(tmp_path / "wh"))
+    out = io.StringIO()
+    srv = StdioServer(spark, out=out)
+    calls = [
+        (
+            "query_table",
+            "CREATE TABLE lake.t (k bigint, v string)",
+            [{"operation": "create_table"}],
+        ),
+        (
+            "query_table",
+            "INSERT INTO lake.t VALUES (1, 'a'), (2, 'b')",
+            [{"operation": "insert", "added_records": "2"}],
+        ),
+        (
+            "query_catalog",
+            "DESCRIBE TABLE lake.t",
+            [
+                {"col_name": "k", "data_type": "long", "comment": ""},
+                {"col_name": "v", "data_type": "string", "comment": ""},
+            ],
+        ),
+        (
+            "query_catalog",
+            "LIST TABLES",
+            [{"namespace": "lake", "tableName": "t"}],
+        ),
+    ]
+    for i, (tool, query, _) in enumerate(calls, start=1):
+        srv.handle_line(json.dumps({
+            "jsonrpc": "2.0", "id": i, "method": "tools/call",
+            "params": {"name": tool, "arguments": {"query": query}},
+        }))
+    frames = out.getvalue().splitlines()
+    assert len(frames) == len(calls)
+    for i, (frame, (_, query, want)) in enumerate(zip(frames, calls), 1):
+        resp = json.loads(frame)
+        assert resp["jsonrpc"] == "2.0" and resp["id"] == i
+        assert resp["result"]["isError"] is False, query
+        [content] = resp["result"]["content"]
+        assert content["type"] == "text"
+        head, body = content["text"].split("\n", 1)
+        assert head.startswith("Query execution time: ")
+        assert body == json.dumps(want), query
