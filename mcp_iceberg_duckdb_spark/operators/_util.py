@@ -60,21 +60,21 @@ def _size_bytes(v: str) -> int:
 
 
 def _scan_splits(df: DataFrame) -> int | None:
-    """ESTIMATED usable scan tasks of ``df``'s file source — the
+    """ESTIMATED usable scan tasks of ``df``'s file source — Spark's
     planned file-partition count capped by parquet row-group counts.
 
-    Round 15 (ADVICE r14 medium): the previous gate equated raw
-    row-group/file COUNT with achievable parallelism, but Spark sizes
-    file partitions by BYTES — maxSplitBytes = min(maxPartitionBytes,
-    max(openCostInBytes, totalBytes/defaultParallelism)), files packed
-    into splits of that size — so a mid-size many-row-group file (or
-    many tiny files under a large openCost) still scans in 1-2 tasks.
-    The estimate mirrors Spark's FilePartition math: splits =
-    ceil(totalBytesWithOpenCost / maxSplitBytes), capped per file by
-    its row-group count (a split finer than a row group yields empty
-    tasks). None = no file source / non-file scheme / unknowable
-    cheaply — callers treat that as "not splittable" (the safe side:
-    one extra exchange, never a serial stage)."""
+    Spark sizes file partitions by BYTES (FilePartition):
+    maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
+    (bytes + openCost per file) / minPartitionNum)); each file is cut
+    into pieces of at most maxSplitBytes, and the pieces, largest
+    first, are packed into partitions charging the open cost per
+    piece. So a mid-size many-row-group file, or many tiny files
+    under a large open cost, still scans in 1-2 tasks. Each file
+    yields no more usable tasks than it has row groups (a piece finer
+    than a row group reads nothing). None = no file source /
+    non-file scheme / unknowable cheaply — callers treat that as "not
+    splittable" (the safe side: one extra exchange, never a serial
+    stage)."""
     try:
         files = df.inputFiles()
     except Exception:
@@ -95,13 +95,18 @@ def _scan_splits(df: DataFrame) -> int | None:
         else:
             paths.append(f)
     sess = df.sparkSession
-    sc = sess.sparkContext
+    conf = sess.conf.get
     try:
         max_pb = _size_bytes(
-            sess.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
+            conf("spark.sql.files.maxPartitionBytes", "134217728b")
         )
         open_cost = _size_bytes(
-            sess.conf.get("spark.sql.files.openCostInBytes", "4194304b")
+            conf("spark.sql.files.openCostInBytes", "4194304b")
+        )
+        min_parts = int(
+            conf("spark.sql.files.minPartitionNum", None)
+            or conf("spark.sql.leafNodeDefaultParallelism", None)
+            or sess.sparkContext.defaultParallelism
         )
         sizes = []
         keys = []
@@ -112,11 +117,19 @@ def _scan_splits(df: DataFrame) -> int | None:
     except Exception:
         return None
     total = sum(sizes) + open_cost * len(paths)
-    max_split = min(
-        max_pb, max(open_cost, total // max(sc.defaultParallelism, 1))
-    ) or 1
-    # packed partition estimate (many small files share one task)
-    packed = -(-total // max_split)
+    max_split = min(max_pb, max(open_cost, total // max(min_parts, 1))) or 1
+    pieces = sorted(
+        (min(max_split, size - off)
+         for size in sizes for off in range(0, size, max_split)),
+        reverse=True,
+    )
+    packed, fill, open_part = 0, 0, False
+    for length in pieces:
+        if open_part and fill + length > max_split:
+            packed, fill, open_part = packed + 1, 0, False
+        fill += length + open_cost
+        open_part = True
+    packed += open_part
     if len(paths) > _RG_PROBE_CAP:
         # too many footers to probe: bytes-only estimate (production
         # many-file layouts have row groups proportionate to size)
@@ -133,7 +146,7 @@ def _scan_splits(df: DataFrame) -> int | None:
             rg = _RG_CACHE[key]
         except Exception:
             return None
-        per_file += min(rg, -(-(size + open_cost) // max_split))
+        per_file += min(rg, -(-size // max_split))
     return min(packed, per_file) if per_file else packed
 
 

@@ -2674,3 +2674,139 @@ def test_rename_transform_source_column(spark, tmp_path):
     run("CREATE TABLE idp (k bigint, p string) PARTITIONED BY (p)")
     with pytest.raises(ValueError, match="identity"):
         run("ALTER TABLE idp RENAME COLUMN p TO q")
+
+
+def test_expire_snapshots_racing_append_keeps_table_readable(
+    spark, tmp_path, monkeypatch
+):
+    """An append that commits between expire_snapshots' metadata read
+    and its commit makes the expiry raise CommitFailedError — and
+    deletes nothing: the table still reads, with the append's rows.
+    (Reachability computed from the stale metadata must never decide
+    which files are deleted.)"""
+    loc = str(tmp_path / "expire_race")
+    schema = "k bigint, v double"
+    df = spark.createDataFrame([(i, float(i)) for i in range(10)], schema)
+    ice.create_table(loc, ice.spark_schema_to_iceberg(df))
+    ice.append(spark, loc, df)
+    ice.append(spark, loc, spark.createDataFrame([(10, 10.0)], schema))
+    orig = ice.read_table_meta
+    raced = []
+
+    def racing_read(loc_):
+        meta = orig(loc_)
+        if not raced:
+            raced.append(True)
+            ice.append(
+                spark, loc_, spark.createDataFrame([(99, 99.0)], schema)
+            )
+        return meta
+
+    monkeypatch.setattr(ice, "read_table_meta", racing_read)
+    with pytest.raises(ice.CommitFailedError):
+        ice.expire_snapshots(loc, keep_last=1)
+    monkeypatch.undo()
+    assert raced
+    got = sorted(r["k"] for r in ice.read_iceberg(spark, loc).collect())
+    assert got == list(range(11)) + [99]
+    # the retry from fresh metadata expires cleanly
+    res = ice.expire_snapshots(loc, keep_last=1)
+    assert res["removed_snapshots"] == 2
+    got = sorted(r["k"] for r in ice.read_iceberg(spark, loc).collect())
+    assert got == list(range(11)) + [99]
+
+
+def _race_statements(spark):
+    schema = "k bigint, v double"
+    rows = spark.createDataFrame([(100, 1.0), (101, 2.0)], schema)
+    upsert = spark.createDataFrame([(3, -3.0), (200, 2.0)], schema)
+    keys = spark.createDataFrame([(3,), (4,)], "k bigint")
+    return {
+        "append": lambda loc: ice.append(spark, loc, rows),
+        "branch_append": lambda loc: ice.append(
+            spark, loc, rows, branch="audit"
+        ),
+        "cow_delete": lambda loc: ice.delete_where(
+            spark, loc, [("k", "<", 5)]
+        ),
+        "cow_update": lambda loc: ice.update_where(
+            spark, loc, [("k", "<", 5)], {"v": -1.0}
+        ),
+        "cow_rewrite_where": lambda loc: ice.cow_rewrite_where(
+            spark, loc, F.col("k") < 5,
+            lambda src, pred: src.filter(~pred),
+            prune_filters=[("k", "<", 5)],
+        ),
+        "merge_into": lambda loc: ice.merge_into(spark, loc, upsert, ["k"]),
+        "merge_delete": lambda loc: ice.merge_delete(
+            spark, loc, keys, ["k"]
+        ),
+        "mor_delete": lambda loc: ice.delete_where(
+            spark, loc, [("k", "<", 5)], mode="mor"
+        ),
+        "mor_update": lambda loc: ice.mor_update_where(
+            spark, loc, F.col("k") < 5, {"v": -1.0}
+        ),
+        "mor_merge": lambda loc: ice.mor_merge_into(
+            spark, loc, upsert, ["k"]
+        ),
+        "mor_delete_keys": lambda loc: ice.mor_delete_keys(
+            spark, loc, ["k"], keys
+        ),
+        "compaction": lambda loc: ice.compact_files(spark, loc),
+        "overwrite": lambda loc: ice.overwrite_table(spark, loc, rows),
+        "add_column": lambda loc: ice.add_column(loc, "extra", "long"),
+        "set_property": lambda loc: ice.set_table_property(loc, "a", "b"),
+        "create_ref": lambda loc: ice.create_ref(loc, "tagged"),
+        "fast_forward": lambda loc: ice.fast_forward(loc, "main", "audit"),
+        "expire": lambda loc: ice.expire_snapshots(loc, keep_last=1),
+    }
+
+
+@pytest.mark.parametrize(
+    "kind",
+    [
+        "append", "branch_append", "cow_delete", "cow_update",
+        "cow_rewrite_where", "merge_into", "merge_delete", "mor_delete",
+        "mor_update", "mor_merge", "mor_delete_keys", "compaction",
+        "overwrite", "add_column", "set_property", "create_ref",
+        "fast_forward", "expire",
+    ],
+)
+def test_every_commit_kind_fails_on_a_racing_append(
+    spark, tmp_path, monkeypatch, kind
+):
+    """Lost-update contract for every kind of commit: an append that
+    lands just before the statement's own metadata commit makes the
+    statement raise CommitFailedError, and the racer's rows stay in
+    the table (nothing of the failed statement becomes visible)."""
+    loc = str(tmp_path / kind)
+    schema = "k bigint, v double"
+    df = spark.createDataFrame([(i, float(i)) for i in range(10)], schema)
+    ice.create_table(loc, ice.spark_schema_to_iceberg(df))
+    ice.append(spark, loc, df)
+    ice.append(spark, loc, spark.createDataFrame([(10, 10.0)], schema))
+    ice.create_ref(loc, "audit", "branch")
+    ice.append(
+        spark, loc, spark.createDataFrame([(50, 50.0)], schema),
+        branch="audit",
+    )
+    statement = _race_statements(spark)[kind]
+    orig = ice._write_meta
+    raced = []
+
+    def racing_write(loc_, meta, version):
+        if not raced:
+            raced.append(True)
+            ice.append(
+                spark, loc_, spark.createDataFrame([(999, 9.0)], schema)
+            )
+        return orig(loc_, meta, version)
+
+    monkeypatch.setattr(ice, "_write_meta", racing_write)
+    with pytest.raises(ice.CommitFailedError):
+        statement(loc)
+    monkeypatch.undo()
+    assert raced
+    got = sorted(r["k"] for r in ice.read_iceberg(spark, loc).collect())
+    assert got == list(range(11)) + [999]

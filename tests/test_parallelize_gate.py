@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from mcp_iceberg_duckdb_spark.operators._util import parallelize
 
@@ -103,3 +104,62 @@ def test_non_file_source_still_spreads(spark):
     df = spark.createDataFrame([(i,) for i in range(100)], "x int")
     out = parallelize(df)
     assert _shuffles(out) == _shuffles(df) + 1
+
+
+_PLANNER_CONFS = (
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+    "spark.sql.leafNodeDefaultParallelism",
+)
+
+
+@pytest.mark.parametrize("parallelism", ["4", "32"])
+@pytest.mark.parametrize(
+    "max_pb, open_cost",
+    [(str(2 << 20), str(4 << 20)), (str(64 << 10), "0")],
+    ids=["2MB-4MB", "64KB-0"],
+)
+def test_scan_splits_matches_spark_planner(
+    spark, tmp_path, parallelism, max_pb, open_cost
+):
+    """The gate's estimate equals what Spark's own planner yields:
+    its file-partition count, capped by the row groups those
+    partitions can read. Swept over file counts, file sizes and
+    row-group sizes, under the session's 2 MB / 4 MB split confs and
+    a fine 64 KB / 0 one, at 4 and 32 as the split parallelism."""
+    import numpy as np
+
+    from mcp_iceberg_duckdb_spark.operators._util import _scan_splits
+
+    conf = spark.conf
+    saved = {k: conf.get(k, None) for k in _PLANNER_CONFS}
+    rng = np.random.default_rng(7)
+    misses = []
+    try:
+        for k, v in zip(_PLANNER_CONFS, (max_pb, open_cost, parallelism)):
+            conf.set(k, v)
+        for n_files in (1, 5):
+            for n_rows in (5_000, 60_000, 300_000):
+                for n_rg in (1, 4, 16):
+                    d = tmp_path / f"f{n_files}_r{n_rows}_g{n_rg}"
+                    d.mkdir()
+                    for i in range(n_files):
+                        pq.write_table(
+                            pa.table({"x": rng.integers(0, 1 << 62, n_rows)}),
+                            d / f"part-{i}.parquet",
+                            row_group_size=-(-n_rows // n_rg),
+                            compression="NONE",
+                            use_dictionary=False,
+                        )
+                    df = spark.read.parquet(str(d))
+                    want = min(df.rdd.getNumPartitions(), n_files * n_rg)
+                    got = _scan_splits(df)
+                    if got != want:
+                        misses.append((d.name, got, want))
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                conf.unset(k)
+            else:
+                conf.set(k, v)
+    assert not misses, misses
