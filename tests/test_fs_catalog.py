@@ -12,9 +12,15 @@ import pytest
 from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
 from mcp_iceberg_duckdb_spark.sources.fs_catalog import (
     FsCatalog,
-    _simple_filters,
-    _split_top_level,
+    _parse,
+    _where,
+    _where_filters,
 )
+
+
+def _where_of(spark, where: str):
+    """The parsed condition of ``SELECT * FROM t WHERE <where>``."""
+    return _where(_parse(spark, f"SELECT * FROM t WHERE {where}")[0])
 
 
 @pytest.fixture()
@@ -127,7 +133,7 @@ def test_update_unknown_set_target_rejected(loaded):
     cat, run = loaded
     with pytest.raises(ValueError, match="not a column"):
         run("UPDATE sales.orders SET nope = 1 WHERE k = 1")
-    with pytest.raises(ValueError, match="not a column"):
+    with pytest.raises(ValueError, match="PARSE_SYNTAX_ERROR"):
         run("UPDATE sales.orders SET amount + 1 = 2 WHERE k = 1")
 
 
@@ -204,25 +210,18 @@ def test_unsupported_statement_raises(cat, spark):
         cat.execute(spark, "   ")
 
 
-def test_simple_filter_extraction():
-    assert _simple_filters("a = 5 AND b < 'x''y'") == (
+def test_simple_filter_extraction(spark):
+    w = lambda s: _where_filters(_where_of(spark, s))  # noqa: E731
+    assert w("a = 5 AND b < 'x''y'") == (
         ("a", "=", 5),
         ("b", "<", "x'y"),
     )
-    assert _simple_filters("a >= 1.5") == (("a", ">=", 1.5),)
+    assert w("a >= 1.5") == (("a", ">=", 1.5),)
     # anything non-conjunctive or non-literal degrades to no pruning
-    assert _simple_filters("a = 5 OR b = 6") == ()
-    assert _simple_filters("a = b") == ()
-    assert _simple_filters("f(a) = 5") == ()
-    assert _simple_filters(None) == ()
-
-
-def test_split_top_level_respects_nesting():
-    assert _split_top_level("a = f(x, y), b = 'p,q', c = 1") == [
-        "a = f(x, y)",
-        "b = 'p,q'",
-        "c = 1",
-    ]
+    assert w("a = 5 OR b = 6") == ()
+    assert w("a = b") == ()
+    assert w("f(a) = 5") == ()
+    assert _where_filters(None) == ()
 
 
 def test_server_routes_through_fs_warehouse(loaded, spark, monkeypatch):
@@ -249,39 +248,11 @@ def test_server_routes_through_fs_warehouse(loaded, spark, monkeypatch):
     assert json.loads(res.text.split("\n", 1)[1]) == [{"n": 2}]
 
 
-# ---- hypothesis fuzz for the micro-parsers ----
+# ---- hypothesis fuzz for the pruning extractor ----
 
 from hypothesis import given, strategies as st  # noqa: E402
 
 _name = st.from_regex(r"[a-z][a-z0-9_]{0,8}", fullmatch=True)
-_quoted = st.text(
-    alphabet=st.sampled_from(list("ab,() '")), max_size=8
-).map(lambda s: "'" + s.replace("'", "''") + "'")
-_leaf = st.one_of(
-    _name,
-    _quoted,
-    st.integers(-999, 999).map(str),
-)
-
-
-@st.composite
-def _item(draw, depth=2):
-    """A SET-list item with balanced parens and quoted strings —
-    commas only below depth 0 or inside quotes."""
-    kind = draw(st.integers(0, 2 if depth else 1))
-    if kind == 0:
-        return draw(_leaf)
-    if kind == 1:
-        return draw(_name) + " = " + draw(_leaf)
-    inner = draw(st.lists(_item(depth - 1), min_size=1, max_size=3))
-    return draw(_name) + "(" + ", ".join(inner) + ")"
-
-
-@given(st.lists(_item(), min_size=1, max_size=5))
-def test_split_top_level_roundtrip(items):
-    assert _split_top_level(", ".join(items)) == [
-        i.strip() for i in items if i.strip()
-    ]
 
 
 @given(
@@ -307,18 +278,18 @@ def test_split_top_level_roundtrip(items):
         max_size=4,
     )
 )
-def test_simple_filters_roundtrip(triples):
+def test_simple_filters_roundtrip(spark, triples):
     """Rendering a conjunction of simple comparisons and re-parsing
     yields exactly the input triples — the pruning extraction can
     never misread a literal (which would mis-prune the rewrite
     set)."""
     rendered = " AND ".join(
-        f"{c} {op} "
+        f"`{c}` {op} "
         + (f"'{v.replace(chr(39), chr(39) * 2)}'" if isinstance(v, str)
            else repr(v))
         for c, op, v in triples
     )
-    got = _simple_filters(rendered)
+    got = _where_filters(_where_of(spark, rendered))
     assert got == tuple(
         (c, op, float(v) if isinstance(v, float) else v)
         for c, op, v in triples
@@ -326,11 +297,15 @@ def test_simple_filters_roundtrip(triples):
 
 
 @given(st.text(max_size=40))
-def test_simple_filters_never_raises(s):
-    """Arbitrary WHERE text either parses to triples or degrades to
-    () — it must never throw (pruning is best-effort)."""
-    out = _simple_filters(s)
-    assert isinstance(out, tuple)
+def test_simple_filters_never_raises(spark, s):
+    """Arbitrary WHERE text either parses to triples (or ()) or is
+    refused by the parse with a ValueError — the extractor itself
+    never throws (pruning is best-effort)."""
+    try:
+        cond = _where_of(spark, s)
+    except ValueError:
+        return
+    assert isinstance(_where_filters(cond), tuple)
 
 
 def test_maintenance_statements(loaded, spark):
@@ -435,8 +410,6 @@ def test_type_mismatch_literals_never_prune(cat, spark, tmp_path):
     column) are dropped by typed extraction, and plan_files itself
     keeps files conservatively if a mis-typed filter reaches it —
     never a TypeError that kills the statement."""
-    from mcp_iceberg_duckdb_spark.sources.fs_catalog import _simple_filters
-
     run = lambda s: cat.execute(spark, s)  # noqa: E731
     run("CREATE TABLE default.logs (k bigint, region string, d date)")
     run("INSERT INTO default.logs VALUES"
@@ -444,10 +417,11 @@ def test_type_mismatch_literals_never_prune(cat, spark, tmp_path):
     loc = cat._resolve("default.logs")[2]
     meta = ice.read_table_meta(loc)
     # typed extraction drops the mismatches, keeps the valid date
-    assert _simple_filters("d = 'not-a-date'", meta) == ()
-    assert _simple_filters("region = 7", meta) == ()
-    assert _simple_filters("k = 'abc'", meta) == ()
-    assert _simple_filters("d = '2023-01-15'", meta) == (
+    w = lambda s: _where_filters(_where_of(spark, s), meta)  # noqa: E731
+    assert w("d = 'not-a-date'") == ()
+    assert w("region = 7") == ()
+    assert w("k = 'abc'") == ()
+    assert w("d = '2023-01-15'") == (
         ("d", "=", 19372),
     )
     # defense in depth: a mis-typed filter straight into plan_files
@@ -665,39 +639,6 @@ def test_cte_shadows_same_named_table(cat, spark):
     assert [r["k"] for r in got] == [5]
     # and the table is still reachable when no CTE shadows it
     assert run("SELECT k FROM t").collect()[0]["k"] == 111
-
-
-def test_split_where_and_top_level_scanner_fuzz():
-    """Property fuzz for the quote/paren-aware scanners: WHERE inside
-    string literals or parens is never taken as the clause split, and
-    a synthesized top-level WHERE always is."""
-    from hypothesis import given, settings, strategies as st
-
-    from mcp_iceberg_duckdb_spark.sources.fs_catalog import (
-        _find_top_level,
-        _split_where,
-    )
-
-    lit = st.text(
-        alphabet="abc WHERE()'", min_size=0, max_size=12
-    ).map(lambda s: "'" + s.replace("'", "''") + "'")
-    safe = st.text(alphabet="abc=1,+ ", min_size=1, max_size=12)
-
-    @settings(max_examples=80, deadline=None)
-    @given(pre=safe, inner=lit, post=safe)
-    def check(pre, inner, post):
-        # WHERE only inside the literal / parens: no split
-        s = f"{pre}{inner}(x WHERE y){post}"
-        body, tail = _split_where(s)
-        assert tail is None and body == s
-        # one genuine top-level WHERE: split at exactly that point
-    # precedence: the FIRST top-level occurrence wins
-        s2 = f"{pre}{inner} WHERE k = 1 AND t = {inner}"
-        body2, tail2 = _split_where(s2)
-        assert body2 == f"{pre}{inner}" and tail2.startswith("k = 1")
-        assert _find_top_level("(WHERE) 'WHERE' WHERE", ("WHERE",)) == 16
-
-    check()
 
 
 def test_select_prune_skips_ambiguous_shared_columns(cat, spark):
@@ -944,66 +885,6 @@ def test_sql_rewrite_deletes(loaded, spark):
     assert len(ice.plan_delete_files(loc)) == 1
     got = sorted(r["k"] for r in run("SELECT k FROM sales.orders o").collect())
     assert got == [3]
-
-
-def test_normalize_from_commas_fuzz():
-    """Property test for the FROM comma-list normalizer: it must
-    rewrite ONLY commas that directly separate FROM-list items, and
-    be a no-op on statements without comma lists — including the
-    hostile shapes (function args, SELECT lists, substring..FROM,
-    subquery items, AS t(a, b) aliases)."""
-    from mcp_iceberg_duckdb_spark.sources.fs_catalog import (
-        _normalize_from_commas,
-    )
-
-    noops = [
-        "SELECT a, b FROM t",
-        "SELECT concat(a, b) FROM t WHERE x = 1",
-        "SELECT substring(s FROM 2 FOR 3), y FROM t",
-        "SELECT extract(YEAR FROM d), n FROM t",
-        "SELECT * FROM t JOIN u ON t.k = u.k",
-        "SELECT (SELECT max(x) FROM a), y FROM b",
-        "SELECT * FROM range(10)",
-        "SELECT * FROM t GROUP BY a, b ORDER BY c, d",
-        "INSERT INTO t VALUES (1, 2), (3, 4)",
-    ]
-    for s in noops:
-        assert _normalize_from_commas(s) == s, s
-    cases = {
-        "SELECT * FROM t1, t2": "SELECT * FROM t1 CROSS JOIN t2",
-        "SELECT * FROM t1 a, t2 b WHERE a.k = b.k":
-            "SELECT * FROM t1 a CROSS JOIN t2 b WHERE a.k = b.k",
-        "SELECT * FROM ns.t1, t2, t3":
-            "SELECT * FROM ns.t1 CROSS JOIN t2 CROSS JOIN t3",
-        "SELECT * FROM (SELECT 1 AS x) s, t2":
-            "SELECT * FROM (SELECT 1 AS x) s CROSS JOIN t2",
-        "SELECT (SELECT count(*) FROM a, b) AS n FROM c":
-            "SELECT (SELECT count(*) FROM a CROSS JOIN b) AS n FROM c",
-    }
-    ws = lambda s: " ".join(s.split())  # noqa: E731
-    for src, want in cases.items():
-        assert ws(_normalize_from_commas(src)) == ws(want), src
-    # idempotent: normalizing an already-normalized statement is a
-    # no-op (no comma lists remain)
-    for want in cases.values():
-        assert ws(_normalize_from_commas(want)) == ws(want)
-    # fuzz sweep: random token soup never crashes, statements without
-    # FROM are untouched, and the ONLY possible edit is a comma
-    # becoming CROSS JOIN (undoing it reproduces the input)
-    import random
-
-    rnd = random.Random(7)
-    toks = ["SELECT", "a", "b", ",", "(", ")", "FROM", "t", "WHERE",
-            "=", "'x,y'", "1"]
-    for _ in range(300):
-        s = " ".join(rnd.choice(toks) for _ in range(rnd.randint(1, 15)))
-        out = _normalize_from_commas(s)
-        if "FROM" not in s.upper():
-            assert out == s
-        assert ws(out.replace(" CROSS JOIN ", " , ")) in (
-            ws(s),
-            ws(s.replace(",", " , ")),
-        )
 
 
 def test_sql_select_surfaces_delete_scoping_stats(loaded, spark):
@@ -1798,3 +1679,95 @@ def test_write_ordered_by_and_default_compaction(cat, spark):
         for r in run("DESCRIBE TABLE ord")
     }
     assert desc["k"] == ""
+
+
+def test_binding_leaves_literals_and_dml_text_intact(cat, spark):
+    """Table names are bound at the spans Spark's parser records, so
+    a table name inside a double-quoted or backslash-escaped string
+    literal stays text, INSERT ... SELECT commits the literal as
+    written, and UPDATE accepts SET values containing WHERE or an
+    escaped quote."""
+    run = lambda s: cat.execute(spark, s)  # noqa: E731
+    run("CREATE TABLE default.t1 (k bigint, s string)")
+    run("INSERT INTO default.t1 VALUES (1, 'a'), (2, 'b')")
+    note = lambda q: [r["note"] for r in run(q).collect()]  # noqa: E731
+    assert note(
+        'SELECT "see default.t1" AS note FROM default.t1 WHERE k = 1'
+    ) == ["see default.t1"]
+    assert note(
+        'SELECT "FROM t1" AS note FROM t1 WHERE k = 1'
+    ) == ["FROM t1"]
+    assert note(
+        "SELECT 'it\\'s default.t1' AS note FROM default.t1 WHERE k = 1"
+    ) == ["it's default.t1"]
+    run('INSERT INTO default.t1 SELECT 4, "FROM t1" FROM t1 WHERE k = 1')
+    run('UPDATE default.t1 SET s = "x WHERE k = 2" WHERE k = 1')
+    run("UPDATE default.t1 SET s = 'it\\'s' WHERE k = 2")
+    got = {r["k"]: r["s"] for r in run("SELECT k, s FROM t1").collect()}
+    assert got == {1: "x WHERE k = 2", 2: "it's", 4: "FROM t1"}
+
+
+def test_last_scan_plan_describes_only_the_last_statement(loaded, spark):
+    """``last_scan_plan`` holds the views the LAST statement
+    registered: a statement that registers none leaves it empty
+    instead of repeating the previous SELECT's stats."""
+    cat, run = loaded
+    for q in (
+        "LIST TABLES",
+        "DESCRIBE TABLE sales.orders",
+        "SHOW SNAPSHOTS IN sales.orders",
+        "INSERT INTO sales.orders VALUES (4, 'us', 40.0)",
+    ):
+        run("SELECT k FROM sales.orders o WHERE region = 'eu'").collect()
+        assert cat.last_scan_plan["sales.orders"]["filters"]
+        run(q)
+        assert cat.last_scan_plan == {}, q
+
+
+def test_select_prunes_on_each_exact_conjunct(cat, spark):
+    """Each top-level AND conjunct comparing a column with a literal
+    prunes on its own: a conjunct that cannot prune (a TIMESTAMP
+    literal here) no longer voids the others, while an OR above the
+    conjunction still keeps every file."""
+    run = lambda s: cat.execute(spark, s)  # noqa: E731
+    run(
+        "CREATE TABLE default.pc (k bigint, r string, ts timestamp)"
+        " PARTITIONED BY (r)"
+    )
+    run(
+        "INSERT INTO default.pc VALUES"
+        " (1, 'A', TIMESTAMP '2024-01-01 00:00:00'),"
+        " (2, 'N', TIMESTAMP '2024-01-02 00:00:00'),"
+        " (3, 'R', TIMESTAMP '2024-01-03 00:00:00')"
+    )
+    rows = run(
+        "SELECT k FROM default.pc"
+        " WHERE r = 'A' AND ts >= TIMESTAMP '2023-06-01 00:00:00'"
+    ).collect()
+    assert [r["k"] for r in rows] == [1]
+    plan = cat.last_scan_plan["default.pc"]
+    assert (plan["files_planned"], plan["files_total"]) == (1, 3)
+    assert plan["filters"] == [("r", "=", "A")]
+    rows = run(
+        "SELECT k FROM default.pc WHERE r = 'A' AND k > 0 OR r = 'N'"
+    ).collect()
+    assert sorted(r["k"] for r in rows) == [1, 2]
+    plan = cat.last_scan_plan["default.pc"]
+    assert (plan["files_planned"], plan["files_total"]) == (3, 3)
+    assert plan["filters"] == []
+
+
+def test_merge_without_aliases_binds_source_table(cat, spark):
+    """MERGE with unaliased tables: ON terms use the written table
+    names, although binding renames the source to its view."""
+    run = lambda s: cat.execute(spark, s)  # noqa: E731
+    run("CREATE TABLE t (k bigint, v string)")
+    run("CREATE TABLE s (k bigint, v string)")
+    run("INSERT INTO t VALUES (1, 'a'), (2, 'b')")
+    run("INSERT INTO s VALUES (2, 'B'), (3, 'C')")
+    run(
+        "MERGE INTO t USING s ON t.k = s.k"
+        " WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+    )
+    got = sorted(tuple(r) for r in run("SELECT * FROM t").collect())
+    assert got == [(1, "a"), (2, "B"), (3, "C")]

@@ -912,10 +912,15 @@ def test_iceberg_identity_date_partition(spark, tmp_path):
     files, total = ice.plan_files(loc, filters=(("d", "=", epoch),))
     assert len(files) == 1 and total == 6
     # the SQL surface's typed extraction reaches the same pruning
-    from mcp_iceberg_duckdb_spark.sources.fs_catalog import _simple_filters
+    from mcp_iceberg_duckdb_spark.sources.fs_catalog import (
+        _parse,
+        _where,
+        _where_filters,
+    )
 
     meta = ice.read_table_meta(loc)
-    assert _simple_filters("d = '2023-01-15'", meta) == (("d", "=", epoch),)
+    cond = _where(_parse(spark, "SELECT * FROM t WHERE d = '2023-01-15'")[0])
+    assert _where_filters(cond, meta) == (("d", "=", epoch),)
     snap = ice.cow_rewrite_where(
         spark, loc, F.expr("d = '2023-01-15'"),
         lambda src, p: src.filter(~F.coalesce(p, F.lit(False))),
