@@ -175,35 +175,52 @@ def _conjuncts(cond) -> list:
     return out
 
 
+def _literal(e):
+    """(python type, value) of a non-NULL literal a pruning hint can
+    carry, else None."""
+    if e.nodeName() != "Literal":
+        return None
+    typ = e.dataType().typeName()
+    conv = float if typ.startswith("decimal") else _LIT.get(typ)
+    return None if conv is None else (conv, conv(e.toString()))
+
+
 def _comparisons(cond) -> list:
     """(qualifier, column, op, literal) for each top-level conjunct of
     ``cond`` that compares a column with a literal — the one pruning
-    extractor for SELECT and DML. Each conjunct stands on its own: an
-    OR, a function call or a literal of another type is simply not a
-    comparison here, and leaves the others free to prune."""
+    extractor for SELECT and DML. ``col IN (v1, …, vn)`` over literals
+    of one type is the comparison (col, "in", (v1, …, vn)), which
+    _type_filters turns into the range [min, max]. Each conjunct
+    stands on its own: an OR, a function call, a NULL or a literal of
+    another type is simply not a comparison here, and leaves the
+    others free to prune."""
     out = []
     for name, e in _conjuncts(cond):
-        op = _CMP.get(name)
-        if op is None:
+        if name == "In":
+            col, lits = e.value(), [_literal(x) for x in _seq(e.list())]
+            if None in lits or len({conv for conv, _ in lits}) != 1:
+                continue
+            op, val = "in", tuple(v for _, v in lits)
+        elif name in _CMP:
+            col, lit = e.left(), _literal(e.right())
+            if lit is None:
+                continue
+            op, val = _CMP[name], lit[1]
+        else:
             continue
-        col, lit = e.left(), e.right()
-        if col.nodeName() != "UnresolvedAttribute" or lit.nodeName() != "Literal":
-            continue
-        typ = lit.dataType().typeName()
-        conv = float if typ.startswith("decimal") else _LIT.get(typ)
-        if conv is None:
+        if col.nodeName() != "UnresolvedAttribute":
             continue
         parts = _seq(col.nameParts())
-        out.append((tuple(parts[:-1]), parts[-1], op, conv(lit.toString())))
+        out.append((tuple(parts[:-1]), parts[-1], op, val))
     return out
 
 
 def _where_filters(cond, meta: dict | None = None):
     """(col, op, literal) pruning hints from the unqualified
     comparisons of ``cond``; with ``meta`` (the table's Iceberg
-    metadata) typed by _type_filters. The full predicate is still
-    evaluated row-level, so a hint only ever narrows the files
-    planned."""
+    metadata) typed by _type_filters, which also turns each IN list
+    into its range. The full predicate is still evaluated row-level,
+    so a hint only ever narrows the files planned."""
     out = [(c, op, v) for q, c, op, v in _comparisons(cond) if not q]
     return tuple(out) if meta is None else _type_filters(out, meta)
 
@@ -214,10 +231,18 @@ def _type_filters(filters, meta: dict):
     micros (the bound encodings), and any filter whose literal type
     cannot match its column (string vs numeric, unparseable date,
     unknown column) is dropped — dropping a conjunct only widens the
-    candidate set."""
+    candidate set. An "in" list becomes (col, ">=", min) and (col,
+    "<=", max) of its typed values, or is dropped whole when any value
+    is."""
     types = {f["name"]: f["type"] for f in meta["schema"]["fields"]}
     typed = []
     for col, op, val in filters:
+        if op == "in":
+            one = _type_filters([(col, "=", v) for v in val], meta)
+            vals = [v for *_, v in one]
+            if len(vals) == len(val):
+                typed += [(col, ">=", min(vals)), (col, "<=", max(vals))]
+            continue
         t = types.get(col)
         if t == "date" and isinstance(val, str):
             import datetime
@@ -361,26 +386,20 @@ def _partition_cols(transforms, names) -> list:
 
 
 def _strict_cast(df, pairs):
-    """Cast DML-source columns to the table's types LOUDLY: try_cast
-    each ``(source_col, out_name, spark_type)``, then raise if any
-    NON-NULL input produced a NULL — the ANSI semantics Spark/Iceberg
-    MERGE and INSERT enforce. Plain cast() would silently turn an
+    """Cast an INSERT source's columns to the table's types LOUDLY:
+    try_cast each ``(source_col, out_name, spark_type)``, and raise if
+    any NON-NULL input produced a NULL — the ANSI semantics
+    Spark/Iceberg INSERT enforces. Plain cast() would silently turn an
     un-castable value (string 'abc' into an int column) into NULL and
-    commit it as data corruption. Costs one extra limit-1 job over the
-    (small) DML source."""
-    bad = None
-    for src, _, typ in pairs:
-        cond = F.col(src).isNotNull() & F.col(src).try_cast(typ).isNull()
-        bad = cond if bad is None else (bad | cond)
-    offenders = df.filter(bad).limit(1).collect()
-    if offenders:
-        raise ValueError(
-            "DML source value cannot be cast to the table schema "
-            f"(ANSI cast would fail): {offenders[0].asDict()!r}"
-        )
-    return df.select(
-        *[F.col(src).try_cast(typ).alias(name) for src, name, typ in pairs]
-    )
+    commit it as data corruption. The check is one filter and the cast
+    one selectExpr, both SQL text (iceberg_fs.strict_cast_sql); the
+    check is one limit-1 action over the source, answered on the
+    driver without a Spark job for a VALUES list. MERGE folds the same
+    check into its source-validation aggregate
+    (iceberg_fs._merge_source)."""
+    exprs, bad = ice.strict_cast_sql(pairs)
+    ice.check_strict_cast(df, bad)
+    return df.selectExpr(*exprs)
 
 
 def _target(node):
@@ -1094,12 +1113,10 @@ class FsCatalog:
                     f"two aliases, got {term.toString()!r}"
                 )
             on_cols.append(c1)
-        fields = meta["schema"]["fields"]
         # resolve ON columns through the schema's canonical casing so
         # downstream joins/selects hit real columns
-        canon = {f["name"].lower(): f["name"] for f in fields}
+        canon = {f["name"].lower(): f["name"] for f in meta["schema"]["fields"]}
         on_cols = [canon.get(c.lower(), c) for c in on_cols]
-        types = {f["name"]: ice.ice_to_spark_type(f["type"]) for f in fields}
         acts = [
             _seq(a) for a in (
                 plan.matchedActions(),
@@ -1122,21 +1139,11 @@ class FsCatalog:
                 "[WHEN NOT MATCHED BY SOURCE THEN DELETE | "
                 "UPDATE SET ...], or DELETE"
             )
-        # WHEN MATCHED THEN DELETE is a key-tombstone batch: the
-        # source only needs the ON columns
-        need = list(types) if upsert else on_cols
-        missing = [c for c in need if c not in source.columns]
-        if missing:
-            what = "table" if upsert else "ON"
-            raise ValueError(f"MERGE source lacks {what} columns {missing}")
+        # iceberg_fs checks the source's columns (every table column;
+        # only the ON keys for a WHEN MATCHED THEN DELETE tombstone
+        # batch) and casts them BY NAME to the table schema, loudly:
         # literals in an inline USING (SELECT ...) arrive as Spark's
-        # inferred types (INT, DECIMAL); cast BY NAME to the table
-        # schema so the written files carry the table's types —
-        # loudly (try_cast + raise on non-NULL -> NULL), matching
-        # Spark/Iceberg ANSI MERGE semantics
-        source = _strict_cast(
-            source.select(*need), [(c, c, types[c]) for c in need]
-        )
+        # inferred types (INT, DECIMAL)
         if not upsert:
             fn = ice.mor_merge_delete if mor else ice.merge_delete
             summary = fn(spark, loc, source, on_cols=on_cols)["summary"]

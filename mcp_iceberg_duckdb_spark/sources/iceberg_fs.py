@@ -1980,6 +1980,38 @@ def mor_update_where(
     )
 
 
+def _sql_name(name: str) -> str:
+    """A column name quoted for SQL text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def strict_cast_sql(pairs) -> tuple[list, str]:
+    """SQL text for an ANSI cast of ``(source_col, out_name,
+    spark_type)`` pairs: the try_cast projection (for selectExpr), and
+    the predicate true on a row where some NON-NULL input casts to
+    NULL — the value an ANSI cast would refuse. Spark/Iceberg INSERT
+    and MERGE enforce that refusal; a plain cast() would commit the
+    NULL as silent corruption. SQL text costs one py4j call per use,
+    where Column arithmetic costs several per column."""
+    exprs, bad = [], []
+    for src, name, typ in pairs:
+        cast = f"try_cast({_sql_name(src)} AS {typ})"
+        exprs.append(f"{cast} AS {_sql_name(name)}")
+        bad.append(f"({_sql_name(src)} IS NOT NULL AND {cast} IS NULL)")
+    return exprs, " OR ".join(bad) or "false"
+
+
+def check_strict_cast(df, bad: str, what: str = "DML source value") -> None:
+    """Raise on the first row of ``df`` where the strict_cast_sql
+    predicate ``bad`` holds: one limit-1 job."""
+    offenders = df.filter(bad).limit(1).collect()
+    if offenders:
+        raise ValueError(
+            f"{what} cannot be cast to the table schema "
+            f"(ANSI cast would fail): {offenders[0].asDict()!r}"
+        )
+
+
 def mor_delete_keys(spark, loc: str, key_cols, keys_df,
                     n_files: int = 1) -> dict:
     """EQUALITY-delete DML (spec v2 content=2) — the delete kind
@@ -2001,8 +2033,6 @@ def mor_delete_keys(spark, loc: str, key_cols, keys_df,
     key-set until compaction materializes. The computational shape is
     the engine's s_cdc_upsert_apply twin (streaming/events.py),
     re-expressed as a table-format commit."""
-    from pyspark.sql import functions as F
-
     meta = read_table_meta(loc)
     by_name = {f["name"]: f for f in meta["schema"]["fields"]}
     key_cols = list(key_cols)
@@ -2015,26 +2045,14 @@ def mor_delete_keys(spark, loc: str, key_cols, keys_df,
     # cast LOUDLY. A plain cast() would turn an un-castable key value
     # into NULL, and the null-safe anti-join would then delete every
     # table row whose key IS NULL — silent data loss from a typo'd
-    # keys_df. Same ANSI discipline as the SQL-surface DML _strict_cast.
-    types = {c: ice_to_spark_type(by_name[c]["type"]) for c in key_cols}
-    bad_cast = None
-    for c in key_cols:
-        cond = F.col(c).isNotNull() & F.col(c).try_cast(types[c]).isNull()
-        bad_cast = cond if bad_cast is None else (bad_cast | cond)
-    offenders = keys_df.filter(bad_cast).limit(1).collect()
-    if offenders:
-        raise ValueError(
-            "equality-delete key value cannot be cast to the table "
-            f"schema (ANSI cast would fail): {offenders[0].asDict()!r}"
-        )
+    # keys_df.
+    exprs, bad = strict_cast_sql(
+        [(c, c, ice_to_spark_type(by_name[c]["type"])) for c in key_cols]
+    )
+    check_strict_cast(keys_df, bad, "equality-delete key value")
     out_dir = os.path.join(loc, "deletes", str(uuid.uuid4()))
     (
-        keys_df.select(
-            *[
-                F.col(c).try_cast(types[c]).alias(c)
-                for c in key_cols
-            ]
-        )
+        keys_df.selectExpr(*exprs)
         .distinct()
         .coalesce(max(1, int(n_files)))
         .write.parquet(out_dir)
@@ -2603,136 +2621,177 @@ def merge_into(spark, loc: str, source_df, on_cols, update_cols=None,
     WHEN MATCHED on ``on_cols`` the target row's ``update_cols`` are
     replaced by the source's values; WHEN NOT MATCHED the source row
     is inserted (INSERT *, so ``source_df`` must carry every table
-    column). Default ``update_cols`` = every non-key, non-partition
-    column.
+    column; _merge_source casts it to the table's types). Default
+    ``update_cols`` = every non-key, non-partition column.
 
     Scale shape: the rewrite set is BOUNDED BY MANIFEST PRUNING on
-    the source's key range — a 1-row ``agg(min,max)`` of the join key
-    prunes candidate files on their stored column bounds, so merging
-    a day's increment into a 100 TB table rewrites only the files
-    whose key bounds overlap the increment. The join itself runs
-    candidate-files x source inside Spark (AQE broadcasts a small
-    source); any target row matching a source key necessarily lives
-    in a candidate file (bounds pruning is conservative), so the
-    not-matched anti-join against candidates alone is exact.
-    Partition columns cannot be updated (identity routing only, same
-    contract as update_where). Reference parity: the reference
-    routes MERGE-shaped DML to DuckDB over its full table download
+    the source's key range — the source-validation aggregate also
+    returns the first join key's min and max, which prune candidate
+    files on their stored column bounds, so merging a day's increment
+    into a 100 TB table rewrites only the files whose key bounds
+    overlap the increment. The replacement is ONE full outer join of
+    the candidates' live rows with the source, the plan Spark's
+    RewriteMergeIntoTable builds for a group-based MERGE with a NOT
+    MATCHED clause: a row on both sides is matched and takes the
+    source's ``update_cols``; a source-only row is an insert; a
+    target-only row passes through. Any target row matching a source
+    key lives in a candidate file (bounds pruning is conservative),
+    so a source-only row is exactly a not-matched one. SQL equality:
+    a NULL key matches nothing, so a NULL-keyed source row is
+    inserted and a NULL-keyed target row is never matched. Partition
+    columns cannot be updated (identity routing only, same contract
+    as update_where). Reference parity: the reference routes
+    MERGE-shaped DML to DuckDB over its full table download
     (IcebergConnection.py:107-177); here it is a real Iceberg
     overwrite commit.
 
     ``not_matched_by_source``: the full CDC mirror (Spark 3.4+ /
-    Iceberg `WHEN NOT MATCHED BY SOURCE`) — target rows whose key
-    has NO source row are either dropped (``"delete"``) or get a
-    dict of {column: Column} assignments applied. This clause
-    inspects EVERY live row, so the rewrite set becomes all live
-    files — bounds pruning cannot apply (a vanished key can hide in
-    any file); that cost is inherent to the semantics, the same in
-    real engines."""
+    Iceberg `WHEN NOT MATCHED BY SOURCE`) — target-only rows are
+    either dropped (``"delete"``) or get a dict of {column: Column}
+    assignments applied. This clause inspects EVERY live row, so the
+    rewrite set becomes all live files — bounds pruning cannot apply
+    (a vanished key can hide in any file); that cost is inherent to
+    the semantics, the same in real engines."""
     from pyspark.sql import functions as F
 
     meta = read_table_meta(loc)
-    ice_schema = meta["schema"]
-    cols = [f["name"] for f in ice_schema["fields"]]
+    types = {f["name"]: f["type"] for f in meta["schema"]["fields"]}
     on_cols = list(on_cols)
-    types = {f["name"]: f["type"] for f in ice_schema["fields"]}
-    source, update_cols = _merge_source(
-        meta, source_df, on_cols, update_cols, not_matched_by_source,
-        mor=False,
-    )
-    # bounds-prune candidates on the first join key's source range —
-    # unless a NOT MATCHED BY SOURCE clause forces a full-candidate
-    # rewrite (any file may hold a vanished key)
-    filters = (
-        _merge_key_filters(source, on_cols[0], types)
-        if not_matched_by_source is None
-        else ()
+    nmbs = not_matched_by_source
+    source, update_cols, filters = _merge_source(
+        meta, source_df, on_cols, update_cols, nmbs, mor=False,
     )
     entries = _live_entries(loc, meta)
     candidates, untouched = _split(meta, entries, filters)
-
-    marked = source.select(
-        *on_cols,
-        *[F.col(c).alias(f"__s_{c}") for c in update_cols],
-    ).withColumn("__matched", F.lit(True))
+    replacement = source
     if candidates:
         tgt = _read_live(spark, loc, meta, candidates, entries)
-        joined = tgt.join(marked, on=on_cols, how="left")
-        out = joined
-        for c in update_cols:
-            out = out.withColumn(
-                c,
-                F.when(F.col("__matched"), F.col(f"__s_{c}")).otherwise(
-                    F.col(c)
-                ),
-            )
-        if not_matched_by_source == "delete":
-            # __matched is True for matched rows, NULL otherwise
-            out = out.filter(F.col("__matched").isNotNull())
-        elif isinstance(not_matched_by_source, dict):
-            for c, expr in not_matched_by_source.items():
-                out = out.withColumn(
-                    c,
-                    F.when(
-                        F.col("__matched").isNull(),
-                        expr.cast(ice_to_spark_type(types[c])),
-                    ).otherwise(F.col(c)),
+        # the target keeps its column names (NOT MATCHED BY SOURCE
+        # assignments read them); the source's are renamed apart, and
+        # each side carries a marker that is NULL where it is absent
+        rest = [c for c in types if c not in on_cols]
+        joined = tgt.withColumn("__t", F.lit(True)).join(
+            source.select(
+                *on_cols,
+                *[F.col(c).alias(f"__s_{c}") for c in rest],
+                F.lit(True).alias("__s"),
+            ),
+            on=on_cols,
+            how="full",
+        )
+        in_src = F.col("__s").isNotNull()
+        in_tgt = F.col("__t").isNotNull()
+        out = []
+        for c in types:
+            if c in on_cols:  # the USING join coalesces the keys
+                out.append(F.col(c))
+                continue
+            t, s = F.col(c), F.col(f"__s_{c}")
+            if c in update_cols:  # matched or inserted: the source's
+                v = F.when(in_src, s).otherwise(t)
+            else:  # matched or passed through: the target's
+                v = F.when(in_tgt, t).otherwise(s)
+            if isinstance(nmbs, dict) and c in nmbs:
+                v = F.when(in_src, v).otherwise(
+                    nmbs[c].cast(ice_to_spark_type(types[c]))
                 )
-        rewritten = out.select(*cols)
-        inserts = source.join(
-            tgt.select(*on_cols), on=on_cols, how="left_anti"
-        ).select(*cols)
-        replacement = rewritten.unionByName(inserts)
-    else:
-        replacement = source
+            out.append(v.alias(c))
+        if nmbs == "delete":
+            joined = joined.filter(in_src)
+        replacement = joined.select(*out)
     new_files = _write_replacement(spark, loc, replacement, meta)
     return _commit_overwrite(
         loc, meta, entries, candidates, untouched, new_files
     )
 
 
-def _merge_source(meta, source_df, on_cols, update_cols, nmbs, mor):
-    """The checks every MERGE INTO makes before touching the table;
-    returns (source with the table's columns, update_cols). The
-    source must carry every table column. Default ``update_cols`` =
-    every non-key, non-partition column; copy-on-write refuses
-    partition columns (rows would need re-routing), merge-on-read
-    refuses the ON keys. Each target row may match at most one source
-    row: duplicate join keys would silently multiply matched rows, so
-    they raise (one cheap aggregate job over the small source)."""
+# the key types whose min/max bounds-prune a MERGE's candidate files
+_PRUNE_KEY_TYPES = ("int", "long", "float", "double", "string", "date")
+
+
+def _merge_source(meta, source_df, on_cols, update_cols=None, nmbs=None,
+                  mor=False, upsert=True):
+    """The checks every MERGE makes before touching the table;
+    returns (source, update_cols, filters). Every check that reads
+    the source shares ONE Spark action.
+
+    An upsert's source must carry every table column; a WHEN MATCHED
+    THEN DELETE source (``upsert=False``) only the ON keys. The
+    returned source is those columns cast by name to the table's
+    types. Default ``update_cols`` = every non-key, non-partition
+    column; copy-on-write refuses partition columns (rows would need
+    re-routing), merge-on-read refuses the ON keys.
+
+    The action is one aggregate (group by the ON keys, then a global
+    reduce) over one SQL projection of the source, and it answers:
+    - whether a non-NULL value fails its cast (strict_cast_sql; the
+      offending row is fetched only then);
+    - whether an ON key repeats. Each target row may match at most
+      one source row: duplicate keys would silently multiply matched
+      rows, so an upsert raises (a delete may repeat keys);
+    - the first key's min and max, the bounds-prune ``filters`` for
+      the candidate files. DATE keys convert to epoch days, the
+      encoding plan_files stores date bounds in. A NOT MATCHED BY
+      SOURCE clause makes every live file a candidate, so it gets
+      none."""
     from pyspark.sql import functions as F
 
     part_sources = partition_source_cols(meta)
-    cols = [f["name"] for f in meta["schema"]["fields"]]
+    ice_types = {f["name"]: f["type"] for f in meta["schema"]["fields"]}
+    cols = list(ice_types) if upsert else list(on_cols)
     missing = [c for c in cols if c not in source_df.columns]
     if missing:
-        raise ValueError(f"MERGE source lacks table columns {missing}")
-    if update_cols is None:
-        update_cols = [
-            c for c in cols if c not in on_cols and c not in part_sources
-        ]
-    if mor and set(update_cols) & set(on_cols):
-        raise ValueError("MERGE cannot update its ON key columns")
-    bad = set(update_cols) & part_sources
-    if not mor and bad:
-        raise ValueError(f"cannot update partition columns {sorted(bad)}")
-    source = source_df.select(*cols)
-    dup = (
-        source.groupBy(*on_cols)
-        .count()
-        .filter(F.col("count") > 1)
-        .limit(1)
-        .count()
+        what = "table" if upsert else "ON"
+        raise ValueError(f"MERGE source lacks {what} columns {missing}")
+    if upsert:
+        if update_cols is None:
+            update_cols = [
+                c for c in cols if c not in on_cols and c not in part_sources
+            ]
+        if mor and set(update_cols) & set(on_cols):
+            raise ValueError("MERGE cannot update its ON key columns")
+        parts = set(update_cols) & part_sources
+        if not mor and parts:
+            raise ValueError(f"cannot update partition columns {sorted(parts)}")
+        if nmbs is not None:
+            _check_nmbs(nmbs, on_cols, part_sources)
+    exprs, bad = strict_cast_sql(
+        [(c, c, ice_to_spark_type(ice_types[c])) for c in cols]
     )
-    if dup:
+    key = on_cols[0]
+    prune = nmbs is None and ice_types.get(key) in _PRUNE_KEY_TYPES
+    n, failed, lo, hi = (
+        source_df.selectExpr(*exprs, f"{bad} AS __bad")
+        .groupBy(*on_cols)
+        .agg(F.count("*").alias("__n"), F.max("__bad").alias("__bad"))
+        .agg(
+            F.max("__n"),
+            F.max("__bad"),
+            *(
+                [F.min(key), F.max(key)]
+                if prune
+                else [F.lit(None), F.lit(None)]
+            ),
+        )
+        .first()
+    )
+    if failed:
+        check_strict_cast(source_df.select(*cols), bad)
+    if upsert and n is not None and n > 1:
         raise ValueError(
             "MERGE source has duplicate rows for the ON key(s) "
             f"{on_cols} — each target row may match at most one "
             "source row (cardinality violation)"
         )
-    if nmbs is not None:
-        _check_nmbs(nmbs, on_cols, part_sources)
-    return source, update_cols
+    filters = []
+    if prune and lo is not None:
+        if ice_types[key] == "date":
+            import datetime
+
+            epoch = datetime.date(1970, 1, 1)
+            lo, hi = (lo - epoch).days, (hi - epoch).days
+        filters = [(key, ">=", lo), (key, "<=", hi)]
+    return source_df.selectExpr(*exprs), update_cols, filters
 
 
 def _check_nmbs(nmbs, on_cols, part_sources) -> None:
@@ -2757,30 +2816,6 @@ def _check_nmbs(nmbs, on_cols, part_sources) -> None:
             "NOT MATCHED BY SOURCE cannot update partition columns "
             f"{sorted(bad)}"
         )
-
-
-def _merge_key_filters(source, key: str, types: dict):
-    """Bounds-prune filters for a MERGE's first join key: one 1-row
-    agg(min, max) over the source. DATE keys convert to epoch days —
-    plan_files stores date partition values and bounds as epoch-day
-    ints, so a datetime.date literal would TypeError inside
-    _eval_filter and silently degrade to keep-every-file (ADVICE r11
-    item 3); the conversion mirrors fs_catalog._type_filters."""
-    from pyspark.sql import functions as F
-
-    if types.get(key) not in (
-        "int", "long", "float", "double", "string", "date"
-    ):
-        return []
-    lo, hi = source.agg(F.min(key), F.max(key)).first()
-    if lo is None:
-        return []
-    if types[key] == "date":
-        import datetime
-
-        epoch = datetime.date(1970, 1, 1)
-        lo, hi = (lo - epoch).days, (hi - epoch).days
-    return [(key, ">=", lo), (key, "<=", hi)]
 
 
 def set_sort_order(loc: str, cols) -> dict:
@@ -2879,17 +2914,16 @@ def merge_delete(spark, loc: str, source_df, on_cols) -> dict:
     """MERGE ... WHEN MATCHED THEN DELETE (copy-on-write): target
     rows whose ``on_cols`` equal a source row's are removed; nothing
     is inserted. SQL equality semantics (a NULL key never matches —
-    unlike the spec's null-safe EQUALITY-delete files). The rewrite
-    set is bounds-pruned on the source's key range exactly like
-    merge_into — deleting a day's tombstone batch from a 100 TB
-    table rewrites only the files whose key bounds overlap it."""
+    unlike the spec's null-safe EQUALITY-delete files). The keys are
+    cast to the table's types and the rewrite set is bounds-pruned on
+    their range by the same one-action _merge_source as merge_into —
+    deleting a day's tombstone batch from a 100 TB table rewrites
+    only the files whose key bounds overlap it."""
     meta = read_table_meta(loc)
-    ice_schema = meta["schema"]
-    cols = [f["name"] for f in ice_schema["fields"]]
+    cols = [f["name"] for f in meta["schema"]["fields"]]
     on_cols = list(on_cols)
-    keys = source_df.select(*on_cols).distinct()
-    types = {f["name"]: f["type"] for f in ice_schema["fields"]}
-    filters = _merge_key_filters(keys, on_cols[0], types)
+    keys, _, filters = _merge_source(meta, source_df, on_cols, upsert=False)
+    keys = keys.distinct()
     entries = _live_entries(loc, meta)
     candidates, untouched = _split(meta, entries, filters)
     new_files: list[str] = []
@@ -2911,12 +2945,12 @@ def mor_merge_delete(spark, loc: str, source_df, on_cols) -> dict:
     """MERGE ... WHEN MATCHED THEN DELETE, merge-on-read: matched
     rows become POSITION deletes — zero data files rewritten, cost
     proportional to the matches. Candidates are bounds-pruned on the
-    source key range; SQL equality (NULL keys never match)."""
+    source key range (_merge_source, as in merge_delete); SQL equality
+    (NULL keys never match)."""
     meta = read_table_meta(loc)
     on_cols = list(on_cols)
-    keys = source_df.select(*on_cols).distinct()
-    types = {f["name"]: f["type"] for f in meta["schema"]["fields"]}
-    filters = _merge_key_filters(keys, on_cols[0], types)
+    keys, _, filters = _merge_source(meta, source_df, on_cols, upsert=False)
+    keys = keys.distinct()
     entries = _live_entries(loc, meta)
     candidates = _prune(meta, entries, filters)
     del_files: list[str] = []
@@ -2939,10 +2973,11 @@ def mor_merge_into(
     ``update_cols`` replaced by the source's values) APPENDED
     together with the not-matched source rows — one 'overwrite'
     snapshot, zero data files rewritten. Same contracts as
-    merge_into: the source must carry every table column, duplicate
-    source keys raise (cardinality violation), candidates are
-    bounds-pruned on the source's key range, and the not-matched
-    anti-join against candidates alone is exact because bounds
+    merge_into, checked by the same one-action _merge_source: the
+    source must carry every table column and is cast to the table's
+    types, duplicate source keys raise (cardinality violation), and
+    candidates are bounds-pruned on the source's key range. A source
+    row with no match among the candidates is an insert: bounds
     pruning is conservative. Default ``update_cols`` = every non-key,
     non-partition column (parity with merge_into; pass partition
     sources explicitly to move rows across partitions — legal here
@@ -2952,8 +2987,8 @@ def mor_merge_into(
     At 100 TB: merging a day's increment costs position deletes +
     appends proportional to the INCREMENT — the CoW path's rewrite of
     every candidate file (bytes proportional to key-range overlap)
-    disappears; reads pay the broadcast anti-join until compaction
-    materializes.
+    disappears; reads apply the position deletes until compaction
+    materializes them.
 
     ``not_matched_by_source`` ('delete' or {column: Column}): the
     CDC mirror — a vanished target row becomes a POSITION DELETE
@@ -2966,16 +3001,11 @@ def mor_merge_into(
     meta = read_table_meta(loc)
     cols = [f["name"] for f in meta["schema"]["fields"]]
     on_cols = list(on_cols)
-    source, update_cols = _merge_source(
+    source, update_cols, filters = _merge_source(
         meta, source_df, on_cols, update_cols, not_matched_by_source,
         mor=True,
     )
     types = {f["name"]: f["type"] for f in meta["schema"]["fields"]}
-    filters = (
-        _merge_key_filters(source, on_cols[0], types)
-        if not_matched_by_source is None
-        else ()
-    )
     entries = _live_entries(loc, meta)
     candidates = _prune(meta, entries, filters)
 

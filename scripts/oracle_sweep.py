@@ -9,8 +9,10 @@ dependencies (timestamp units, ANSI-mode division) that the tuned
 test session masks.
 
 Usage:
-    python scripts/oracle_sweep.py [SF_DIR] [CORES]
-    # defaults: /root/testdata/sf0.01, 32
+    python scripts/oracle_sweep.py [SF_DIR] [CORES] [--prefix NAME_PREFIX]
+    # defaults: the sf0.01 fixture directory, the host's core count (nproc)
+    # e.g. the 19 vendored-Iceberg oracles alone:
+    python scripts/oracle_sweep.py --prefix x_iceberg_fs_
 
 Exit code 0 iff every oracle-backed query matches. Round-6 baseline:
 236/236 green in ~240 s at sf0.01 on local[32] (and local[4]); typed
@@ -19,6 +21,8 @@ row-multiset compare shared with the test suite (compare.py).
 
 from __future__ import annotations
 
+import argparse
+import os
 import sys
 import time
 from pathlib import Path
@@ -69,10 +73,13 @@ def main() -> int:
 
     from mcp_iceberg_duckdb_spark.compare import rows_to_multiset
 
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument(
+        "--prefix", default="", help="check only queries named with this prefix"
+    )
+    args, sys.argv[1:] = ap.parse_known_args()  # leaves SF_DIR, CORES
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    cores = sys.argv[2] if len(sys.argv) > 2 else "32"
-
-    import os
+    cores = sys.argv[2] if len(sys.argv) > 2 else str(len(os.sched_getaffinity(0)))
 
     builder = SparkSession.builder.master(f"local[{cores}]").config(
         "spark.sql.shuffle.partitions", cores
@@ -93,14 +100,20 @@ def main() -> int:
 
     import __spark_entry__ as entry
 
-    queries, oracles = entry.queries(), entry.oracle_sql()
+    queries = {
+        name: q for name, q in entry.queries().items()
+        if name.startswith(args.prefix)
+    }
+    oracles = entry.oracle_sql()
     con = duckdb.connect()
     # Coexist with the (possibly large-heap) local-mode JVM: DuckDB's
     # default memory_limit assumes it owns ~80% of RAM and OOMs under
-    # pressure instead of spilling; bound it and give the spill a
-    # known temp dir (decade run r9: kcore filled the cwd-relative
-    # .tmp to disk-full, adamic-adar hit a bad allocation).
-    con.sql("SET memory_limit='32GB'")
+    # pressure instead of spilling; bound it to half the host's RAM
+    # and give the spill a known temp dir (decade run r9: kcore
+    # filled the cwd-relative .tmp to disk-full, adamic-adar hit a
+    # bad allocation).
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    con.sql(f"SET memory_limit='{max(1024, ram_mb // 2)}MB'")
     con.sql("SET temp_directory='/tmp/duckdb_spill'")
     for name in TABLES:
         con.sql(

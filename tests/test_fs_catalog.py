@@ -1771,3 +1771,85 @@ def test_merge_without_aliases_binds_source_table(cat, spark):
     )
     got = sorted(tuple(r) for r in run("SELECT * FROM t").collect())
     assert got == [(1, "a"), (2, "B"), (3, "C")]
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+@pytest.mark.parametrize("clause, kept", [
+    ("", [(2, "b"), (None, "n")]),
+    (" WHEN NOT MATCHED BY SOURCE THEN DELETE", []),
+    (
+        " WHEN NOT MATCHED BY SOURCE THEN UPDATE SET v = 'gone'",
+        [(2, "gone"), (None, "gone")],
+    ),
+])
+def test_merge_null_keys(cat, spark, mode, clause, kept):
+    """A NULL ON key matches nothing: the NULL-keyed source row is
+    inserted, and the NULL-keyed target row is kept or takes the NOT
+    MATCHED BY SOURCE action, like any other unmatched target row."""
+    run = lambda s: cat.execute(spark, s)  # noqa: E731
+    run("CREATE TABLE t (k bigint, v string)")
+    if mode == "mor":
+        run(
+            "ALTER TABLE t SET TBLPROPERTIES"
+            " ('write.merge.mode' = 'merge-on-read')"
+        )
+    run("INSERT INTO t VALUES (1, 'a'), (2, 'b'), (NULL, 'n')")
+    run(
+        "MERGE INTO t tg USING (SELECT 1 AS k, 'A' AS v"
+        " UNION ALL SELECT NULL, 'S' UNION ALL SELECT 5, 'E') sr"
+        " ON tg.k = sr.k"
+        " WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+        + clause
+    )
+    got = sorted((tuple(r) for r in run("SELECT * FROM t").collect()), key=repr)
+    want = [(1, "A"), (None, "S"), (5, "E")] + kept
+    assert got == sorted(want, key=repr)
+
+
+def test_in_list_prunes(cat, spark):
+    """``col IN (literals)`` prunes on the range [min, max] of its
+    typed values: an UPDATE rewrites only the files whose key bounds
+    meet that range; a SELECT prunes the same way, with date strings
+    typed as dates. A list of mixed types, a NULL or a non-literal
+    keeps every file."""
+    run = lambda s: cat.execute(spark, s)  # noqa: E731
+    run("CREATE TABLE default.r (k bigint, v double, d date)")
+    loc = cat._resolve("default.r")[2]
+    batches = []  # the files of each INSERT; their key ranges are disjoint
+    for lo in (0, 10, 20):
+        before = set(ice.plan_files(loc)[0])
+        run(
+            "INSERT INTO default.r VALUES "
+            + ", ".join(
+                f"({k}, {float(k)}, DATE '2023-01-{k + 1:02d}')"
+                for k in range(lo, lo + 5)
+            )
+        )
+        batches.append(len(set(ice.plan_files(loc)[0]) - before))
+    live = lambda: str(len(ice.plan_files(loc)[0]))  # noqa: E731
+    res = run("UPDATE default.r SET v = -1.0 WHERE k IN (12, 11)")[0]
+    assert 0 < int(res["rewritten_files"]) <= batches[1]
+    n = live()
+    res = run("UPDATE default.r SET v = -2.0 WHERE k IN (0, 24, 21)")[0]
+    assert res["rewritten_files"] == n  # the range [0, 24] spans all
+    for where in ("k IN (3, 3.5)", "k IN (3, NULL)", "k IN (3, v + 100)"):
+        n = live()
+        res = run(f"UPDATE default.r SET v = -3.0 WHERE {where}")[0]
+        assert res["rewritten_files"] == n, where
+    got = {r["k"]: r["v"] for r in run("SELECT k, v FROM default.r").collect()}
+    assert got[11] == got[12] == -1.0 and got[21] == -2.0 and got[3] == -3.0
+    assert got[0] == got[24] == -2.0
+    assert got[13] == 13.0 and len(got) == 15
+    rows = run(
+        "SELECT k FROM default.r WHERE d IN ('2023-01-22', '2023-01-21')"
+    ).collect()
+    assert sorted(r["k"] for r in rows) == [20, 21]
+    plan = cat.last_scan_plan["default.r"]
+    assert plan["files_planned"] < plan["files_total"]
+    meta = ice.read_table_meta(loc)
+    w = lambda s: _where_filters(_where_of(spark, s), meta)  # noqa: E731
+    assert w("k IN (7, 2, 5)") == (("k", ">=", 2), ("k", "<=", 7))
+    assert w("k IN ('2', '5')") == ()
+    assert _where_filters(_where_of(spark, "a IN (1, 2) AND b = 3")) == (
+        ("a", "in", (1, 2)), ("b", "=", 3),
+    )

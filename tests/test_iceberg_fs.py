@@ -321,6 +321,66 @@ def test_iceberg_merge_contract_errors(spark, tmp_path):
         ice.merge_into(spark, loc, full, on_cols=["k"], update_cols=["p"])
 
 
+@pytest.mark.parametrize("nmbs, kept", [
+    (None, [(2, "b"), (None, "n")]),
+    ("delete", []),
+    ("update", [(2, "gone"), (None, "gone")]),
+])
+def test_iceberg_merge_null_keys(spark, tmp_path, nmbs, kept):
+    """SQL equality in the one-join MERGE: a NULL-keyed source row is
+    inserted, and a NULL-keyed target row is never matched — it
+    passes through, or takes the NOT MATCHED BY SOURCE action like
+    any other target-only row."""
+    loc = str(tmp_path / "merge_nulls")
+    df = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (None, "n")], "k bigint, v string"
+    )
+    ice.create_table(loc, ice.spark_schema_to_iceberg(df))
+    ice.append(spark, loc, df)
+    src = spark.createDataFrame(
+        [(1, "A"), (None, "S"), (5, "E")], "k bigint, v string"
+    )
+    if nmbs == "update":
+        nmbs = {"v": F.lit("gone")}
+    ice.merge_into(spark, loc, src, on_cols=["k"],
+                   not_matched_by_source=nmbs)
+    got = sorted(
+        (tuple(r) for r in ice.read_iceberg(spark, loc).collect()),
+        key=repr,
+    )
+    want = [(1, "A"), (None, "S"), (5, "E")] + kept
+    assert got == sorted(want, key=repr)
+
+
+def test_iceberg_merge_job_count(spark, tmp_path):
+    """Pins the Spark jobs a small upsert runs: one source-validation
+    aggregate (cast check, cardinality and key bounds together) and
+    one full-outer-join write. Three separate source checks plus a
+    left join and an anti-join over the candidates used to take 10."""
+    loc = str(tmp_path / "merge_jobs")
+    df = spark.createDataFrame(
+        [(k, float(k), "ABC"[k % 3]) for k in range(30)],
+        "k bigint, v double, p string",
+    )
+    ice.create_table(loc, ice.spark_schema_to_iceberg(df), part_cols=["p"])
+    ice.append(spark, loc, df)
+    src = spark.createDataFrame(
+        [(4, 400.0, "B"), (99, 99.0, "A")], "k bigint, v double, p string"
+    )
+    sc = spark.sparkContext
+    group = f"merge-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        ice.merge_into(spark, loc, src, on_cols=["k"])
+    finally:
+        sc._jsc.clearJobGroup()
+    # the status store is fed asynchronously by the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6
+    got = {r["k"]: r["v"] for r in ice.read_iceberg(spark, loc).collect()}
+    assert len(got) == 31 and got[4] == 400.0 and got[99] == 99.0
+
+
 def test_iceberg_add_column_evolution(spark, tmp_path):
     """Metadata-only ADD COLUMN: zero data files change, old rows
     read as typed nulls, new appends carry values, and bounds
