@@ -34,8 +34,10 @@ Design choices vs the reference:
   values become Columns built from the parsed expressions, so
   row-level correctness comes from Spark; the top-level WHERE
   conjuncts that compare a column with a literal only bound the
-  rewrite set through manifest pruning. MERGE maps to
-  iceberg_fs.merge_into.
+  rewrite set through manifest pruning. UPDATE, DELETE and MERGE
+  share iceberg_fs's one row-level path: each verb is one row plan,
+  written copy-on-write or merge-on-read by the table's
+  ``write.<verb>.mode``.
 
 At 100 TB: identical plans to the underlying iceberg_fs ops —
 manifest pruning before file listing, pushdown inside the scan,
@@ -1003,86 +1005,42 @@ class FsCatalog:
             spark, sql, plan, "update", _seq(plan.subqueries()),
             lambda p: p.table(),
         )
-        part_set = ice.partition_source_cols(meta)
         canon = {f["name"].lower(): f["name"] for f in meta["schema"]["fields"]}
         assignments = {}
         for a in _seq(plan.assignments()):
+            # iceberg_fs refuses a SET target that is not a column
+            # (and, copy-on-write, a partition column)
             written = ".".join(_seq(a.key().nameParts()))
             col = canon.get(written.lower(), written)
-            if col in part_set and not mor:
-                # CoW rewrites files in place, so a row cannot move
-                # partitions; MoR appends the updated row, which
-                # re-routes it — partition SETs are legal there
-                raise ValueError(f"cannot update partition column {col!r}")
-            if written.lower() not in canon:
-                # without this, withColumn would mint a new column the
-                # final schema-projection silently drops — a no-op
-                # UPDATE instead of an error
-                raise ValueError(f"SET target {written!r} is not a column")
             assignments[col] = _column(spark, a.value())
         cond = plan.condition()
         cond = cond.get() if cond.isDefined() else None
-        pred = F.lit(True) if cond is None else _column(spark, cond)
-        prune = _where_filters(cond, meta)
-        if mor:
-            snap = ice.mor_update_where(
-                spark, loc, pred, assignments, prune_filters=prune
-            )
-            return self._ok(
-                "update",
-                rewritten_files="0",
-                added_delete_files=snap["summary"]["added-delete-files"],
-                updated_rows=snap["summary"]["added-position-deletes"],
-            )
-
-        def rewrite(src, predicate):
-            matched = F.coalesce(predicate, F.lit(False))
-            out = src
-            for col, new in assignments.items():
-                out = out.withColumn(
-                    col, F.when(matched, new).otherwise(F.col(col))
-                )
-            return out
-
-        snap = ice.cow_rewrite_where(
-            spark, loc, pred, rewrite, prune_filters=prune
-        )
-        return self._ok(
-            "update",
-            rewritten_files=snap["summary"]["deleted-data-files"],
-        )
+        return self._rewrite(spark, "update", loc, meta, mor, cond, assignments)
 
     def _delete(self, spark, sql, plan) -> list[Row]:
-        # the real engine's table property selects the delete
-        # strategy; merge-on-read writes position deletes instead of
-        # rewriting data files
         plan, _, loc, meta, mor = self._dml(
             spark, sql, plan, "delete", _seq(plan.subqueries()),
             lambda p: p.table(),
         )
-        cond = plan.condition()
-        pred = _column(spark, cond)
-        prune = _where_filters(cond, meta)
-        if mor:
-            snap = ice.mor_delete_where(
-                spark, loc, pred, prune_filters=prune
-            )
-            return self._ok(
-                "delete",
-                rewritten_files="0",
-                added_delete_files=snap["summary"]["added-delete-files"],
-                deleted_rows=snap["summary"]["added-position-deletes"],
-            )
-        snap = ice.cow_rewrite_where(
-            spark,
-            loc,
-            pred,
-            lambda src, p: src.filter(~F.coalesce(p, F.lit(False))),
-            prune_filters=prune,
-        )
+        return self._rewrite(spark, "delete", loc, meta, mor, plan.condition())
+
+    def _rewrite(self, spark, verb, loc, meta, mor, cond, assignments=None):
+        """UPDATE or DELETE through iceberg_fs's one row-level path;
+        the table's ``write.<verb>.mode`` property selects
+        merge-on-read, which writes position deletes instead of
+        rewriting data files."""
+        snap = ice._rewrite_where(
+            spark, loc, meta,
+            F.lit(True) if cond is None else _column(spark, cond),
+            assignments, _where_filters(cond, meta), mor,
+        )["summary"]
+        if not mor:
+            return self._ok(verb, rewritten_files=snap["deleted-data-files"])
         return self._ok(
-            "delete",
-            rewritten_files=snap["summary"]["deleted-data-files"],
+            verb,
+            rewritten_files="0",
+            added_delete_files=snap["added-delete-files"],
+            **{f"{verb}d_rows": snap["added-position-deletes"]},
         )
 
     def _merge(self, spark, sql, plan) -> list[Row]:

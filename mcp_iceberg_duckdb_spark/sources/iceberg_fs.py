@@ -34,12 +34,14 @@ fallback). Partition transforms: identity, bucket[N] (hidden
 murmur3 routing + equality pruning), truncate[W] (hidden
 order-preserving routing + range pruning) and year/month/day/hour.
 
-Row-level deletes come in BOTH spec shapes: copy-on-write
-(cow_rewrite_where — overwrite snapshots with a pruning-bounded
-rewrite set) and merge-on-read (mor_delete_where — position-delete
-files applied at read time via `_metadata.row_index`, zero data
-files rewritten; mor_delete_keys — sequence-scoped equality-delete
-files). Compaction materializes both delete kinds away.
+Row-level DML is one row plan per verb (DELETE/UPDATE: the live
+rows a predicate holds for; MERGE: one full outer join with the
+source) and one writer (_rewrite) with the spec's two shapes:
+copy-on-write (overwrite snapshots with a pruning-bounded rewrite
+set) and merge-on-read (position-delete files applied at read time
+via `_metadata.row_index` plus appended rows, zero data files
+rewritten). mor_delete_keys writes sequence-scoped equality-delete
+files. Compaction materializes both delete kinds away.
 """
 
 from __future__ import annotations
@@ -1524,73 +1526,77 @@ def _bounds_disjoint(lo_a, hi_a, lo_b, hi_b) -> bool:
         return False
 
 
-def _planned_field_bounds(meta, entries, planned, fids):
-    """Per-field UNION of the planned data files' value bounds:
-    fid(str) -> (min_lo, max_hi) decoded, plus the set of fids some
-    planned file has NO stats for (those fields can never prove
-    disjointness). Metadata scale, no Spark job."""
-    by_id_type = {str(f["id"]): f["type"] for f in meta["schema"]["fields"]}
-    planned = set(planned)
-    out: dict = {}
-    unbounded: set = set()
-    for e in entries:
-        if e.kind != "data" or e.path not in planned:
+def _key_range(types: dict, files, fids) -> dict:
+    """fid(str) -> decoded (lowest lower, highest upper) bound over
+    ``files`` (manifest data_file records), for each of ``fids`` that
+    every one of them carries both bounds for: a field some file has
+    no stats for, or of no primitive type, can never prove
+    disjointness. Metadata scale, no Spark job."""
+    out = {}
+    for fid in fids:
+        t = types.get(fid)
+        if not _is_primitive(t):
             continue
-        lbs = e.file.get("lower_bounds") or {}
-        ubs = e.file.get("upper_bounds") or {}
-        for fid in fids:
-            t = by_id_type.get(fid)
-            lo = decode_bound(t, lbs.get(fid)) if t else None
-            hi = decode_bound(t, ubs.get(fid)) if t else None
+        los, his = [], []
+        for f in files:
+            lo = decode_bound(t, (f.get("lower_bounds") or {}).get(fid))
+            hi = decode_bound(t, (f.get("upper_bounds") or {}).get(fid))
             if lo is None or hi is None:
-                unbounded.add(fid)
-                continue
-            cur = out.get(fid)
-            out[fid] = (
-                lo if cur is None else min(cur[0], lo),
-                hi if cur is None else max(cur[1], hi),
-            )
-    return out, unbounded
+                break
+            los.append(lo)
+            his.append(hi)
+        else:
+            if los:
+                out[fid] = (min(los), max(his))
+    return out
+
+
+def _eq_delete_misses(types: dict, delete: dict, ids, rng: dict) -> bool:
+    """True when the equality-delete file ``delete`` (its manifest
+    data_file record) provably masks no row whose keys lie in ``rng``
+    (a _key_range): for some equality field the delete records zero
+    NULL keys AND its [lo, hi] misses the range. The one bounds test
+    of read-time scoping (_scope_eq_deletes_by_bounds) and of the
+    conversion's candidates (_eq_candidate_files). Every guard keeps:
+    NULL delete keys (null-safe equality matches outside any range),
+    an unknown null count, a missing bound, a nested or un-comparable
+    type — correctness never depends on skipping."""
+    nulls = delete.get("null_value_counts") or {}
+    for i in ids:
+        fid = str(i)
+        t = types.get(fid)
+        if not _is_primitive(t) or nulls.get(fid) != 0:
+            continue
+        if _bounds_disjoint(
+            decode_bound(t, (delete.get("lower_bounds") or {}).get(fid)),
+            decode_bound(t, (delete.get("upper_bounds") or {}).get(fid)),
+            *rng.get(fid, (None, None)),
+        ):
+            return True
+    return False
 
 
 def _scope_eq_deletes_by_bounds(meta, entries, eq, files):
     """Drop equality-delete files whose KEY ranges are PROVABLY
-    disjoint from every planned data file's (the eq-delete analog of
-    position-delete path-bounds scoping): for some equality field,
-    the delete file has zero NULL keys recorded AND its [lo, hi]
-    misses the planned union range entirely — then no delete row can
-    null-safe-match any planned row. Every guard degrades to KEEP (no
-    bounds, unknown null counts, a planned file without stats,
-    un-comparable types), so correctness never depends on the
-    scoping — only the per-key-set anti-join count does."""
+    disjoint from the union range of the planned data ``files`` (the
+    eq-delete analog of position-delete path-bounds scoping) — then no
+    delete row can null-safe-match any planned row. Correctness never
+    depends on the scoping; only the per-key-set anti-join count
+    does."""
     if not eq:
         return eq
-    info = {e.path: e.file for e in entries if e.kind == "equality"}
-    by_id_type = {str(f["id"]): f["type"] for f in meta["schema"]["fields"]}
-    fids = {str(i) for _, _, ids in eq for i in ids}
-    pb, unbounded = _planned_field_bounds(meta, entries, files, fids)
-    kept = []
-    for path, sq, ids in eq:
-        d = info.get(path, {})
-        lbs = d.get("lower_bounds") or {}
-        ubs = d.get("upper_bounds") or {}
-        nulls = d.get("null_value_counts") or {}
-        skip = False
-        for i in ids:
-            fid = str(i)
-            if fid in unbounded or fid not in pb:
-                continue
-            if nulls.get(fid) != 0:
-                continue  # NULL delete keys match outside any range
-            t = by_id_type.get(fid)
-            dlo = decode_bound(t, lbs.get(fid)) if t else None
-            dhi = decode_bound(t, ubs.get(fid)) if t else None
-            if _bounds_disjoint(dlo, dhi, *pb[fid]):
-                skip = True
-                break
-        if not skip:
-            kept.append((path, sq, ids))
-    return kept
+    types = {str(f["id"]): f["type"] for f in meta["schema"]["fields"]}
+    info = {e.path: e.file for e in entries}
+    planned = set(files)
+    rng = _key_range(
+        types,
+        [e.file for e in entries if e.kind == "data" and e.path in planned],
+        {str(i) for _, _, ids in eq for i in ids},
+    )
+    return [
+        d for d in eq
+        if not _eq_delete_misses(types, info.get(d[0], {}), d[2], rng)
+    ]
 
 
 # delete relations at or under this byte size broadcast into the
@@ -1766,11 +1772,11 @@ def _apply_eq_deletes(spark, df, ice_schema, eq_deletes, file_seqs,
 def _read_live(spark, loc, meta, files, entries, keep_meta_cols=False):
     """``files`` read at the current schema with BOTH v2 delete kinds
     of ``entries`` applied — scan-scoped position deletes and
-    sequence-scoped equality deletes. The shared read head of CoW
-    rewrites, MERGE, compaction and (with ``keep_meta_cols``, which
-    keeps __fp/__pos) every merge-on-read writer: a row already
-    masked must not be rewritten, re-deleted, or counted as existing
-    by a not-matched anti-join."""
+    sequence-scoped equality deletes. The shared read head of the
+    row-level writer (_rewrite; with ``keep_meta_cols``, which keeps
+    __fp/__pos, for merge-on-read) and of compaction: a row already
+    masked must not be rewritten, re-deleted, or matched by a MERGE
+    source."""
     return _read_files(
         spark,
         loc,
@@ -1815,98 +1821,20 @@ def _residual_filters(filters, ice_schema):
     return out
 
 
-def _conjunction(filters):
+def _filters_predicate(ice_schema: dict, filters):
+    """The (column, op, value) conjunction as a row-level Spark
+    predicate, its literals re-typed by _residual_filters (TRUE when
+    there are no filters)."""
+    import operator
     from functools import reduce
 
     from pyspark.sql import functions as F
 
-    ops = {
-        "=": lambda c, v: F.col(c) == v,
-        "<": lambda c, v: F.col(c) < v,
-        "<=": lambda c, v: F.col(c) <= v,
-        ">": lambda c, v: F.col(c) > v,
-        ">=": lambda c, v: F.col(c) >= v,
-    }
-    return reduce(
-        lambda a, b: a & b,
-        [ops[op](col, val) for col, op, val in filters],
-    )
-
-
-def delete_where(spark, loc: str, filters, mode: str = "cow") -> dict:
-    """Row-level DELETE, two spec-backed strategies:
-
-    ``mode="cow"`` (v1 overwrite pattern, default): files whose
-    partition/bounds CAN contain matching rows are rewritten without
-    them; provably-unaffected files survive untouched — the same
-    manifest pruning that accelerates reads bounds the rewrite set.
-    Commits an 'overwrite' snapshot whose manifest carries the
-    untouched files as EXISTING, the rewrites as ADDED, and the
-    replaced files as DELETED (manifest compaction into one manifest,
-    spec-legal).
-
-    ``mode="mor"`` (v2 merge-on-read): NO data file is rewritten —
-    matching rows' (file, position) pairs are written to position-
-    delete files applied at read time. O(matches) write cost instead
-    of O(candidate files); the trade the spec makes for
-    delete-heavy / rewrite-expensive tables."""
-    from pyspark.sql import functions as F
-
-    if mode not in ("cow", "mor"):
-        raise ValueError(f"unknown delete mode {mode!r}")
-    pred = _filters_predicate(read_table_meta(loc)["schema"], filters)
-    if mode == "mor":
-        return mor_delete_where(spark, loc, pred, prune_filters=filters)
-    # null-safe: a null predicate keeps the row — DELETE removes only
-    # proven matches
-    return cow_rewrite_where(
-        spark,
-        loc,
-        pred,
-        lambda src, conj: src.filter(~F.coalesce(conj, F.lit(False))),
-        prune_filters=filters,
-    )
-
-
-def _filters_predicate(ice_schema: dict, filters):
-    """The (column, op, value) conjunction as a row-level Spark
-    predicate (TRUE when there are no filters)."""
-    from pyspark.sql import functions as F
-
-    residual = _residual_filters(filters, ice_schema)
-    return _conjunction(residual) if residual else F.lit(True)
-
-
-def mor_delete_where(spark, loc: str, predicate, prune_filters=()) -> dict:
-    """Merge-on-read DELETE: evaluate ``predicate`` (any Spark
-    boolean Column) over the pruning-bounded candidate files WITH
-    row positions (`_metadata.row_index`), write the matches as
-    position-delete parquet under ``<loc>/deletes/``, and commit a
-    'delete' snapshot whose manifest list carries the previous
-    snapshot's manifests verbatim plus one content=1 delete manifest.
-    Data files are untouched — the plan/no-rewrite property tests
-    pin. Rows already masked by earlier delete files are excluded, so
-    re-deleting is idempotent (no duplicate positions).
-
-    At 100 TB: the write is proportional to MATCHED ROWS, not to the
-    bytes of files containing them — deleting one row from a 1 GB
-    file costs ~40 bytes of delete file instead of a 1 GB rewrite;
-    reads pay one (usually broadcast) anti-join until compaction
-    folds the deletes away. Reference contrast: the reference's only
-    row-level path is DuckDB over a full table download
-    (IcebergConnection.py:107-177)."""
-    from pyspark.sql import functions as F
-
-    meta = read_table_meta(loc)
-    entries = _live_entries(loc, meta)
-    candidates = _prune(meta, entries, prune_filters)
-    new_files: list[str] = []
-    n_rows = 0
-    if candidates:
-        df = _read_live(spark, loc, meta, candidates, entries, True)
-        matched = df.filter(F.coalesce(predicate, F.lit(False)))
-        new_files, n_rows = _write_position_deletes(spark, loc, matched)
-    return _commit_mor(loc, meta, new_files, n_rows, [], "delete")
+    ops = {"=": operator.eq, "<": operator.lt, "<=": operator.le,
+           ">": operator.gt, ">=": operator.ge}
+    preds = [ops[op](F.col(col), val)
+             for col, op, val in _residual_filters(filters, ice_schema)]
+    return reduce(operator.and_, preds) if preds else F.lit(True)
 
 
 def _write_position_deletes(spark, loc: str, matched, n_files=None):
@@ -1931,53 +1859,194 @@ def _write_position_deletes(spark, loc: str, matched, n_files=None):
     return [p for p, _ in written], sum(n for _, n in written)
 
 
+class _RowPlan(NamedTuple):
+    """One row-level statement's rows, whatever the write mode (the
+    shape of Spark's RewriteRowLevelCommand). ``rows`` are the
+    candidate files' live rows — for a MERGE, joined with the source;
+    a row whose ``__fp`` (file path, read by merge-on-read) is set is
+    a target row. Per row, ``changed`` says whether the statement
+    updates, deletes or inserts it, ``keeps`` whether a changed row
+    survives (None: none does, a delete), and ``out`` projects the
+    surviving row. ``inserts``: rows can come from outside the
+    target (a MERGE upsert's source), so there is something to write
+    even without candidate files."""
+
+    rows: object  # DataFrame
+    changed: object  # boolean Column
+    keeps: object  # boolean Column, or None
+    out: list
+    inserts: bool = False
+
+    def replacement(self):
+        """Every row the statement leaves in place (copy-on-write)."""
+        keep = ~self.changed if self.keeps is None else (
+            ~self.changed | self.keeps)
+        return self.rows.filter(keep).select(*self.out)
+
+
+def _rewrite(spark, loc: str, meta: dict, filters, plan_fn, mor: bool):
+    """The one writer of every row-level DELETE, UPDATE and MERGE:
+    walk the head snapshot once, read the live rows of the files
+    ``filters`` may match (earlier deletes applied: a masked row is
+    never rewritten, re-deleted or matched), build the statement's
+    _RowPlan with ``plan_fn`` and write it in one of two shapes.
+
+    - copy-on-write (Spark's ReplaceData): the candidates' replacement
+      is written and an 'overwrite' snapshot swaps it in; untouched
+      files are carried as EXISTING.
+    - merge-on-read (WriteDelta): the target rows the statement
+      changes become position deletes and the surviving changed rows
+      are appended, in one 'delete' (nothing survives) or 'overwrite'
+      snapshot. No data file is rewritten, so the write is O(changed
+      rows), not O(candidate file bytes); reads apply the deletes
+      until compaction materializes them. Changed rows that feed
+      both writes are persisted once and always released."""
+    from pyspark.sql import functions as F
+
+    entries = _live_entries(loc, meta)
+    candidates, untouched = _split(meta, entries, filters)
+    plan = plan_fn(_read_live(spark, loc, meta, candidates, entries, mor))
+    new_files: list[str] = []
+    if not mor:
+        if candidates or plan.inserts:
+            new_files = _write_replacement(
+                spark, loc, plan.replacement(), meta)
+        return _commit_overwrite(
+            loc, meta, entries, candidates, untouched, new_files)
+    changed = plan.rows.filter(plan.changed)
+    if plan.keeps is not None:  # read twice: deletes, then appends
+        changed = changed.persist()
+    del_files, n_rows = [], 0
+    try:
+        if candidates:
+            del_files, n_rows = _write_position_deletes(
+                spark, loc, changed.filter(F.col("__fp").isNotNull()))
+        if plan.keeps is not None and (n_rows or plan.inserts):
+            new_files = _write_replacement(spark, loc, changed.filter(
+                plan.keeps).select(*plan.out), meta)
+    finally:
+        changed.unpersist()
+    return _commit_mor(loc, meta, del_files, n_rows, new_files,
+                       "delete" if plan.keeps is None else "overwrite")
+
+
+def _rewrite_where(spark, loc: str, meta: dict, predicate, assignments=None,
+                   prune_filters=(), mor: bool = False) -> dict:
+    """DELETE (no ``assignments``) or UPDATE of the live rows
+    ``predicate`` (any Spark boolean Column) holds for — the path of
+    every WHERE writer and of fs_catalog's UPDATE and DELETE. A NULL
+    predicate changes nothing: only proven matches. ``assignments``
+    = {column: Spark Column or literal}; copy-on-write refuses
+    partition-source columns (it rewrites files in place), while
+    merge-on-read appends the updated row, which re-routes it.
+    ``prune_filters``, a conservative (col, op, literal) conjunction
+    extracted from the predicate, bound the candidate files.
+    Copy-on-write runs through cow_rewrite_where, the public CoW
+    entry, which perfbench's traced run wraps to count commits and
+    rewritten files."""
+    from pyspark.sql import functions as F
+
+    cols = [f["name"] for f in meta["schema"]["fields"]]
+    new = {c: F.lit(v) for c, v in (assignments or {}).items()}
+    bad = set(new) - set(cols)
+    if bad:
+        raise ValueError(f"SET target is not a column: {sorted(bad)}")
+    bad = partition_source_cols(meta).intersection(new)
+    if bad and not mor:
+        raise ValueError(f"cannot update partition columns {sorted(bad)}")
+
+    def rows(live, pred):
+        hit = F.coalesce(pred, F.lit(False))
+        out = [F.when(hit, new[c]).otherwise(F.col(c)).alias(c)
+               if c in new else c for c in cols]
+        return _RowPlan(
+            live, hit, None if assignments is None else F.lit(True), out)
+
+    if mor:
+        return _rewrite(spark, loc, meta, prune_filters,
+                        lambda live: rows(live, predicate), mor=True)
+    return cow_rewrite_where(
+        spark, loc, predicate,
+        lambda live, pred: rows(live, pred).replacement(), prune_filters)
+
+
+def cow_rewrite_where(
+    spark, loc: str, predicate, rewrite_fn, prune_filters=()
+) -> dict:
+    """Generalized copy-on-write rewrite: ``rewrite_fn(src_df,
+    predicate)`` returns the replacement rows of the candidate files
+    — the files ``prune_filters`` (a conservative (col, op, literal)
+    conjunction) may match; provably-unaffected files survive
+    untouched. Correctness never depends on the pruning, only the
+    rewrite bound does. Commits an 'overwrite' snapshot."""
+    from pyspark.sql import functions as F
+
+    meta = read_table_meta(loc)
+    cols = [f["name"] for f in meta["schema"]["fields"]]
+    # a plan that changes no row: the rewrite's rows pass through
+    return _rewrite(spark, loc, meta, prune_filters, lambda live: _RowPlan(
+        rewrite_fn(live, predicate), F.lit(False), None, cols), mor=False)
+
+
+def delete_where(spark, loc: str, filters, mode: str = "cow") -> dict:
+    """Row-level DELETE of the rows matching the (column, op, value)
+    ``filters`` conjunction, two spec-backed strategies:
+
+    ``mode="cow"`` (v1 overwrite pattern, default): files whose
+    partition/bounds CAN contain matching rows are rewritten without
+    them; provably-unaffected files survive untouched — the same
+    manifest pruning that accelerates reads bounds the rewrite set.
+
+    ``mode="mor"`` (v2 merge-on-read): NO data file is rewritten —
+    matching rows' (file, position) pairs are written to position-
+    delete files applied at read time. O(matches) write cost instead
+    of O(candidate files); the trade the spec makes for
+    delete-heavy / rewrite-expensive tables."""
+    if mode not in ("cow", "mor"):
+        raise ValueError(f"unknown delete mode {mode!r}")
+    meta = read_table_meta(loc)
+    pred = _filters_predicate(meta["schema"], filters)
+    return _rewrite_where(spark, loc, meta, pred, None, filters, mode == "mor")
+
+
+def mor_delete_where(spark, loc: str, predicate, prune_filters=()) -> dict:
+    """Merge-on-read DELETE of the rows ``predicate`` (any Spark
+    boolean Column) holds for: their positions become position-delete
+    parquet under ``<loc>/deletes/`` in a 'delete' snapshot that
+    carries the previous manifests verbatim. Data files are untouched,
+    and rows already masked are excluded, so re-deleting is
+    idempotent. Deleting one row from a 1 GB file costs ~40 bytes of
+    delete file instead of a 1 GB rewrite. Reference contrast: the
+    reference's only row-level path is DuckDB over a full table
+    download (IcebergConnection.py:107-177)."""
+    return _rewrite_where(spark, loc, read_table_meta(loc), predicate,
+                          None, prune_filters, mor=True)
+
+
+def update_where(spark, loc: str, filters, assignments) -> dict:
+    """Copy-on-write UPDATE: rewrite candidate files with
+    ``assignments`` ({column: Spark Column or literal}) applied to
+    rows matching the (column, op, value) ``filters`` conjunction,
+    all other rows unchanged. Same pruning-bounded rewrite and
+    overwrite snapshot as delete_where. Updating partition-source
+    columns is rejected (rows would need re-routing)."""
+    meta = read_table_meta(loc)
+    pred = _filters_predicate(meta["schema"], filters)
+    return _rewrite_where(spark, loc, meta, pred, assignments, filters)
+
+
 def mor_update_where(
     spark, loc: str, predicate, assignments, prune_filters=()
 ) -> dict:
     """Merge-on-read UPDATE (the v2 ``write.update.mode=
-    merge-on-read`` path): matched rows are position-DELETED and
-    their updated versions APPENDED as new data files in ONE
-    'overwrite' snapshot — no candidate file is rewritten, so the
-    write cost is O(matched rows) like mor_delete_where, not
-    O(candidate file bytes) like the CoW path.
-
-    Because the updated rows are appended (and routed by
-    _write_replacement's hidden-partition materialization), MoR
-    UPDATE may legally change PARTITION-SOURCE columns — the row
-    simply lands in its new partition — which the CoW path must
-    reject (it rewrites files in place). ``assignments`` = {column:
-    Spark Column or literal}."""
-    from pyspark.sql import Column
-    from pyspark.sql import functions as F
-
-    meta = read_table_meta(loc)
-    schema_cols = {f["name"] for f in meta["schema"]["fields"]}
-    bad = set(assignments) - schema_cols
-    if bad:
-        raise ValueError(f"SET targets are not columns: {sorted(bad)}")
-    cols = [f["name"] for f in meta["schema"]["fields"]]
-    entries = _live_entries(loc, meta)
-    candidates = _prune(meta, entries, prune_filters)
-    del_files: list[str] = []
-    n_rows = 0
-    data_files: list[str] = []
-    if candidates:
-        df = _read_live(spark, loc, meta, candidates, entries, True)
-        matched = df.filter(F.coalesce(predicate, F.lit(False))).persist()
-        del_files, n_rows = _write_position_deletes(spark, loc, matched)
-        if n_rows:
-            updated = matched
-            for col, val in assignments.items():
-                updated = updated.withColumn(
-                    col, val if isinstance(val, Column) else F.lit(val)
-                )
-            data_files = _write_replacement(
-                spark, loc, updated.select(*cols), meta
-            )
-        matched.unpersist()
-    return _commit_mor(
-        loc, meta, del_files, n_rows, data_files, "overwrite"
-    )
+    merge-on-read`` path): matched rows are position-DELETED and their
+    updated versions APPENDED in ONE 'overwrite' snapshot — no
+    candidate file is rewritten. The appended rows are routed by
+    _write_replacement's partition materialization, so MoR UPDATE
+    may change PARTITION-SOURCE columns, which the CoW path rejects.
+    ``assignments`` = {column: Spark Column or literal}."""
+    return _rewrite_where(spark, loc, read_table_meta(loc), predicate,
+                          assignments, prune_filters, mor=True)
 
 
 def _sql_name(name: str) -> str:
@@ -2270,38 +2339,6 @@ def _commit_mor(
     )
 
 
-def update_where(spark, loc: str, filters, assignments) -> dict:
-    """Copy-on-write UPDATE: rewrite candidate files with
-    ``assignments`` ({column: Spark Column or literal}) applied to
-    rows matching the filter conjunction, all other rows byte-
-    identical. Same pruning-bounded rewrite + overwrite snapshot as
-    delete_where. Updating identity-partition columns is rejected
-    (it would require routing rows across partitions — out of scope
-    for the vendored path)."""
-    from pyspark.sql import Column
-    from pyspark.sql import functions as F
-
-    meta = read_table_meta(loc)
-    bad = partition_source_cols(meta).intersection(assignments)
-    if bad:
-        raise ValueError(f"cannot update partition columns {sorted(bad)}")
-
-    def rewrite(src, conj):
-        matched = F.coalesce(conj, F.lit(False))
-        out = src
-        for col, val in assignments.items():
-            new = val if isinstance(val, Column) else F.lit(val)
-            out = out.withColumn(
-                col, F.when(matched, new).otherwise(F.col(col))
-            )
-        return out
-
-    return cow_rewrite_where(
-        spark, loc, _filters_predicate(meta["schema"], filters), rewrite,
-        prune_filters=filters,
-    )
-
-
 _ICE_TO_SPARK = {
     "long": "bigint",
     "int": "int",
@@ -2358,6 +2395,14 @@ def _read_files(spark, loc: str, files, meta, deletes=None,
 
     ice_schema = meta["schema"]
     cols = [f["name"] for f in ice_schema["fields"]]
+    if not files:
+        # a typed empty relation; limit(0) lets the optimizer fold it
+        # into an empty LocalRelation, so a join with it runs no job
+        return spark.createDataFrame([], ", ".join(
+            [f"`{f['name']}` {ice_to_spark_type(f['type'])}"
+             for f in ice_schema["fields"]]
+            + (["__fp string", "__pos bigint"] if keep_meta_cols else [])
+        )).limit(0)
     schema_log = meta.get("schema-log") or []
     need_meta = bool(deletes or eq_deletes or keep_meta_cols)
 
@@ -2490,8 +2535,8 @@ def _commit_overwrite(
     DELETED, ``new_files`` ADDED, ``untouched`` carried as EXISTING —
     one compacted manifest (spec-legal), new manifest list, new
     metadata version. ``entries`` is the statement's walk of the head
-    ``meta`` commits against. Shared by DELETE/UPDATE
-    (cow_rewrite_where), MERGE (merge_into, merge_delete), compaction
+    ``meta`` commits against. Shared by the row-level writer's
+    copy-on-write shape (_rewrite: DELETE, UPDATE, MERGE), compaction
     (compact_files) and overwrite_table.
 
     Merge-on-read interplay: live position-delete files that still
@@ -2561,8 +2606,6 @@ def read_iceberg(spark, loc: str, snapshot_id=None, filters=(), stats_out=None):
     pruning still applies on the surviving files). ``stats_out``
     (optional dict) receives {files_planned, files_total} so callers
     (fs_catalog SELECT views) can surface/assert the pruning."""
-    from pyspark.sql import functions as F
-
     meta = read_table_meta(loc)
     entries = _live_entries(loc, meta, snapshot_id)
     files = _prune(meta, entries, filters)
@@ -2570,10 +2613,7 @@ def read_iceberg(spark, loc: str, snapshot_id=None, filters=(), stats_out=None):
         stats_out["files_planned"] = len(files)
         stats_out["files_total"] = sum(e.kind == "data" for e in entries)
     if not files:
-        return spark.createDataFrame([], schema=", ".join(
-            f"{f['name']} {ice_to_spark_type(f['type'])}"
-            for f in meta["schema"]["fields"]
-        ))
+        return _read_files(spark, loc, files, meta)
     # sequence numbers AT THE REQUESTED SNAPSHOT: a time-travel read
     # of files since compacted away must resolve its schema
     # generation and equality deletes from that snapshot's plan
@@ -2598,17 +2638,8 @@ def read_iceberg(spark, loc: str, snapshot_id=None, filters=(), stats_out=None):
         eq_deletes=eq or None,
         file_seqs=file_seqs,
     )
-    for col, op, val in _residual_filters(filters, meta["schema"]):
-        if op == "=":
-            df = df.filter(F.col(col) == val)
-        elif op == "<":
-            df = df.filter(F.col(col) < val)
-        elif op == "<=":
-            df = df.filter(F.col(col) <= val)
-        elif op == ">":
-            df = df.filter(F.col(col) > val)
-        elif op == ">=":
-            df = df.filter(F.col(col) >= val)
+    if filters:
+        df = df.filter(_filters_predicate(meta["schema"], filters))
     return df
 
 
@@ -2622,26 +2653,15 @@ def merge_into(spark, loc: str, source_df, on_cols, update_cols=None,
     replaced by the source's values; WHEN NOT MATCHED the source row
     is inserted (INSERT *, so ``source_df`` must carry every table
     column; _merge_source casts it to the table's types). Default
-    ``update_cols`` = every non-key, non-partition column.
+    ``update_cols`` = every non-key, non-partition column; partition
+    columns cannot be updated (identity routing only, as in
+    update_where). The plan is _merge's one full outer join.
 
     Scale shape: the rewrite set is BOUNDED BY MANIFEST PRUNING on
-    the source's key range — the source-validation aggregate also
-    returns the first join key's min and max, which prune candidate
-    files on their stored column bounds, so merging a day's increment
-    into a 100 TB table rewrites only the files whose key bounds
-    overlap the increment. The replacement is ONE full outer join of
-    the candidates' live rows with the source, the plan Spark's
-    RewriteMergeIntoTable builds for a group-based MERGE with a NOT
-    MATCHED clause: a row on both sides is matched and takes the
-    source's ``update_cols``; a source-only row is an insert; a
-    target-only row passes through. Any target row matching a source
-    key lives in a candidate file (bounds pruning is conservative),
-    so a source-only row is exactly a not-matched one. SQL equality:
-    a NULL key matches nothing, so a NULL-keyed source row is
-    inserted and a NULL-keyed target row is never matched. Partition
-    columns cannot be updated (identity routing only, same contract
-    as update_where). Reference parity: the reference routes
-    MERGE-shaped DML to DuckDB over its full table download
+    the source's key range, so merging a day's increment into a
+    100 TB table rewrites only the files whose key bounds overlap the
+    increment. Reference parity: the reference routes MERGE-shaped
+    DML to DuckDB over its full table download
     (IcebergConnection.py:107-177); here it is a real Iceberg
     overwrite commit.
 
@@ -2652,57 +2672,110 @@ def merge_into(spark, loc: str, source_df, on_cols, update_cols=None,
     rewrite set becomes all live files — bounds pruning cannot apply
     (a vanished key can hide in any file); that cost is inherent to
     the semantics, the same in real engines."""
+    return _merge(spark, loc, source_df, on_cols, update_cols,
+                  not_matched_by_source)
+
+
+def mor_merge_into(spark, loc: str, source_df, on_cols, update_cols=None,
+                   not_matched_by_source=None) -> dict:
+    """Merge-on-read MERGE (upsert): the same full outer join as
+    merge_into, written as a delta — matched target rows are
+    position-DELETED and their merged versions APPENDED together with
+    the not-matched source rows, in one 'overwrite' snapshot with zero
+    data files rewritten. Same contracts and checks as merge_into,
+    except that the ON keys cannot be updated while partition
+    sources may be (passed explicitly): merged rows are appended and
+    re-routed. Merging a day's increment costs position deletes and
+    appends proportional to the INCREMENT, not to the candidate
+    files' bytes. ``not_matched_by_source`` ('delete' or {column:
+    Column}): a vanished target row becomes a POSITION DELETE (and
+    for the update form is re-appended with the assignments applied);
+    every live file is a candidate, but the write still scales with
+    the matched + vanished rows, not the table."""
+    return _merge(spark, loc, source_df, on_cols, update_cols,
+                  not_matched_by_source, mor=True)
+
+
+def merge_delete(spark, loc: str, source_df, on_cols) -> dict:
+    """MERGE ... WHEN MATCHED THEN DELETE (copy-on-write): target
+    rows whose ``on_cols`` equal a source row's are removed; nothing
+    is inserted. SQL equality semantics (a NULL key never matches —
+    unlike the spec's null-safe EQUALITY-delete files). The keys are
+    cast to the table's types and the rewrite set is bounds-pruned on
+    their range by the same one-action _merge_source as merge_into;
+    the plan is _merge's join with the distinct keys, target rows
+    with a match dropped."""
+    return _merge(spark, loc, source_df, on_cols, upsert=False)
+
+
+def mor_merge_delete(spark, loc: str, source_df, on_cols) -> dict:
+    """MERGE ... WHEN MATCHED THEN DELETE, merge-on-read: the matched
+    rows of merge_delete's plan become POSITION deletes — zero data
+    files rewritten, cost proportional to the matches."""
+    return _merge(spark, loc, source_df, on_cols, mor=True, upsert=False)
+
+
+def _merge(spark, loc: str, source_df, on_cols, update_cols=None,
+           nmbs=None, mor: bool = False, upsert: bool = True) -> dict:
+    """The one MERGE plan, in either write mode (_rewrite): a full
+    outer join of the candidates' live rows with the source, the plan
+    Spark's RewriteMergeIntoTable builds for a MERGE with a NOT
+    MATCHED clause. A row on both sides is matched and takes the
+    source's ``update_cols``; a source-only row is an insert; a
+    target-only row passes through, or takes the NOT MATCHED BY SOURCE
+    action ``nmbs``. Any target row matching a source key lives in a
+    candidate file (bounds pruning is conservative), so a source-only
+    row is exactly a not-matched one. SQL equality: a NULL key
+    matches nothing, so a NULL-keyed source row is inserted and a
+    NULL-keyed target row is never matched. A WHEN MATCHED THEN
+    DELETE (``upsert=False``) left-joins the distinct source keys
+    instead and deletes the matched rows."""
     from pyspark.sql import functions as F
 
     meta = read_table_meta(loc)
     types = {f["name"]: f["type"] for f in meta["schema"]["fields"]}
     on_cols = list(on_cols)
-    nmbs = not_matched_by_source
     source, update_cols, filters = _merge_source(
-        meta, source_df, on_cols, update_cols, nmbs, mor=False,
-    )
-    entries = _live_entries(loc, meta)
-    candidates, untouched = _split(meta, entries, filters)
-    replacement = source
-    if candidates:
-        tgt = _read_live(spark, loc, meta, candidates, entries)
+        meta, source_df, on_cols, update_cols, nmbs, mor=mor, upsert=upsert)
+    rest = [c for c in source.columns if c not in on_cols]
+    if not upsert:
+        source = source.distinct()
+
+    def rows(live):
         # the target keeps its column names (NOT MATCHED BY SOURCE
         # assignments read them); the source's are renamed apart, and
         # each side carries a marker that is NULL where it is absent
-        rest = [c for c in types if c not in on_cols]
-        joined = tgt.withColumn("__t", F.lit(True)).join(
-            source.select(
-                *on_cols,
-                *[F.col(c).alias(f"__s_{c}") for c in rest],
-                F.lit(True).alias("__s"),
-            ),
-            on=on_cols,
-            how="full",
-        )
-        in_src = F.col("__s").isNotNull()
-        in_tgt = F.col("__t").isNotNull()
-        out = []
-        for c in types:
-            if c in on_cols:  # the USING join coalesces the keys
-                out.append(F.col(c))
-                continue
+        joined = live.withColumn("__t", F.lit(True)).join(source.select(
+            *on_cols, *[F.col(c).alias(f"__s_{c}") for c in rest],
+            F.lit(True).alias("__s"),
+        ), on=on_cols, how="full" if upsert else "left")
+        in_src, in_tgt = F.col("__s").isNotNull(), F.col("__t").isNotNull()
+        if not upsert:
+            return _RowPlan(joined, in_src, None, list(types))
+
+        def value(c):
+            # an update column takes the source's value on a matched or
+            # inserted row, any other the target's on a matched or
+            # passed-through row
             t, s = F.col(c), F.col(f"__s_{c}")
-            if c in update_cols:  # matched or inserted: the source's
-                v = F.when(in_src, s).otherwise(t)
-            else:  # matched or passed through: the target's
-                v = F.when(in_tgt, t).otherwise(s)
+            v = (F.when(in_src, s).otherwise(t) if c in update_cols
+                 else F.when(in_tgt, t).otherwise(s))
             if isinstance(nmbs, dict) and c in nmbs:
                 v = F.when(in_src, v).otherwise(
-                    nmbs[c].cast(ice_to_spark_type(types[c]))
-                )
-            out.append(v.alias(c))
-        if nmbs == "delete":
-            joined = joined.filter(in_src)
-        replacement = joined.select(*out)
-    new_files = _write_replacement(spark, loc, replacement, meta)
-    return _commit_overwrite(
-        loc, meta, entries, candidates, untouched, new_files
-    )
+                    nmbs[c].cast(ice_to_spark_type(types[c])))
+            return v.alias(c)
+
+        # the USING join coalesces the keys. Without NOT MATCHED BY
+        # SOURCE a target-only row is untouched; with it every row
+        # changes, and "delete" drops the target-only ones
+        return _RowPlan(
+            joined, in_src if nmbs is None else F.lit(True),
+            in_src if nmbs == "delete" else F.lit(True),
+            [F.col(c) if c in on_cols else value(c) for c in types],
+            inserts=True,
+        )
+
+    return _rewrite(spark, loc, meta, filters, rows, mor)
 
 
 # the key types whose min/max bounds-prune a MERGE's candidate files
@@ -2908,155 +2981,6 @@ def set_table_property(loc: str, key: str, value: str) -> dict:
     meta.setdefault("properties", {})[str(key)] = str(value)
     _commit_meta(loc, meta)
     return meta["properties"]
-
-
-def merge_delete(spark, loc: str, source_df, on_cols) -> dict:
-    """MERGE ... WHEN MATCHED THEN DELETE (copy-on-write): target
-    rows whose ``on_cols`` equal a source row's are removed; nothing
-    is inserted. SQL equality semantics (a NULL key never matches —
-    unlike the spec's null-safe EQUALITY-delete files). The keys are
-    cast to the table's types and the rewrite set is bounds-pruned on
-    their range by the same one-action _merge_source as merge_into —
-    deleting a day's tombstone batch from a 100 TB table rewrites
-    only the files whose key bounds overlap it."""
-    meta = read_table_meta(loc)
-    cols = [f["name"] for f in meta["schema"]["fields"]]
-    on_cols = list(on_cols)
-    keys, _, filters = _merge_source(meta, source_df, on_cols, upsert=False)
-    keys = keys.distinct()
-    entries = _live_entries(loc, meta)
-    candidates, untouched = _split(meta, entries, filters)
-    new_files: list[str] = []
-    if candidates:
-        tgt = _read_live(spark, loc, meta, candidates, entries)
-        # no forced broadcast: a large USING relation would OOM the
-        # driver; AQE picks broadcast at runtime when the distinct
-        # key set is actually small
-        replacement = tgt.join(
-            keys, on=on_cols, how="left_anti"
-        ).select(*cols)
-        new_files = _write_replacement(spark, loc, replacement, meta)
-    return _commit_overwrite(
-        loc, meta, entries, candidates, untouched, new_files
-    )
-
-
-def mor_merge_delete(spark, loc: str, source_df, on_cols) -> dict:
-    """MERGE ... WHEN MATCHED THEN DELETE, merge-on-read: matched
-    rows become POSITION deletes — zero data files rewritten, cost
-    proportional to the matches. Candidates are bounds-pruned on the
-    source key range (_merge_source, as in merge_delete); SQL equality
-    (NULL keys never match)."""
-    meta = read_table_meta(loc)
-    on_cols = list(on_cols)
-    keys, _, filters = _merge_source(meta, source_df, on_cols, upsert=False)
-    keys = keys.distinct()
-    entries = _live_entries(loc, meta)
-    candidates = _prune(meta, entries, filters)
-    del_files: list[str] = []
-    n_rows = 0
-    if candidates:
-        alive = _read_live(spark, loc, meta, candidates, entries, True)
-        # AQE chooses broadcast when the key set is small (see
-        # merge_delete above)
-        matched = alive.join(keys, on=on_cols, how="semi")
-        del_files, n_rows = _write_position_deletes(spark, loc, matched)
-    return _commit_mor(loc, meta, del_files, n_rows, [], "delete")
-
-
-def mor_merge_into(
-    spark, loc: str, source_df, on_cols, update_cols=None,
-    not_matched_by_source=None,
-) -> dict:
-    """Merge-on-read MERGE (upsert): matched target rows are
-    position-DELETED and their merged versions (target row with
-    ``update_cols`` replaced by the source's values) APPENDED
-    together with the not-matched source rows — one 'overwrite'
-    snapshot, zero data files rewritten. Same contracts as
-    merge_into, checked by the same one-action _merge_source: the
-    source must carry every table column and is cast to the table's
-    types, duplicate source keys raise (cardinality violation), and
-    candidates are bounds-pruned on the source's key range. A source
-    row with no match among the candidates is an insert: bounds
-    pruning is conservative. Default ``update_cols`` = every non-key,
-    non-partition column (parity with merge_into; pass partition
-    sources explicitly to move rows across partitions — legal here
-    because merged rows are appended and re-routed, unlike the CoW
-    path).
-
-    At 100 TB: merging a day's increment costs position deletes +
-    appends proportional to the INCREMENT — the CoW path's rewrite of
-    every candidate file (bytes proportional to key-range overlap)
-    disappears; reads apply the position deletes until compaction
-    materializes them.
-
-    ``not_matched_by_source`` ('delete' or {column: Column}): the
-    CDC mirror — a vanished target row becomes a POSITION DELETE
-    (and for the update form is re-appended with the assignments
-    applied). The clause inspects every live row, so candidates are
-    all live files; the WRITE cost still scales with the number of
-    matched + vanished rows, not the table (MoR's whole point)."""
-    from pyspark.sql import functions as F
-
-    meta = read_table_meta(loc)
-    cols = [f["name"] for f in meta["schema"]["fields"]]
-    on_cols = list(on_cols)
-    source, update_cols, filters = _merge_source(
-        meta, source_df, on_cols, update_cols, not_matched_by_source,
-        mor=True,
-    )
-    types = {f["name"]: f["type"] for f in meta["schema"]["fields"]}
-    entries = _live_entries(loc, meta)
-    candidates = _prune(meta, entries, filters)
-
-    del_files: list[str] = []
-    n_rows = 0
-    if candidates:
-        alive = _read_live(spark, loc, meta, candidates, entries, True)
-        skeys = F.broadcast(source.select(*on_cols).distinct())
-        matched_tgt = alive.join(skeys, on=on_cols, how="semi").persist()
-        to_delete = matched_tgt
-        vanished = None
-        if not_matched_by_source is not None:
-            vanished = alive.join(
-                source.select(*on_cols).distinct(),
-                on=on_cols,
-                how="left_anti",
-            ).persist()
-            to_delete = matched_tgt.unionByName(vanished)
-        del_files, n_rows = _write_position_deletes(spark, loc, to_delete)
-        merged = (
-            matched_tgt.select(*[c for c in cols if c not in update_cols])
-            .join(
-                source.select(*on_cols, *update_cols),
-                on=on_cols,
-                how="inner",
-            )
-            .select(*cols)
-        )
-        inserts = source.join(
-            alive.select(*on_cols), on=on_cols, how="left_anti"
-        ).select(*cols)
-        replacement = merged.unionByName(inserts)
-        if isinstance(not_matched_by_source, dict):
-            # the update form re-appends the vanished rows with the
-            # assignments applied (the delete form simply drops them)
-            upd = vanished
-            for c, expr in not_matched_by_source.items():
-                upd = upd.withColumn(
-                    c, expr.cast(ice_to_spark_type(types[c]))
-                )
-            replacement = replacement.unionByName(upd.select(*cols))
-    else:
-        replacement = source
-    data_files = _write_replacement(spark, loc, replacement, meta)
-    if candidates:
-        matched_tgt.unpersist()
-        if not_matched_by_source is not None and vanished is not None:
-            vanished.unpersist()
-    return _commit_mor(
-        loc, meta, del_files, n_rows, data_files, "overwrite"
-    )
 
 
 def add_column(loc: str, name: str, ice_type: str) -> dict:
@@ -3485,47 +3409,21 @@ def rewrite_position_deletes(
 def _eq_candidate_files(meta, entries, eq, files, file_seqs):
     """Data files SOME equality delete can possibly mask: strictly
     older than that delete AND not provably key-range-disjoint from
-    it (reading every file older than the newest delete would make
-    one fresh eq delete's candidate set the whole table). Same
-    keep-by-default guards as the read-side scoping
-    (_scope_eq_deletes_by_bounds): no bounds, NULL keys in the
-    delete, or un-comparable types all KEEP the file — correctness
-    never depends on skipping."""
+    it (_eq_delete_misses over the file's own range). Reading every
+    file older than the newest delete would make one fresh eq
+    delete's candidate set the whole table."""
+    types = {str(f["id"]): f["type"] for f in meta["schema"]["fields"]}
     by_path = {e.path: e.file for e in entries}
-    by_id_type = {
-        str(f["id"]): f["type"] for f in meta["schema"]["fields"]
-    }
+    fids = {str(i) for _, _, ids in eq for i in ids}
     out = []
     for p in files:
-        fseq = file_seqs.get(p, 0)
-        flbs = by_path.get(p, {}).get("lower_bounds") or {}
-        fubs = by_path.get(p, {}).get("upper_bounds") or {}
-        for dpath, dseq, ids in eq:
-            if fseq >= dseq:
-                continue  # a newer file cannot be masked
-            d = by_path.get(dpath, {})
-            dn = d.get("null_value_counts") or {}
-            disjoint = False
-            for i in ids:
-                fid = str(i)
-                t = by_id_type.get(fid)
-                if not t or not _is_primitive(t):
-                    continue
-                if dn.get(fid) != 0:
-                    # delete may carry NULL keys: null-safe equality
-                    # can match regardless of value bounds
-                    continue
-                if _bounds_disjoint(
-                    decode_bound(t, (d.get("lower_bounds") or {}).get(fid)),
-                    decode_bound(t, (d.get("upper_bounds") or {}).get(fid)),
-                    decode_bound(t, flbs.get(fid)),
-                    decode_bound(t, fubs.get(fid)),
-                ):
-                    disjoint = True
-                    break
-            if not disjoint:
-                out.append(p)
-                break
+        rng = _key_range(types, [by_path.get(p, {})], fids)
+        if any(
+            file_seqs.get(p, 0) < dseq
+            and not _eq_delete_misses(types, by_path.get(dpath, {}), ids, rng)
+            for dpath, dseq, ids in eq
+        ):
+            out.append(p)
     return out
 
 
@@ -3768,33 +3666,6 @@ def expire_snapshots(loc: str, keep_last: int = 1) -> dict:
     return {"removed_snapshots": len(expired), "removed_files": removed}
 
 
-def cow_rewrite_where(
-    spark, loc: str, predicate, rewrite_fn, prune_filters=()
-) -> dict:
-    """Generalized copy-on-write rewrite for SQL-surface DML
-    (fs_catalog): ``predicate`` is any Spark boolean Column (built
-    with F.expr from the statement's WHERE), ``prune_filters`` an
-    optional conservative (col, op, literal) conjunction extracted
-    from that WHERE to bound the candidate set via manifest pruning —
-    correctness never depends on the extraction, only the rewrite
-    bound does. ``rewrite_fn(src_df, predicate)`` returns the
-    replacement rows for the candidate files."""
-    meta = read_table_meta(loc)
-    cols = [f["name"] for f in meta["schema"]["fields"]]
-    entries = _live_entries(loc, meta)
-    candidates, untouched = _split(meta, entries, prune_filters)
-    new_files: list[str] = []
-    if candidates:
-        # live MoR deletes apply BEFORE the rewrite: a row deleted
-        # merge-on-read must not be resurrected by a later CoW pass
-        src = _read_live(spark, loc, meta, candidates, entries)
-        replacement = rewrite_fn(src, predicate).select(*cols)
-        new_files = _write_replacement(spark, loc, replacement, meta)
-    return _commit_overwrite(
-        loc, meta, entries, candidates, untouched, new_files
-    )
-
-
 def read_incremental(
     spark, loc: str, from_snapshot_id: int, to_snapshot_id: int | None = None
 ):
@@ -3837,11 +3708,6 @@ def read_incremental(
             if e.status == 1 and e.snapshot_id == s["snapshot-id"]
         ]
     files = [e.path for e in added]
-    if not files:
-        return spark.createDataFrame([], schema=", ".join(
-            f"{f['name']} {ice_to_spark_type(f['type'])}"
-            for f in meta["schema"]["fields"]
-        ))
     # each file's sequence number comes from ITS ADDING SNAPSHOT, not
     # the current snapshot's plan: a later compaction rewrites files
     # out of the current manifests, and resolving a historical file

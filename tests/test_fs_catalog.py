@@ -1853,3 +1853,63 @@ def test_in_list_prunes(cat, spark):
     assert _where_filters(_where_of(spark, "a IN (1, 2) AND b = 3")) == (
         ("a", "in", (1, 2)), ("b", "=", 3),
     )
+
+
+def test_cow_and_mor_dml_agree(cat, spark):
+    """The same DELETE, UPDATE and MERGE statements leave identical
+    rows in a copy-on-write table and in a merge-on-read one, which
+    writes position deletes and appends instead of rewriting files.
+    Each statement is followed by a second one stacked on its result,
+    so the MoR side also reads through its own earlier deletes."""
+    run = lambda s: cat.execute(spark, s)  # noqa: E731
+    rows = ", ".join(f"({k}, '{'abc'[k % 3]}', {k}.0)" for k in range(24))
+    for t in ("cow", "mor", "src"):
+        run(f"CREATE TABLE {t} (k bigint, g string, v double)"
+            " PARTITIONED BY (g)")
+        run(f"INSERT INTO {t} VALUES {rows}")
+    for verb in ("delete", "update", "merge"):
+        run(f"ALTER TABLE mor SET TBLPROPERTIES"
+            f" ('write.{verb}.mode' = 'merge-on-read')")
+    run("UPDATE src SET v = v + 1000")
+    run("INSERT INTO src VALUES (30, 'a', 30.0), (31, 'b', 31.0)")
+    upsert = (
+        "MERGE INTO {t} x USING (SELECT * FROM src WHERE {w}) s"
+        " ON x.k = s.k WHEN MATCHED THEN UPDATE SET *"
+        " WHEN NOT MATCHED THEN INSERT *"
+    )
+    steps = [
+        "DELETE FROM {t} WHERE k = 1",
+        "DELETE FROM {t} WHERE v > 20.0 OR (g = 'b' AND k < 6)",
+        "UPDATE {t} SET v = v + 100 WHERE k < 4",
+        "UPDATE {t} SET v = -v WHERE g = 'c' AND v > 100",
+        upsert.format(t="{t}", w="k < 10"),
+        "MERGE INTO {t} x USING (SELECT k, g, v + 1 AS v FROM src"
+        " WHERE k >= 20) s ON x.k = s.k"
+        " WHEN MATCHED THEN UPDATE SET x.v = s.v"
+        " WHEN NOT MATCHED THEN INSERT *",
+        upsert.format(t="{t}", w="k % 2 = 0 OR k > 25")
+        + " WHEN NOT MATCHED BY SOURCE THEN DELETE",
+        upsert.format(t="{t}", w="k < 20")
+        + " WHEN NOT MATCHED BY SOURCE THEN DELETE",
+        upsert.format(t="{t}", w="k % 4 = 0")
+        + " WHEN NOT MATCHED BY SOURCE THEN UPDATE SET x.v = v - 0.5",
+        upsert.format(t="{t}", w="k < 8")
+        + " WHEN NOT MATCHED BY SOURCE THEN UPDATE SET v = 7.0",
+        "MERGE INTO {t} x USING (SELECT k FROM src WHERE k < 5) s"
+        " ON x.k = s.k WHEN MATCHED THEN DELETE",
+        "MERGE INTO {t} x USING (SELECT k FROM src WHERE k > 10) s"
+        " ON x.k = s.k WHEN MATCHED THEN DELETE",
+    ]
+    for step in steps:
+        cow = run(step.format(t="cow"))[0]
+        mor = run(step.format(t="mor"))[0]
+        assert mor["rewritten_files"] == "0", step
+        assert cow["operation"] == mor["operation"], step
+        got = [
+            sorted(tuple(r) for r in run(f"SELECT * FROM {t} x").collect())
+            for t in ("cow", "mor")
+        ]
+        assert got[0] == got[1], step
+    assert got[0] and len(got[0]) < 24
+    ops = {r["operation"] for r in run("SHOW SNAPSHOTS IN mor")}
+    assert ops == {"append", "delete", "overwrite"}

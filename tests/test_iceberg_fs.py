@@ -381,6 +381,87 @@ def test_iceberg_merge_job_count(spark, tmp_path):
     assert len(got) == 31 and got[4] == 400.0 and got[99] == 99.0
 
 
+def _row_level_table(spark, loc):
+    """The 30-row, 3-partition table of the job-count pins, with a
+    2-row upsert source: one matched key, one new one."""
+    df = spark.createDataFrame(
+        [(k, float(k), "ABC"[k % 3]) for k in range(30)],
+        "k bigint, v double, p string",
+    )
+    ice.create_table(loc, ice.spark_schema_to_iceberg(df), part_cols=["p"])
+    ice.append(spark, loc, df)
+    return spark.createDataFrame(
+        [(4, 400.0, "B"), (99, 99.0, "A")], "k bigint, v double, p string"
+    )
+
+
+@pytest.mark.parametrize("kind, jobs", [
+    ("mor_merge", 8),
+    ("mor_merge_nmbs_delete", 9),
+    ("mor_update", 4),
+    ("cow_update", 1),
+    ("cow_delete", 1),
+])
+def test_iceberg_row_level_job_count(spark, tmp_path, kind, jobs):
+    """Pins the Spark jobs of the row-level writers on the table of
+    test_iceberg_merge_job_count. Merge-on-read MERGE is one full
+    outer join whose changed rows are persisted once: its semi, anti,
+    inner and anti joins used to take 11 jobs (15 with NOT MATCHED BY
+    SOURCE DELETE)."""
+    loc = str(tmp_path / kind)
+    src = _row_level_table(spark, loc)
+    run = {
+        "mor_merge": lambda: ice.mor_merge_into(spark, loc, src, ["k"]),
+        "mor_merge_nmbs_delete": lambda: ice.mor_merge_into(
+            spark, loc, src, ["k"], not_matched_by_source="delete"
+        ),
+        "mor_update": lambda: ice.mor_update_where(
+            spark, loc, F.col("k") < 5, {"v": F.lit(-1.0)}
+        ),
+        "cow_update": lambda: ice.update_where(
+            spark, loc, [("k", "<", 5)], {"v": -1.0}
+        ),
+        "cow_delete": lambda: ice.delete_where(spark, loc, [("k", "<", 5)]),
+    }[kind]
+    sc = spark.sparkContext
+    group = f"row-level-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+    got = {r["k"]: r["v"] for r in ice.read_iceberg(spark, loc).collect()}
+    if kind.startswith("mor_merge"):
+        assert got[4] == 400.0 and got[99] == 99.0
+        assert len(got) == (2 if kind.endswith("delete") else 31)
+    else:
+        assert len(got) == (25 if kind == "cow_delete" else 30)
+
+
+@pytest.mark.parametrize("kind", ["mor_update", "mor_merge"])
+def test_iceberg_mor_failed_write_releases_cache(spark, tmp_path, kind):
+    """A merge-on-read write that fails after persisting its changed
+    rows must release them: a long-lived server would otherwise pin
+    them in the block manager for every failed statement."""
+    loc = str(tmp_path / kind)
+    src = _row_level_table(spark, loc)
+    boom = F.expr("raise_error('boom')")
+    sc = spark.sparkContext
+    before = len(sc._jsc.getPersistentRDDs())
+    with pytest.raises(Exception, match="boom"):
+        if kind == "mor_update":
+            ice.mor_update_where(spark, loc, F.col("k") < 5, {"v": boom})
+        else:
+            ice.mor_merge_into(
+                spark, loc, src, ["k"],
+                not_matched_by_source={"v": boom},
+            )
+    assert len(sc._jsc.getPersistentRDDs()) == before
+    assert len(ice.read_iceberg(spark, loc).collect()) == 30
+
+
 def test_iceberg_add_column_evolution(spark, tmp_path):
     """Metadata-only ADD COLUMN: zero data files change, old rows
     read as typed nulls, new appends carry values, and bounds
