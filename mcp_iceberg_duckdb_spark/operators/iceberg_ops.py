@@ -37,15 +37,13 @@ _FILTERS = (
 )
 
 
-def iceberg_orders_table(spark, sf_dir: str) -> str:
-    """Materialize (once per sf fixture) the orders columns this
-    container's Iceberg types cover as a partitioned Iceberg v1
-    table under /tmp; reuse when the marker says it was built from
-    the same fixture."""
-    from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
-
+def _build_once(sf_dir: str, tag: str, build) -> str:
+    """The build-once table of every Iceberg query: materialize a
+    per-(sf_dir, tag) table at /tmp/spark_graft_iceberg_<tag>_<md5>
+    via ``build(loc)``, which reads its own source table, and reuse
+    it while the marker says it came from the same fixture."""
     key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    loc = f"/tmp/spark_graft_iceberg_orders_{key}"
+    loc = f"/tmp/spark_graft_iceberg_{tag}_{key}"
     marker = os.path.join(loc, "fixture.json")
     try:
         with open(marker) as fh:
@@ -54,15 +52,38 @@ def iceberg_orders_table(spark, sf_dir: str) -> str:
     except (OSError, ValueError, KeyError):
         pass
     shutil.rmtree(loc, ignore_errors=True)
-    orders = t(spark, sf_dir).orders.select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
-    )
-    schema = ice.spark_schema_to_iceberg(orders)
-    ice.create_table(loc, schema, part_cols=["o_orderpriority"])
-    ice.append(spark, loc, orders)
+    build(loc)
     with open(marker, "w") as fh:
         json.dump({"sf_dir": sf_dir}, fh)
     return loc
+
+
+def _orders(spark, sf_dir: str):
+    """The orders columns the order-table queries commit."""
+    return t(spark, sf_dir).orders.select(
+        "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
+    )
+
+
+def _orders_table(spark, loc: str, *parts) -> None:
+    """A new Iceberg table at ``loc`` partitioned by o_orderpriority,
+    with one append per frame of orders rows in ``parts``."""
+    from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
+
+    ice.create_table(
+        loc, ice.spark_schema_to_iceberg(parts[0]),
+        part_cols=["o_orderpriority"],
+    )
+    for part in parts:
+        ice.append(spark, loc, part)
+
+
+def iceberg_orders_table(spark, sf_dir: str) -> str:
+    """Materialize (once per sf fixture) the orders columns this
+    container's Iceberg types cover as a partitioned Iceberg v1
+    table under /tmp."""
+    return _build_once(sf_dir, "orders", lambda loc: _orders_table(
+        spark, loc, _orders(spark, sf_dir)))
 
 
 @query(
@@ -108,6 +129,18 @@ _DEL_FILTERS = (
 )
 
 
+def _delete_table(spark, sf_dir: str) -> str:
+    """The orders table after one copy-on-write DELETE of the
+    _DEL_FILTERS rows (x_iceberg_fs_delete, x_iceberg_fs_timetravel)."""
+    from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
+
+    def build(loc):
+        _orders_table(spark, loc, _orders(spark, sf_dir))
+        ice.delete_where(spark, loc, list(_DEL_FILTERS))
+
+    return _build_once(sf_dir, "del", build)
+
+
 @query(
     "x_iceberg_fs_delete",
     oracle="""
@@ -133,35 +166,9 @@ def x_iceberg_fs_delete(spark, sf_dir):
     the matching rows. Mirrors the reference's DELETE surface
     (QueryManager routes DML to DuckDB; here it is a real Iceberg
     overwrite snapshot)."""
-    import hashlib as _hashlib
-    import json as _json
-
     from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
 
-    key = _hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    loc = f"/tmp/spark_graft_iceberg_del_{key}"
-    marker = os.path.join(loc, "fixture.json")
-    built = False
-    try:
-        with open(marker) as fh:
-            built = _json.load(fh)["sf_dir"] == sf_dir
-    except (OSError, ValueError, KeyError):
-        pass
-    if not built:
-        shutil.rmtree(loc, ignore_errors=True)
-        orders = t(spark, sf_dir).orders.select(
-            "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
-        )
-        ice.create_table(
-            loc,
-            ice.spark_schema_to_iceberg(orders),
-            part_cols=["o_orderpriority"],
-        )
-        ice.append(spark, loc, orders)
-        ice.delete_where(spark, loc, list(_DEL_FILTERS))
-        with open(marker, "w") as fh:
-            _json.dump({"sf_dir": sf_dir}, fh)
-    df = ice.read_iceberg(spark, loc)
+    df = ice.read_iceberg(spark, _delete_table(spark, sf_dir))
     return df.groupBy("o_orderpriority").agg(
         F.count("*").cast("bigint").alias("n_orders"),
         dec_sum(F.col("o_totalprice")).alias("sum_price"),
@@ -186,15 +193,11 @@ def x_iceberg_fs_timetravel(spark, sf_dir):
     Oracle: the unfiltered aggregate over the source parquet — parity
     proves deleted data remains reachable through the snapshot log
     (the Iceberg property backing reproducible training-data
-    lineage). Depends on x_iceberg_fs_delete's builder for the
-    mutated table."""
+    lineage). Reads the mutated table x_iceberg_fs_delete reads
+    (_delete_table)."""
     from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
 
-    # ensure the table exists with its delete applied (the builder
-    # materializes the table eagerly; no action needed on its result)
-    x_iceberg_fs_delete(spark, sf_dir)
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    loc = f"/tmp/spark_graft_iceberg_del_{key}"
+    loc = _delete_table(spark, sf_dir)
     first_snap = ice.read_table_meta(loc)["snapshots"][0]["snapshot-id"]
     df = ice.read_iceberg(spark, loc, snapshot_id=first_snap)
     return df.agg(
@@ -232,68 +235,22 @@ def x_iceberg_fs_update(spark, sf_dir):
     exactly as assigned and nothing else moved. The reference routes
     UPDATE to DuckDB over its full download; here it is a real
     Iceberg overwrite snapshot."""
-    import hashlib as _hashlib
-    import json as _json
-
     from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
 
-    key = _hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    loc = f"/tmp/spark_graft_iceberg_upd_{key}"
-    marker = os.path.join(loc, "fixture.json")
-    built = False
-    try:
-        with open(marker) as fh:
-            built = _json.load(fh)["sf_dir"] == sf_dir
-    except (OSError, ValueError, KeyError):
-        pass
-    if not built:
-        shutil.rmtree(loc, ignore_errors=True)
-        orders = t(spark, sf_dir).orders.select(
-            "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
-        )
-        ice.create_table(
-            loc,
-            ice.spark_schema_to_iceberg(orders),
-            part_cols=["o_orderpriority"],
-        )
-        ice.append(spark, loc, orders)
+    def build(loc):
+        _orders_table(spark, loc, _orders(spark, sf_dir))
         ice.update_where(
             spark,
             loc,
             [("o_orderpriority", "=", "2-HIGH"), ("o_custkey", "<", 64)],
             {"o_totalprice": F.col("o_totalprice") + 1000.0},
         )
-        with open(marker, "w") as fh:
-            _json.dump({"sf_dir": sf_dir}, fh)
-    df = ice.read_iceberg(spark, loc)
+
+    df = ice.read_iceberg(spark, _build_once(sf_dir, "upd", build))
     return df.groupBy("o_orderpriority").agg(
         F.count("*").cast("bigint").alias("n_orders"),
         dec_sum(F.col("o_totalprice")).alias("sum_price"),
     )
-
-
-def _mutable_table(spark, sf_dir: str, tag: str, build_fn) -> str:
-    """Build-once marker pattern shared by the mutating Iceberg
-    queries: materialize a per-(sf_dir, tag) table under /tmp via
-    ``build_fn(loc, orders_df)`` and reuse it while the marker says
-    it came from the same fixture."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    loc = f"/tmp/spark_graft_iceberg_{tag}_{key}"
-    marker = os.path.join(loc, "fixture.json")
-    try:
-        with open(marker) as fh:
-            if json.load(fh)["sf_dir"] == sf_dir:
-                return loc
-    except (OSError, ValueError, KeyError):
-        pass
-    shutil.rmtree(loc, ignore_errors=True)
-    orders = t(spark, sf_dir).orders.select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
-    )
-    build_fn(loc, orders)
-    with open(marker, "w") as fh:
-        json.dump({"sf_dir": sf_dir}, fh)
-    return loc
 
 
 _DEC_SUM_SQL = (
@@ -341,13 +298,9 @@ def x_iceberg_fs_merge(spark, sf_dir):
     snapshot with a pruning-bounded rewrite."""
     from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
 
-    def build(loc, orders):
-        ice.create_table(
-            loc,
-            ice.spark_schema_to_iceberg(orders),
-            part_cols=["o_orderpriority"],
-        )
-        ice.append(spark, loc, orders)
+    def build(loc):
+        orders = _orders(spark, sf_dir)
+        _orders_table(spark, loc, orders)
         updates = orders.filter(F.col("o_custkey") < 50).withColumn(
             "o_totalprice", F.col("o_totalprice") * 2
         )
@@ -360,7 +313,7 @@ def x_iceberg_fs_merge(spark, sf_dir):
             spark, loc, updates.unionByName(inserts), on_cols=["o_orderkey"]
         )
 
-    loc = _mutable_table(spark, sf_dir, "merge", build)
+    loc = _build_once(sf_dir, "merge", build)
     df = ice.read_iceberg(spark, loc)
     return df.groupBy("o_orderpriority").agg(
         F.count("*").cast("bigint").alias("n_orders"),
@@ -395,7 +348,8 @@ def x_iceberg_fs_schema_evolution(spark, sf_dir):
     difference between a metadata write and a full-table rewrite."""
     from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
 
-    def build(loc, orders):
+    def build(loc):
+        orders = _orders(spark, sf_dir)
         base = orders.select("o_orderkey", "o_custkey", "o_totalprice")
         ice.create_table(loc, ice.spark_schema_to_iceberg(base))
         ice.append(spark, loc, base.filter(F.col("o_orderkey") % 2 == 0))
@@ -408,7 +362,7 @@ def x_iceberg_fs_schema_evolution(spark, sf_dir):
             ),
         )
 
-    loc = _mutable_table(spark, sf_dir, "evo", build)
+    loc = _build_once(sf_dir, "evo", build)
     from mcp_iceberg_duckdb_spark.sources.iceberg_fs import read_iceberg
 
     df = read_iceberg(spark, loc)
@@ -449,14 +403,10 @@ def x_iceberg_fs_compaction(spark, sf_dir):
     production Iceberg lake runs."""
     from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
 
-    def build(loc, orders):
-        ice.create_table(
-            loc,
-            ice.spark_schema_to_iceberg(orders),
-            part_cols=["o_orderpriority"],
-        )
-        for i in range(4):
-            ice.append(spark, loc, orders.filter(F.col("o_orderkey") % 4 == i))
+    def build(loc):
+        orders = _orders(spark, sf_dir)
+        _orders_table(spark, loc, *(
+            orders.filter(F.col("o_orderkey") % 4 == i) for i in range(4)))
         n_before = len(ice.plan_files(loc)[0])
         ice.compact_files(spark, loc)
         files, _ = ice.plan_files(loc)
@@ -470,7 +420,7 @@ def x_iceberg_fs_compaction(spark, sf_dir):
         on_disk = set(ice._list_parquet(os.path.join(loc, "data")))
         assert on_disk == live, (len(on_disk), len(live))
 
-    loc = _mutable_table(spark, sf_dir, "compact", build)
+    loc = _build_once(sf_dir, "compact", build)
     from mcp_iceberg_duckdb_spark.sources.iceberg_fs import read_iceberg
 
     df = read_iceberg(spark, loc)
@@ -521,7 +471,8 @@ def x_iceberg_fs_sql_surface(spark, sf_dir):
     copy-on-write commit."""
     from mcp_iceberg_duckdb_spark.sources.fs_catalog import FsCatalog
 
-    def build(loc, orders):
+    def build(loc):
+        orders = _orders(spark, sf_dir)
         # loc doubles as the warehouse root for this query's catalog
         cat = FsCatalog(loc)
         orders.createOrReplaceTempView("__src_orders")
@@ -545,7 +496,7 @@ def x_iceberg_fs_sql_surface(spark, sf_dir):
         ):
             cat.execute(spark, stmt)
 
-    wh = _mutable_table(spark, sf_dir, "sqlwh", build)
+    wh = _build_once(sf_dir, "sqlwh", build)
     cat = FsCatalog(wh)
     return cat.execute(
         spark,
@@ -583,16 +534,12 @@ def x_iceberg_fs_incremental(spark, sf_dir):
     lineage attributes every file to exactly one append."""
     from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
 
-    def build(loc, orders):
-        ice.create_table(
-            loc,
-            ice.spark_schema_to_iceberg(orders),
-            part_cols=["o_orderpriority"],
-        )
-        for i in range(3):
-            ice.append(spark, loc, orders.filter(F.col("o_orderkey") % 3 == i))
+    def build(loc):
+        orders = _orders(spark, sf_dir)
+        _orders_table(spark, loc, *(
+            orders.filter(F.col("o_orderkey") % 3 == i) for i in range(3)))
 
-    loc = _mutable_table(spark, sf_dir, "incr", build)
+    loc = _build_once(sf_dir, "incr", build)
     from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
 
     snaps = ice.read_table_meta(loc)["snapshots"]
@@ -640,13 +587,9 @@ def x_iceberg_fs_mor_delete(spark, sf_dir):
     (IcebergConnection.py:107-177)."""
     from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
 
-    def build(loc, orders):
-        ice.create_table(
-            loc,
-            ice.spark_schema_to_iceberg(orders),
-            part_cols=["o_orderpriority"],
-        )
-        ice.append(spark, loc, orders)
+    def build(loc):
+        orders = _orders(spark, sf_dir)
+        _orders_table(spark, loc, orders)
         pre = sorted(ice.plan_files(loc)[0])
         pre_sizes = [os.path.getsize(p) for p in pre]
         ice.delete_where(
@@ -663,7 +606,7 @@ def x_iceberg_fs_mor_delete(spark, sf_dir):
             os.path.getsize(p) for p in post
         ] == pre_sizes, "MoR delete rewrote data files"
 
-    loc = _mutable_table(spark, sf_dir, "mor", build)
+    loc = _build_once(sf_dir, "mor", build)
     df = ice.read_iceberg(spark, loc)
     return df.groupBy("o_orderpriority").agg(
         F.count("*").cast("bigint").alias("n_orders"),
@@ -707,13 +650,9 @@ def x_iceberg_fs_eq_delete(spark, sf_dir):
     either kind)."""
     from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
 
-    def build(loc, orders):
-        ice.create_table(
-            loc,
-            ice.spark_schema_to_iceberg(orders),
-            part_cols=["o_orderpriority"],
-        )
-        ice.append(spark, loc, orders)
+    def build(loc):
+        orders = _orders(spark, sf_dir)
+        _orders_table(spark, loc, orders)
         pre = sorted(ice.plan_files(loc)[0])
         pre_sizes = [os.path.getsize(p) for p in pre]
         ice.mor_delete_keys(
@@ -732,7 +671,7 @@ def x_iceberg_fs_eq_delete(spark, sf_dir):
             spark, loc, orders.filter(F.col("o_orderkey") % 21 == 3)
         )
 
-    loc = _mutable_table(spark, sf_dir, "eqdel", build)
+    loc = _build_once(sf_dir, "eqdel", build)
     df = ice.read_iceberg(spark, loc)
     return df.groupBy("o_orderpriority").agg(
         F.count("*").cast("bigint").alias("n_orders"),
@@ -774,13 +713,9 @@ def x_iceberg_fs_rename(spark, sf_dir):
     (README.md:116)."""
     from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
 
-    def build(loc, orders):
-        ice.create_table(
-            loc,
-            ice.spark_schema_to_iceberg(orders),
-            part_cols=["o_orderpriority"],
-        )
-        ice.append(spark, loc, orders.filter(F.col("o_orderkey") % 2 == 0))
+    def build(loc):
+        orders = _orders(spark, sf_dir)
+        _orders_table(spark, loc, orders.filter(F.col("o_orderkey") % 2 == 0))
         ice.rename_column(loc, "o_custkey", "cust_id")
         ice.add_column(loc, "note", "string")
         ice.drop_column(loc, "note")
@@ -791,7 +726,7 @@ def x_iceberg_fs_rename(spark, sf_dir):
             .withColumnRenamed("o_custkey", "cust_id"),
         )
 
-    loc = _mutable_table(spark, sf_dir, "rename", build)
+    loc = _build_once(sf_dir, "rename", build)
     df = ice.read_iceberg(spark, loc)
     return df.groupBy("o_orderpriority").agg(
         F.count("*").cast("bigint").alias("n_orders"),
@@ -838,17 +773,7 @@ def x_iceberg_fs_partition_evolution(spark, sf_dir):
     (IcebergConnection.py:107)."""
     from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    loc = f"/tmp/spark_graft_iceberg_partevo_{key}"
-    marker = os.path.join(loc, "fixture.json")
-    built = False
-    try:
-        with open(marker) as fh:
-            built = json.load(fh)["sf_dir"] == sf_dir
-    except (OSError, ValueError, KeyError):
-        pass
-    if not built:
-        shutil.rmtree(loc, ignore_errors=True)
+    def build(loc):
         orders = t(spark, sf_dir).orders.select(
             "o_orderkey",
             "o_totalprice",
@@ -877,8 +802,8 @@ def x_iceberg_fs_partition_evolution(spark, sf_dir):
         # MoR DELETE across both layouts: position deletes written
         # against files of BOTH spec generations
         ice.mor_delete_where(spark, loc, F.expr("o_orderkey % 100 = 7"))
-        with open(marker, "w") as fh:
-            json.dump({"sf_dir": sf_dir}, fh)
+
+    loc = _build_once(sf_dir, "partevo", build)
     df = ice.read_iceberg(spark, loc, filters=(("o_orderdate", ">=", 9496),))
     return (
         df.filter(F.col("o_orderdate") >= F.lit("1996-01-01").cast("date"))
@@ -924,13 +849,9 @@ def x_iceberg_fs_refs(spark, sf_dir):
     only)."""
     from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
 
-    def build(loc, orders):
-        ice.create_table(
-            loc,
-            ice.spark_schema_to_iceberg(orders),
-            part_cols=["o_orderpriority"],
-        )
-        ice.append(spark, loc, orders.filter(F.col("o_orderkey") % 2 == 0))
+    def build(loc):
+        orders = _orders(spark, sf_dir)
+        _orders_table(spark, loc, orders.filter(F.col("o_orderkey") % 2 == 0))
         ice.create_ref(loc, "validated", "tag")
         ice.append(spark, loc, orders.filter(F.col("o_orderkey") % 2 == 1))
         ice.append(
@@ -942,7 +863,7 @@ def x_iceberg_fs_refs(spark, sf_dir):
         res = ice.expire_snapshots(loc, keep_last=1)
         assert res["removed_snapshots"] >= 1, "expiry removed nothing"
 
-    loc = _mutable_table(spark, sf_dir, "refs", build)
+    loc = _build_once(sf_dir, "refs", build)
     df = ice.read_iceberg(spark, loc, snapshot_id="validated")
     return df.groupBy("o_orderpriority").agg(
         F.count("*").cast("bigint").alias("n_orders"),
@@ -983,18 +904,9 @@ def x_iceberg_fs_ts_day(spark, sf_dir):
     whole days without listing a file. Reference contrast: the
     reference reads whatever PyIceberg downloads — no transform
     planning of its own (IcebergConnection.py:109)."""
-    from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    loc = f"/tmp/spark_graft_iceberg_tsday_{key}"
-    marker = os.path.join(loc, "fixture.json")
-    built = False
-    try:
-        with open(marker) as fh:
-            built = json.load(fh)["sf_dir"] == sf_dir
-    except (OSError, ValueError, KeyError):
-        pass
     import datetime
+
+    from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
 
     epoch = datetime.datetime(1970, 1, 1)
     lo = int(
@@ -1003,8 +915,8 @@ def x_iceberg_fs_ts_day(spark, sf_dir):
     hi = int(
         (datetime.datetime(2024, 1, 13) - epoch).total_seconds() * 1e6
     )
-    if not built:
-        shutil.rmtree(loc, ignore_errors=True)
+
+    def build(loc):
         events = t(spark, sf_dir).events.select(
             "event_id", "ts", "user_id", "event_type", "value"
         )
@@ -1027,8 +939,8 @@ def x_iceberg_fs_ts_day(spark, sf_dir):
             lo // 86_400_000_000 <= d < hi // 86_400_000_000
             for d in days
         ), "planned files outside the day window"
-        with open(marker, "w") as fh:
-            json.dump({"sf_dir": sf_dir}, fh)
+
+    loc = _build_once(sf_dir, "tsday", build)
     df = ice.read_iceberg(
         spark, loc, filters=(("ts", ">=", lo), ("ts", "<", hi))
     )
@@ -1074,24 +986,15 @@ def x_iceberg_fs_decimal_tz(spark, sf_dir):
     tz instant semantics match. At 100 TB: money columns NEED exact
     decimals, and month(tz) partitioning is the standard warehouse
     fact-table layout."""
-    from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    loc = f"/tmp/spark_graft_iceberg_dectz_{key}"
-    marker = os.path.join(loc, "fixture.json")
-    built = False
-    try:
-        with open(marker) as fh:
-            built = json.load(fh)["sf_dir"] == sf_dir
-    except (OSError, ValueError, KeyError):
-        pass
     import datetime
+
+    from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
 
     utc = datetime.timezone.utc
     lo = int(datetime.datetime(1995, 1, 1, tzinfo=utc).timestamp() * 1e6)
     hi = int(datetime.datetime(1996, 1, 1, tzinfo=utc).timestamp() * 1e6)
-    if not built:
-        shutil.rmtree(loc, ignore_errors=True)
+
+    def build(loc):
         orders = t(spark, sf_dir).orders.select(
             "o_orderkey",
             "o_orderpriority",
@@ -1120,8 +1023,8 @@ def x_iceberg_fs_decimal_tz(spark, sf_dir):
         }
         # months since 1970-01: 1995 spans [300, 312)
         assert months and all(300 <= m < 312 for m in months), months
-        with open(marker, "w") as fh:
-            json.dump({"sf_dir": sf_dir}, fh)
+
+    loc = _build_once(sf_dir, "dectz", build)
     df = ice.read_iceberg(
         spark, loc, filters=(("ots", ">=", lo), ("ots", "<", hi))
     )
@@ -1174,17 +1077,7 @@ def x_iceberg_fs_embedding_col(spark, sf_dir):
     from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
     from pyspark.sql import Window as W
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    loc = f"/tmp/spark_graft_iceberg_embcol_{key}"
-    marker = os.path.join(loc, "fixture.json")
-    built = False
-    try:
-        with open(marker) as fh:
-            built = json.load(fh)["sf_dir"] == sf_dir
-    except (OSError, ValueError, KeyError):
-        pass
-    if not built:
-        shutil.rmtree(loc, ignore_errors=True)
+    def build(loc):
         emb = t(spark, sf_dir).embeddings.select(
             "vec_id", "embedding", "label"
         )
@@ -1194,8 +1087,8 @@ def x_iceberg_fs_embedding_col(spark, sf_dir):
         assert types["embedding"]["element"] == "float", types
         ice.create_table(loc, schema)
         ice.append(spark, loc, emb)
-        with open(marker, "w") as fh:
-            json.dump({"sf_dir": sf_dir}, fh)
+
+    loc = _build_once(sf_dir, "embcol", build)
     e = parallelize(
         ice.read_iceberg(spark, loc).select(
             "vec_id", as_double("embedding").alias("v")
@@ -1248,17 +1141,7 @@ def x_iceberg_fs_wap(spark, sf_dir):
     with a pointer swap, never expose a half-written batch."""
     from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    loc = f"/tmp/spark_graft_iceberg_wap_{key}"
-    marker = os.path.join(loc, "fixture.json")
-    built = False
-    try:
-        with open(marker) as fh:
-            built = json.load(fh)["sf_dir"] == sf_dir
-    except (OSError, ValueError, KeyError):
-        pass
-    if not built:
-        shutil.rmtree(loc, ignore_errors=True)
+    def build(loc):
         orders = t(spark, sf_dir).orders.select(
             "o_orderkey", "o_orderpriority"
         )
@@ -1279,8 +1162,8 @@ def x_iceberg_fs_wap(spark, sf_dir):
         out = ice.fast_forward(loc, "main", "audit")
         assert out["advanced"] == 1
         assert ice.read_iceberg(spark, loc).count() == n_all
-        with open(marker, "w") as fh:
-            json.dump({"sf_dir": sf_dir}, fh)
+
+    loc = _build_once(sf_dir, "wap", build)
     df = ice.read_iceberg(spark, loc)
     return df.groupBy("o_orderpriority").agg(
         F.count("*").cast("bigint").alias("n_orders"),
@@ -1318,17 +1201,7 @@ def x_iceberg_fs_merge_mirror(spark, sf_dir):
     to the CHANGES (matched + vanished + new), not the table."""
     from mcp_iceberg_duckdb_spark.sources import iceberg_fs as ice
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    loc = f"/tmp/spark_graft_iceberg_mirror_{key}"
-    marker = os.path.join(loc, "fixture.json")
-    built = False
-    try:
-        with open(marker) as fh:
-            built = json.load(fh)["sf_dir"] == sf_dir
-    except (OSError, ValueError, KeyError):
-        pass
-    if not built:
-        shutil.rmtree(loc, ignore_errors=True)
+    def build(loc):
         orders = t(spark, sf_dir).orders.select(
             "o_orderkey",
             "o_orderpriority",
@@ -1357,8 +1230,8 @@ def x_iceberg_fs_merge_mirror(spark, sf_dir):
             ice.read_iceberg(spark, loc, snapshot_id=pre_snap).count()
             == n_pre
         )
-        with open(marker, "w") as fh:
-            json.dump({"sf_dir": sf_dir}, fh)
+
+    loc = _build_once(sf_dir, "mirror", build)
     df = ice.read_iceberg(spark, loc)
     return df.groupBy("o_orderpriority").agg(
         F.count("*").cast("bigint").alias("n_orders"),

@@ -272,7 +272,9 @@ def write_container(schema, records, codec: str = "deflate") -> bytes:
     """Serialize records into one Avro object-container file."""
     if codec not in ("null", "deflate"):
         raise ValueError(f"unsupported Avro codec {codec!r}")
-    schema_json = json.dumps(schema)
+    # compact separators: every manifest and manifest list repeats
+    # its schema in the header, the bulk of a small commit's metadata
+    schema_json = json.dumps(schema, separators=(",", ":"))
     out = bytearray(MAGIC)
     meta = {
         "avro.schema": schema_json.encode(),

@@ -155,6 +155,30 @@ def _column(spark, expr) -> Column:
     return Column(eu.column(expr))
 
 
+def _unqualify(spark, expr, alias: str, source: str | None = None):
+    """``expr`` with each column reference qualified by the DML
+    target's ``alias`` (``x.v``) made unqualified (``v``): iceberg_fs
+    evaluates the expression over the target's own rows, which carry
+    no alias. A reference qualified by the ``source`` alias raises."""
+    if expr.nodeName() == "UnresolvedAttribute":
+        *qual, name = _seq(expr.nameParts())
+        qual = [q.lower() for q in qual]
+        if source is not None and qual == [source.lower()]:
+            raise ValueError(
+                "NOT MATCHED BY SOURCE values may reference only target "
+                f"columns, got {expr.sql()!r}"
+            )
+        if qual != [alias.lower()]:
+            return expr
+        ua = "org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute"
+        return _jclass(spark._jvm, ua).quoted(name)
+    kids = _seq(expr.children())
+    if not kids:
+        return expr
+    return expr.withNewChildren(spark._jvm.PythonUtils.toSeq(
+        [_unqualify(spark, k, alias, source) for k in kids]))
+
+
 def _where(plan):
     """The WHERE condition of a query's outermost block, or None."""
     node = plan
@@ -1001,7 +1025,7 @@ class FsCatalog:
         )
 
     def _update(self, spark, sql, plan) -> list[Row]:
-        plan, _, loc, meta, mor = self._dml(
+        plan, alias, loc, meta, mor = self._dml(
             spark, sql, plan, "update", _seq(plan.subqueries()),
             lambda p: p.table(),
         )
@@ -1012,17 +1036,21 @@ class FsCatalog:
             # (and, copy-on-write, a partition column)
             written = ".".join(_seq(a.key().nameParts()))
             col = canon.get(written.lower(), written)
-            assignments[col] = _column(spark, a.value())
+            assignments[col] = _column(
+                spark, _unqualify(spark, a.value(), alias))
         cond = plan.condition()
         cond = cond.get() if cond.isDefined() else None
+        if cond is not None:
+            cond = _unqualify(spark, cond, alias)
         return self._rewrite(spark, "update", loc, meta, mor, cond, assignments)
 
     def _delete(self, spark, sql, plan) -> list[Row]:
-        plan, _, loc, meta, mor = self._dml(
+        plan, alias, loc, meta, mor = self._dml(
             spark, sql, plan, "delete", _seq(plan.subqueries()),
             lambda p: p.table(),
         )
-        return self._rewrite(spark, "delete", loc, meta, mor, plan.condition())
+        return self._rewrite(spark, "delete", loc, meta, mor,
+                             _unqualify(spark, plan.condition(), alias))
 
     def _rewrite(self, spark, verb, loc, meta, mor, cond, assignments=None):
         """UPDATE or DELETE through iceberg_fs's one row-level path;
@@ -1131,7 +1159,8 @@ class FsCatalog:
                 # no source row exists for these target rows, so the
                 # expression may reference only literals and target
                 # columns
-                nmbs[canon[col.lower()]] = _column(spark, a.value())
+                nmbs[canon[col.lower()]] = _column(spark, _unqualify(
+                    spark, a.value(), tgt_alias, src_alias))
         update_cols = None
         if kinds[0] == ["UpdateAction"]:
             # explicit assignments: each must be [tgt.]col = src.col

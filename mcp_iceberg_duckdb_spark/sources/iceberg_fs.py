@@ -17,11 +17,15 @@ every snapshot carries v2 sequence numbers.
   lists a file; the surviving parquet paths feed
   ``spark.read.parquet`` and the residual filter stays pushed down
   inside Spark's scan.
-- write path: Spark writes parquet; the commit assembles per-file
-  stats from parquet footers (pyarrow), writes manifests and a
-  manifest list and links the next metadata version
-  (_commit_snapshot / _commit_meta) — snapshot history and time
-  travel come along for free.
+- write path: Spark writes parquet; every data commit goes through
+  one snapshot producer (_produce, Iceberg's merging-snapshot rule):
+  base manifests that hold no removed file are kept by reference,
+  the ones that do are rewritten from their own entry records, and
+  the new files' stats come from their own parquet footers
+  (pyarrow) — a commit reads only the files it writes. The manifest
+  list then links the next metadata version (_commit_snapshot /
+  _commit_meta) — snapshot history and time travel come along for
+  free.
 
 Reference parity: IcebergConnection.py:107-177 reads via PyIceberg
 `table.scan().to_arrow()` — an unfiltered full download. This path
@@ -1021,25 +1025,20 @@ def append(spark, loc: str, df, stat_cols=None, branch=None) -> dict:
                 f"ref {branch!r} is a tag — tags are immutable"
             )
         base_id = r["snapshot-id"]
-    new_files = _write_replacement(spark, loc, df, meta)
-    snapshot_id, seq = _new_snapshot(meta)
-    dm = _data_manifest(
-        loc, meta, new_files, snapshot_id, stat_cols=stat_cols, seq=seq
-    )
-    # carry forward the BASE snapshot's manifests (append-only):
-    # the branch head when writing to a branch, else the table head
-    manifests = (
-        _snapshot_manifests(loc, meta, base_id) if base_id != -1 else []
-    )
+    added = [
+        _data_record(meta, p, stat_cols)
+        for p in _write_replacement(spark, loc, df, meta)
+    ]
+    # the base is the branch head when writing to a branch, else the
+    # table head; nothing is removed, so its manifests carry by reference
+    entries = _live_entries(loc, meta, base_id) if base_id != -1 else []
     summary = {
         "operation": "append",
-        "added-data-files": str(len(new_files)),
-        "added-records": str(sum(_num_rows(p) for p in new_files)),
+        "added-data-files": str(len(added)),
+        "added-records": str(sum(r["record_count"] for r in added)),
     }
-    return _commit_snapshot(
-        loc, meta, snapshot_id, seq, manifests + ([dm] if dm else []),
-        summary, parent_id=base_id, branch=branch,
-    )
+    return _produce(loc, meta, entries, summary, added, parent_id=base_id,
+                    branch=branch)
 
 
 def _read_file(path: str) -> bytes:
@@ -1058,18 +1057,14 @@ def _list_parquet(root: str):
     return out
 
 
-def _num_rows(path: str) -> int:
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(path).metadata.num_rows
-
-
 def _written_parquet(out_dir: str) -> list:
     """(path, rows) of every non-empty parquet file Spark wrote under
     ``out_dir``; empty ones are removed from disk."""
+    import pyarrow.parquet as pq
+
     out = []
     for p in _list_parquet(out_dir):
-        n = _num_rows(p)
+        n = pq.ParquetFile(p).metadata.num_rows
         if n > 0:
             out.append((p, n))
         else:
@@ -1207,19 +1202,12 @@ def _prune(meta: dict, entries, filters=()) -> list:
     # current default — two specs may carry same-named fields with
     # different transforms, and a file's partition tuple only means
     # what its own spec says it means
-    specs_by_id = {
-        s["spec-id"]: s["fields"]
-        for s in meta.get(
-            "partition-specs",
-            [{"spec-id": 0, "fields": meta["partition-spec"]}],
-        )
-    }
     structs: dict = {}
     files = []
     for e in entries:
         if e.spec_id not in structs:
             structs[e.spec_id] = _prune_structs(
-                specs_by_id.get(e.spec_id, meta["partition-spec"]), by_id
+                _spec_fields(meta, e.spec_id), by_id
             )
         keep = True
         for col, op, val in filters:
@@ -1243,14 +1231,14 @@ def _prune(meta: dict, entries, filters=()) -> list:
     return files
 
 
-def _split(meta: dict, entries, filters) -> tuple[list, list]:
-    """(candidates, untouched): the live data files ``filters`` may
-    match, and every other live data file — both from one walk."""
-    candidates = _prune(meta, entries, filters)
-    chosen = set(candidates)
-    return candidates, [
-        p for p in _prune(meta, entries) if p not in chosen
-    ]
+def _spec_fields(meta: dict, spec_id: int) -> list:
+    """The fields of partition spec ``spec_id``; the current spec's
+    when the table lists no such spec (metadata written before
+    partition-specs)."""
+    for spec in meta.get("partition-specs", ()):
+        if spec["spec-id"] == spec_id:
+            return spec["fields"]
+    return meta["partition-spec"]
 
 
 def _prune_structs(spec_fields, by_id):
@@ -1421,14 +1409,19 @@ class _Entry(NamedTuple):
 
     kind: str  # "data", "position" (delete) or "equality" (delete)
     seq: int  # data sequence number
-    spec_id: int  # partition spec the entry's manifest was written under
     status: int  # 0 EXISTING, 1 ADDED
     snapshot_id: int | None  # snapshot that wrote the entry
     file: dict  # the entry's data_file record
+    manifest: dict  # the manifest-list record of the entry's manifest
 
     @property
     def path(self) -> str:
         return self.file["file_path"]
+
+    @property
+    def spec_id(self) -> int:
+        """The partition spec the entry's manifest was written under."""
+        return self.manifest.get("partition_spec_id", 0)
 
 
 def _live_entries(loc: str, meta: dict, snapshot_id=None, kind=None):
@@ -1438,9 +1431,11 @@ def _live_entries(loc: str, meta: dict, snapshot_id=None, kind=None):
     dropped. An entry's data sequence number is its own explicit one
     when present (EXISTING files carried through a CoW keep their
     original) and otherwise the manifest's (ADDED files inherit it);
-    both are 0 for tables written before sequence numbers. ``kind``
-    keeps only "data", "position" or "equality" entries, and skips
-    reading manifests that cannot hold that kind."""
+    both are 0 for tables written before sequence numbers. Each
+    entry carries its manifest's list record, which a commit keeps by
+    reference (_produce). ``kind`` keeps only "data", "position" or
+    "equality" entries, and skips reading manifests that cannot hold
+    that kind."""
     if not meta["snapshots"]:
         return []
     out = []
@@ -1449,7 +1444,6 @@ def _live_entries(loc: str, meta: dict, snapshot_id=None, kind=None):
         if kind is not None and deletes == (kind == "data"):
             continue
         mseq = m.get("sequence_number", 0) or 0
-        spec_id = m.get("partition_spec_id", 0)
         _, entries = read_container(_read_file(m["manifest_path"]))
         for e in entries:
             if e["status"] == 2:  # DELETED
@@ -1462,8 +1456,8 @@ def _live_entries(loc: str, meta: dict, snapshot_id=None, kind=None):
                 continue
             eseq = e.get("sequence_number")
             out.append(_Entry(
-                k, mseq if eseq is None else eseq, spec_id, e["status"],
-                e.get("snapshot_id"), df_,
+                k, mseq if eseq is None else eseq, e["status"],
+                e.get("snapshot_id"), df_, m,
             ))
     return out
 
@@ -1481,18 +1475,6 @@ def _eq_deletes(entries) -> list:
         for e in entries
         if e.kind == "equality"
     ]
-
-
-def _carry(e: _Entry) -> dict:
-    """The _delete_manifest spec re-listing live delete entry ``e``
-    with its original sequence number."""
-    eq = e.kind == "equality"
-    return {
-        "path": e.path,
-        "seq": e.seq,
-        "content": 2 if eq else 1,
-        "equality_ids": list(e.file.get("equality_ids") or ()) if eq else None,
-    }
 
 
 def _plan_file_seqs(loc: str, snapshot_id=None) -> dict:
@@ -1837,11 +1819,12 @@ def _filters_predicate(ice_schema: dict, filters):
     return reduce(operator.and_, preds) if preds else F.lit(True)
 
 
-def _write_position_deletes(spark, loc: str, matched, n_files=None):
+def _write_position_deletes(spark, loc: str, meta: dict, matched,
+                            n_files=None):
     """Write ``matched`` rows' (__fp, __pos) as position-delete
     parquet under <loc>/deletes/, spec-sorted by (file_path, pos) and
     clustered by file (into ``n_files`` files when given). Returns
-    (files, n_rows)."""
+    (the files' _delete_record records, n_rows)."""
     from pyspark.sql import functions as F
 
     out_dir = os.path.join(loc, "deletes", str(uuid.uuid4()))
@@ -1856,7 +1839,11 @@ def _write_position_deletes(spark, loc: str, matched, n_files=None):
     )
     rows.sortWithinPartitions("file_path", "pos").write.parquet(out_dir)
     written = _written_parquet(out_dir)
-    return [p for p, _ in written], sum(n for _, n in written)
+    return [
+        _delete_record(meta, p, {
+            "record_count": n, "file_size_in_bytes": os.path.getsize(p)})
+        for p, n in written
+    ], sum(n for _, n in written)
 
 
 class _RowPlan(NamedTuple):
@@ -1904,30 +1891,31 @@ def _rewrite(spark, loc: str, meta: dict, filters, plan_fn, mor: bool):
     from pyspark.sql import functions as F
 
     entries = _live_entries(loc, meta)
-    candidates, untouched = _split(meta, entries, filters)
+    candidates = _prune(meta, entries, filters)
     plan = plan_fn(_read_live(spark, loc, meta, candidates, entries, mor))
     new_files: list[str] = []
     if not mor:
         if candidates or plan.inserts:
             new_files = _write_replacement(
                 spark, loc, plan.replacement(), meta)
-        return _commit_overwrite(
-            loc, meta, entries, candidates, untouched, new_files)
+        return _commit_cow(
+            loc, meta, entries, "overwrite", candidates, new_files)
     changed = plan.rows.filter(plan.changed)
     if plan.keeps is not None:  # read twice: deletes, then appends
         changed = changed.persist()
-    del_files, n_rows = [], 0
+    added, n_rows = [], 0
     try:
         if candidates:
-            del_files, n_rows = _write_position_deletes(
-                spark, loc, changed.filter(F.col("__fp").isNotNull()))
+            added, n_rows = _write_position_deletes(
+                spark, loc, meta, changed.filter(F.col("__fp").isNotNull()))
         if plan.keeps is not None and (n_rows or plan.inserts):
             new_files = _write_replacement(spark, loc, changed.filter(
                 plan.keeps).select(*plan.out), meta)
     finally:
         changed.unpersist()
-    return _commit_mor(loc, meta, del_files, n_rows, new_files,
-                       "delete" if plan.keeps is None else "overwrite")
+    return _commit_mor(
+        loc, meta, entries, "delete" if plan.keeps is None else "overwrite",
+        added + [_data_record(meta, p) for p in new_files], n_rows=n_rows)
 
 
 def _rewrite_where(spark, loc: str, meta: dict, predicate, assignments=None,
@@ -2127,7 +2115,7 @@ def mor_delete_keys(spark, loc: str, key_cols, keys_df,
         .write.parquet(out_dir)
     )
     ids = [by_name[c]["id"] for c in key_cols]
-    specs, n_rows = [], 0
+    added, n_rows = [], 0
     for p, n in _written_parquet(out_dir):
         # key-column bounds + null counts from the delete file's own
         # footer: readers skip this file entirely when its key ranges
@@ -2135,61 +2123,80 @@ def mor_delete_keys(spark, loc: str, key_cols, keys_df,
         # eq-delete analog of position-delete path bounds; null counts
         # gate the skip — a NULL delete key matches NULL targets
         # regardless of any value range)
-        stats = _file_stats(p, meta["schema"], set(key_cols))
-        specs.append(
-            {"path": p, "seq": None, "content": 2,
-             "equality_ids": ids,
-             "lower_bounds": stats["lower_bounds"],
-             "upper_bounds": stats["upper_bounds"],
-             "null_value_counts": stats["null_value_counts"]}
-        )
+        added.append(_delete_record(
+            meta, p, _file_stats(p, meta["schema"], set(key_cols)), ids))
         n_rows += n
     return _commit_mor(
-        loc,
-        meta,
-        specs,
-        0,
-        [],
-        "delete",
-        extra_summary={"added-equality-deletes": str(n_rows)},
+        loc, meta, _live_entries(loc, meta), "delete", added,
+        extra={"added-equality-deletes": str(n_rows)},
     )
 
 
-def _file_entry(status, snapshot_id, seq, path, partition, stats,
-                content=0, equality_ids=None) -> dict:
-    """One manifest entry for a data or delete file. ``seq`` None
-    means "inherit the manifest's sequence number" (ADDED files);
-    ``stats`` holds record_count, file_size_in_bytes and the optional
+def _file_record(path: str, partition: dict, stats: dict, content: int = 0,
+                 equality_ids=None) -> dict:
+    """The manifest ``data_file`` record of a data file (``content``
+    0) or a delete file (1 position, 2 equality). ``stats`` holds
+    record_count, file_size_in_bytes and the optional
     null_value_counts / lower_bounds / upper_bounds maps."""
     return {
-        "status": status,
-        "snapshot_id": snapshot_id,
-        "sequence_number": seq,
-        "data_file": {
-            "content": content,
-            "file_path": path,
-            "file_format": "PARQUET",
-            "partition": partition,
-            "record_count": stats["record_count"],
-            "file_size_in_bytes": stats["file_size_in_bytes"],
-            "block_size_in_bytes": 64 * 1024 * 1024,
-            "value_counts": None,
-            "null_value_counts": stats.get("null_value_counts"),
-            "lower_bounds": stats.get("lower_bounds"),
-            "upper_bounds": stats.get("upper_bounds"),
-            "equality_ids": equality_ids,
-        },
+        "content": content,
+        "file_path": path,
+        "file_format": "PARQUET",
+        "partition": partition,
+        "record_count": stats["record_count"],
+        "file_size_in_bytes": stats["file_size_in_bytes"],
+        "block_size_in_bytes": 64 * 1024 * 1024,
+        "value_counts": None,
+        "null_value_counts": stats.get("null_value_counts"),
+        "lower_bounds": stats.get("lower_bounds"),
+        "upper_bounds": stats.get("upper_bounds"),
+        "equality_ids": equality_ids,
     }
 
 
+def _data_record(meta: dict, path: str, stat_cols=None) -> dict:
+    """The record of a data file the commit wrote: hive-dir partition
+    values under the current spec and parquet-footer stats for
+    ``stat_cols`` (default every column)."""
+    ice_schema = meta["schema"]
+    if stat_cols is None:
+        stat_cols = [f["name"] for f in ice_schema["fields"]]
+    return _file_record(
+        path, _partition_from_path(path, meta["partition-spec"], ice_schema),
+        _file_stats(path, ice_schema, set(stat_cols)),
+    )
+
+
+def _delete_record(meta: dict, path: str, stats: dict,
+                   equality_ids=None) -> dict:
+    """The record of a delete file the commit wrote: an equality
+    delete when ``equality_ids`` is given (its ``stats`` carry the key
+    columns' bounds and null counts, for read-time range scoping), a
+    position delete otherwise, bounded by the exact min/max NORMALIZED
+    referenced data-file path — readers scope position-delete files
+    to a scan on these bounds without opening them (_position_deletes
+    stage 1). Delete files carry no partition values."""
+    if equality_ids is None:
+        refs = sorted(_delete_refs(path))
+        if refs:
+            lo, hi = (encode_bound("string", r) for r in (refs[0], refs[-1]))
+            stats = {**stats, "lower_bounds": {_DELETE_PATH_FID: lo},
+                     "upper_bounds": {_DELETE_PATH_FID: hi}}
+    return _file_record(
+        path, {f["name"]: None for f in meta["partition-spec"]}, stats,
+        1 if equality_ids is None else 2, equality_ids,
+    )
+
+
 def _write_manifest(loc: str, meta: dict, entries, snapshot_id, seq,
-                    content: int = 0, added=None) -> dict:
+                    content: int = 0, spec_id=None) -> dict:
     """Write ``entries`` as a manifest (content 0 = data, 1 = deletes)
-    under the table's current partition spec and return its
-    manifest-list entry. ``added`` is the added-files count (default:
-    every entry)."""
+    under partition spec ``spec_id`` (default the current one) and
+    return its manifest-list record."""
+    if spec_id is None:
+        spec_id = int(meta.get("default-spec-id", 0))
     blob = write_container(
-        _manifest_schema(meta["partition-spec"], meta["schema"]), entries
+        _manifest_schema(_spec_fields(meta, spec_id), meta["schema"]), entries
     )
     mpath = os.path.join(
         _meta_dir(loc), f"{uuid.uuid4()}-{'d' if content else 'm'}0.avro"
@@ -2199,144 +2206,132 @@ def _write_manifest(loc: str, meta: dict, entries, snapshot_id, seq,
     return {
         "manifest_path": mpath,
         "manifest_length": len(blob),
-        "partition_spec_id": int(meta.get("default-spec-id", 0)),
+        "partition_spec_id": spec_id,
         "content": content,
-        "sequence_number": seq or 0,
+        "sequence_number": seq,
         "added_snapshot_id": snapshot_id,
-        "added_data_files_count": len(entries) if added is None else added,
+        "added_data_files_count": sum(e["status"] == 1 for e in entries),
     }
 
 
-def _delete_manifest(loc: str, meta: dict, delete_specs, snapshot_id,
-                     seq=None):
-    """Write a content=1 manifest of delete files and return its
-    manifest-list entry (None when there are no files). Shared by the
-    MoR commit (new deletes) and the CoW overwrite commit (carrying
-    forward deletes that still apply to surviving data files).
+def _produce(loc: str, meta: dict, entries, summary: dict, added=(),
+             removed=(), parent_id=None, branch=None) -> dict:
+    """The one snapshot producer of every data commit, Iceberg's
+    merging-snapshot rule. ``entries`` is the statement's full walk of
+    its base snapshot (_live_entries, no ``kind``), ``added`` the records of the data
+    and delete files it wrote, ``removed`` the paths of the live files
+    it drops. The manifest list is:
 
-    ``delete_specs``: iterable of either a path string (new
-    POSITION-delete file; sequence inherited from ``seq``) or a dict
-    ``{"path", "seq", "content", "equality_ids"}`` — the carried /
-    equality form, where per-entry sequence numbers must survive
-    verbatim (equality-delete scoping depends on them)."""
-    entries = []
-    for spec in delete_specs:
-        if isinstance(spec, str):
-            spec = {"path": spec, "seq": None, "content": 1,
-                    "equality_ids": None}
-        p = spec["path"]
-        lower = upper = None
-        if spec["content"] == 1:
-            # exact min/max NORMALIZED referenced data-file path —
-            # readers scope position-delete files to a scan on these
-            # bounds without opening them (_position_deletes stage 1)
-            refs = sorted(_delete_refs(p))
-            if refs:
-                lower = {_DELETE_PATH_FID: encode_bound("string", refs[0])}
-                upper = {_DELETE_PATH_FID: encode_bound("string", refs[-1])}
-        else:
-            # equality deletes carry their KEY-column bounds (when the
-            # writer recorded them) for read-time range scoping
-            lower = spec.get("lower_bounds")
-            upper = spec.get("upper_bounds")
-        stats = {
-            "record_count": _num_rows(p),
-            "file_size_in_bytes": os.path.getsize(p),
-            "null_value_counts": spec.get("null_value_counts"),
-            "lower_bounds": lower,
-            "upper_bounds": upper,
-        }
-        entries.append(_file_entry(
-            1, snapshot_id, spec["seq"], p,
-            {e["name"]: None for e in meta["partition-spec"]}, stats,
-            content=spec["content"], equality_ids=spec["equality_ids"],
-        ))
-    if not entries:
-        return None
-    return _write_manifest(loc, meta, entries, snapshot_id, seq, content=1)
+    - every base manifest that holds no removed file, by reference
+      (its manifest-list record verbatim);
+    - every base manifest that holds one, rewritten from its own
+      entry records under its own partition spec: removed entries
+      DELETED, the others EXISTING with explicit sequence numbers —
+      stats, partition tuples and equality ids are copied, never
+      recomputed. A manifest left with no live entry is absent from
+      the next walk, so it is not carried into later snapshots;
+    - the new files as ADDED entries: in the first rewritten manifest
+      of their content under the current spec, else in one new data
+      and one new delete manifest.
 
-
-def _data_entry(meta: dict, path: str, status: int, snapshot_id, seq,
-                stat_cols=None, missing_ok=False) -> dict:
-    """Manifest entry of a data file: hive-dir partition values under
-    the current spec and parquet-footer stats for ``stat_cols``
-    (default every column)."""
-    ice_schema = meta["schema"]
-    if stat_cols is None:
-        stat_cols = [f["name"] for f in ice_schema["fields"]]
-    part = _partition_from_path(
-        path, meta["partition-spec"], ice_schema, missing_ok=missing_ok
-    )
-    stats = _file_stats(path, ice_schema, set(stat_cols))
-    return _file_entry(status, snapshot_id, seq, path, part, stats)
-
-
-def _data_manifest(loc: str, meta: dict, files, snapshot_id,
-                   stat_cols=None, seq=None):
-    """Write a content=0 manifest of ADDED data files and return its
-    manifest-list entry, or None when ``files`` is empty. Shared by
-    append and the MoR commits. ``seq`` stamps the manifest-list
-    entry's sequence number; per-entry numbers stay null (=
-    inherit)."""
-    if not files:
-        return None
-    entries = [
-        _data_entry(meta, p, 1, snapshot_id, None, stat_cols)
-        for p in files
-    ]
-    return _write_manifest(loc, meta, entries, snapshot_id, seq)
-
-
-def _commit_mor(
-    loc: str, meta: dict, new_delete_files, n_rows, new_data_files,
-    operation: str, carry_delete_manifests: bool = True,
-    requeue_equality_deletes: bool = True,
-    extra_summary: dict | None = None,
-) -> dict:
-    """Commit a merge-on-read snapshot: previous manifests carried
-    verbatim (no data file rewritten), plus a content=1 manifest for
-    the new position-delete files and — for MoR UPDATE — a content=0
-    manifest for the appended updated rows. Marks the table
-    format-version 2, the spec version that introduces delete
-    files. ``carry_delete_manifests=False`` drops the previous
-    content=1 manifests instead (rewrite_position_deletes: the new
-    delete files REPLACE the old POSITION-delete set; live EQUALITY
-    deletes are re-listed in the fresh manifest with their original
-    sequence numbers; data manifests still carry verbatim).
-    ``new_delete_files`` entries are path strings (new position
-    deletes at this commit's sequence) or the dict spec form
-    (_delete_manifest) for equality deletes."""
+    A commit thus reads only the files it writes, and its cost follows
+    the manifests it touches, not the table. ``parent_id`` (default
+    the head) and ``branch`` go to _commit_snapshot."""
     snapshot_id, seq = _new_snapshot(meta)
-    head = meta["current-snapshot-id"]
-    prev = _snapshot_manifests(loc, meta) if head != -1 else []
-    delete_specs = list(new_delete_files)
-    if not carry_delete_manifests and requeue_equality_deletes:
-        delete_specs += [
-            _carry(e) for e in _live_entries(loc, meta, kind="equality")
-        ]
-    manifests = [
-        m
-        for m in prev
-        if carry_delete_manifests or m.get("content", 0) != 1
-    ]
-    for m in (
-        _data_manifest(loc, meta, new_data_files, snapshot_id, seq=seq),
-        _delete_manifest(loc, meta, delete_specs, snapshot_id, seq=seq),
-    ):
-        if m is not None:
+    removed = set(removed)
+    new = {0: [], 1: []}
+    for r in added:
+        new[int(r["content"] > 0)].append({
+            "status": 1, "snapshot_id": snapshot_id,
+            "sequence_number": None, "data_file": r,
+        })
+    groups: dict = {}
+    for e in entries:
+        groups.setdefault(e.manifest["manifest_path"], []).append(e)
+    manifests = []
+    for group in groups.values():
+        m = group[0].manifest
+        if removed.isdisjoint(e.path for e in group):
             manifests.append(m)
-    summary = {
+            continue
+        content, spec_id = m.get("content", 0), group[0].spec_id
+        rows = [
+            # a DELETED entry names the snapshot that removed it
+            {"status": 2, "snapshot_id": snapshot_id,
+             "sequence_number": e.seq, "data_file": e.file}
+            if e.path in removed else
+            {"status": 0, "snapshot_id": e.snapshot_id,
+             "sequence_number": e.seq, "data_file": e.file}
+            for e in group
+        ]
+        if spec_id == meta.get("default-spec-id", 0):
+            # the new files join the first rewritten manifest of their
+            # content under the current spec: one manifest file fewer
+            rows += new.pop(content, [])
+        manifests.append(_write_manifest(
+            loc, meta, rows, snapshot_id, seq, content, spec_id))
+    for content, rows in new.items():
+        if rows:
+            manifests.append(
+                _write_manifest(loc, meta, rows, snapshot_id, seq, content))
+    if parent_id is None:
+        parent_id = meta["current-snapshot-id"]
+    return _commit_snapshot(
+        loc, meta, snapshot_id, seq, manifests, summary, parent_id, branch
+    )
+
+
+def _commit_cow(loc: str, meta: dict, entries, operation: str, rewritten,
+                new_files) -> dict:
+    """Commit a copy-on-write snapshot through _produce: the
+    ``new_files`` written replace the ``rewritten`` data files. Shared
+    by the row-level writer's copy-on-write shape (_rewrite: DELETE,
+    UPDATE, MERGE), compact_files and overwrite_table.
+
+    Deletes that can no longer mask a surviving data file are removed
+    with them: the rewrite read through their masks, so their effect
+    is now physical (how compaction retires merge-on-read overhead).
+    A position delete stays while _position_deletes — the read-time
+    scoping — plans it for the survivors. An equality delete stays
+    while some survivor is strictly older than it; rewritten files
+    re-enter at the new commit's sequence number, past every live
+    delete, and EXISTING files keep their original numbers (bumping
+    them would un-delete equality-masked rows)."""
+    gone = set(rewritten)
+    seqs = {p: s for p, s in _file_seqs(entries).items() if p not in gone}
+    masking = set(_position_deletes(entries, list(seqs)) if seqs else ())
+    oldest = min(seqs.values(), default=None)
+    retired = [
+        e.path for e in entries
+        if (e.kind == "position" and e.path not in masking)
+        or (e.kind == "equality" and (oldest is None or e.seq <= oldest))
+    ]
+    return _produce(loc, meta, entries, {
         "operation": operation,
-        "added-delete-files": str(len(new_delete_files)),
+        "deleted-data-files": str(len(rewritten)),
+        "added-data-files": str(len(new_files)),
+    }, [_data_record(meta, p) for p in new_files], [*rewritten, *retired])
+
+
+def _commit_mor(loc: str, meta: dict, entries, operation: str, added,
+                removed=(), n_rows: int = 0, extra: dict | None = None
+                ) -> dict:
+    """Commit a merge-on-read snapshot through _produce: ``added``
+    records of new delete files (``n_rows`` position-delete rows) and,
+    for an UPDATE or MERGE, of appended data files; ``removed`` delete
+    files a maintenance action replaces. No data file is rewritten.
+    Marks the table format-version 2, the spec version that
+    introduces delete files. ``extra`` adds summary fields."""
+    n_deletes = sum(r["content"] > 0 for r in added)
+    meta["format-version"] = 2
+    return _produce(loc, meta, entries, {
+        "operation": operation,
+        "added-delete-files": str(n_deletes),
         "added-position-deletes": str(n_rows),
         "deleted-data-files": "0",
-        "added-data-files": str(len(new_data_files)),
-        **(extra_summary or {}),
-    }
-    meta["format-version"] = 2
-    return _commit_snapshot(
-        loc, meta, snapshot_id, seq, manifests, summary, parent_id=head
-    )
+        "added-data-files": str(len(added) - n_deletes),
+        **(extra or {}),
+    }, added, removed)
 
 
 _ICE_TO_SPARK = {
@@ -2525,78 +2520,6 @@ def _write_replacement(spark, loc: str, replacement, meta):
         else:
             sess.conf.set(key, prev)
     return sorted(set(_list_parquet(data_dir)) - set(before))
-
-
-def _commit_overwrite(
-    loc: str, meta: dict, entries, candidates, untouched, new_files,
-    operation: str = "overwrite",
-) -> dict:
-    """Commit a copy-on-write snapshot: ``candidates`` recorded
-    DELETED, ``new_files`` ADDED, ``untouched`` carried as EXISTING —
-    one compacted manifest (spec-legal), new manifest list, new
-    metadata version. ``entries`` is the statement's walk of the head
-    ``meta`` commits against. Shared by the row-level writer's
-    copy-on-write shape (_rewrite: DELETE, UPDATE, MERGE), compaction
-    (compact_files) and overwrite_table.
-
-    Merge-on-read interplay: live position-delete files that still
-    reference a SURVIVING (untouched) data file are carried forward
-    in a content=1 manifest — their masked rows must stay masked.
-    Delete files whose every referenced data file was rewritten are
-    dropped (the rewrite read through them, so their effect is now
-    physical); that is how compaction retires MoR overhead. The same
-    rule by SEQUENCE for equality deletes: an equality-delete file is
-    carried while any surviving data file is strictly older than it;
-    rewritten files re-enter at the new commit's sequence, so carried
-    equality deletes no longer apply to them (the rewrite read
-    through the masks). EXISTING data files keep their ORIGINAL
-    sequence numbers per-entry — bumping them would un-delete
-    equality-masked rows."""
-    snapshot_id, seq = _new_snapshot(meta)
-    file_seqs = _file_seqs(entries)
-    keep_deletes: list = []
-    if untouched:
-        untouched_uri = {_uri_path(p) for p in untouched}
-        oldest_surviving = min(file_seqs.get(p, 0) for p in untouched)
-        keep_deletes = [
-            _carry(e)
-            for e in entries
-            if e.kind == "position" and _delete_refs(e.path) & untouched_uri
-        ] + [
-            _carry(e)
-            for e in entries
-            if e.kind == "equality" and e.seq > oldest_surviving
-        ]
-    data_entries = [
-        # untouched/deleted files may predate the current partition
-        # spec (spec evolution): fields absent from their paths record
-        # None — never pruned, still planned. ADDED files inherit this
-        # commit's sequence (null); EXISTING/DELETED keep their own.
-        _data_entry(
-            meta, p, status, snapshot_id,
-            None if status == 1 else file_seqs.get(p, 0),
-            missing_ok=status != 1,
-        )
-        for status, paths in ((0, untouched), (1, new_files), (2, candidates))
-        for p in paths
-    ]
-    manifests = [
-        _write_manifest(
-            loc, meta, data_entries, snapshot_id, seq, added=len(new_files)
-        )
-    ]
-    dm = _delete_manifest(loc, meta, keep_deletes, snapshot_id, seq=seq)
-    if dm is not None:
-        manifests.append(dm)
-    summary = {
-        "operation": operation,
-        "deleted-data-files": str(len(candidates)),
-        "added-data-files": str(len(new_files)),
-    }
-    return _commit_snapshot(
-        loc, meta, snapshot_id, seq, manifests, summary,
-        parent_id=meta["current-snapshot-id"],
-    )
 
 
 def read_iceberg(spark, loc: str, snapshot_id=None, filters=(), stats_out=None):
@@ -3309,9 +3232,7 @@ def compact_files(
         n_out = max(1, math.ceil(total_bytes / target_file_bytes))
         df = df.repartition(n_out)
     new_files = _write_replacement(spark, loc, df, meta)
-    return _commit_overwrite(
-        loc, meta, entries, live, [], new_files, operation="replace"
-    )
+    return _commit_cow(loc, meta, entries, "replace", live, new_files)
 
 
 def overwrite_table(spark, loc: str, df=None) -> dict:
@@ -3330,10 +3251,8 @@ def overwrite_table(spark, loc: str, df=None) -> dict:
         if df is not None
         else []
     )
-    return _commit_overwrite(
-        loc, meta, entries, _prune(meta, entries), [], new_files,
-        operation="overwrite",
-    )
+    return _commit_cow(
+        loc, meta, entries, "overwrite", _prune(meta, entries), new_files)
 
 
 def rewrite_position_deletes(
@@ -3347,10 +3266,10 @@ def rewrite_position_deletes(
     files, drop rows referencing data files that are no longer live
     (dead masks from CoW rewrites), dedup, and write the union back
     as ceil(input bytes / target_file_bytes) spec-sorted files. The
-    'replace' commit carries every DATA manifest verbatim — data-file
-    paths are untouched, time travel to pre-rewrite snapshots still
-    reads the original delete files — and swaps the content=1
-    manifests for one fresh one.
+    'replace' commit removes every live position delete and adds the
+    rewritten ones: data manifests carry by reference, equality
+    deletes stay where they are, and time travel to pre-rewrite
+    snapshots still reads the original delete files.
 
     At 100 TB with heavy MoR churn this is the read-amplification
     cap: scan cost returns to one small anti-join input instead of
@@ -3386,23 +3305,18 @@ def rewrite_position_deletes(
         1,
         math.ceil(sum(os.path.getsize(p) for p in old) / target_file_bytes),
     )
-    new_files, n_rows = _write_position_deletes(
+    added, n_rows = _write_position_deletes(
         spark,
         loc,
+        meta,
         rows.select(
             F.col("file_path").alias("__fp"), F.col("pos").alias("__pos")
         ),
         n_files=n_out,
     )
     return _commit_mor(
-        loc,
-        meta,
-        new_files,
-        n_rows,
-        [],
-        "replace",
-        carry_delete_manifests=False,
-        extra_summary={"rewritten-delete-files": str(len(old))},
+        loc, meta, entries, "replace", added, old, n_rows,
+        extra={"rewritten-delete-files": str(len(old))},
     )
 
 
@@ -3445,7 +3359,8 @@ def convert_equality_deletes(spark, loc: str, stats_out=None) -> dict:
     Only data files STRICTLY OLDER than some equality delete are
     read (newer files cannot be masked); existing position deletes
     are applied first so already-masked rows are not re-emitted, and
-    are carried forward with their original sequence numbers."""
+    stay where they are: the commit removes every live equality
+    delete and adds the new position deletes."""
     meta = read_table_meta(loc)
     entries = _live_entries(loc, meta)
     eq = _eq_deletes(entries)
@@ -3463,8 +3378,7 @@ def convert_equality_deletes(spark, loc: str, stats_out=None) -> dict:
     if stats_out is not None:
         stats_out["files_scanned"] = len(cand)
         stats_out["files_total"] = len(files)
-    new_files: list[str] = []
-    n_rows = 0
+    added, n_rows = [], 0
     if cand:
         df = _read_files(
             spark,
@@ -3483,25 +3397,10 @@ def convert_equality_deletes(spark, loc: str, stats_out=None) -> dict:
             {p: file_seqs.get(p, 0) for p in cand},
             how="left_semi",
         ).dropDuplicates(["__fp", "__pos"])
-        new_files, n_rows = _write_position_deletes(spark, loc, masked)
-    specs = [
-        _carry(e) for e in entries if e.kind == "position"
-    ] + list(new_files)
+        added, n_rows = _write_position_deletes(spark, loc, meta, masked)
     return _commit_mor(
-        loc,
-        meta,
-        specs,
-        n_rows,
-        [],
-        "replace",
-        carry_delete_manifests=False,
-        requeue_equality_deletes=False,
-        extra_summary={
-            "converted-equality-delete-files": str(len(eq)),
-            # the NEW position-delete files only (the specs list also
-            # carries forward the pre-existing position deletes)
-            "added-delete-files": str(len(new_files)),
-        },
+        loc, meta, entries, "replace", added, [p for p, _, _ in eq], n_rows,
+        extra={"converted-equality-delete-files": str(len(eq))},
     )
 
 

@@ -1913,3 +1913,37 @@ def test_cow_and_mor_dml_agree(cat, spark):
     assert got[0] and len(got[0]) < 24
     ops = {r["operation"] for r in run("SHOW SNAPSHOTS IN mor")}
     assert ops == {"append", "delete", "overwrite"}
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_dml_values_qualified_by_target_alias(cat, spark, mode):
+    """A NOT MATCHED BY SOURCE value may name target columns through
+    the target alias (``x.v``) as well as unqualified; one naming the
+    source alias is refused, since no source row exists for those
+    target rows. UPDATE and DELETE resolve the alias the same way."""
+    run = lambda s: cat.execute(spark, s)  # noqa: E731
+    run("CREATE TABLE t (k bigint, v double)")
+    if mode == "mor":
+        for verb in ("merge", "update", "delete"):
+            run(
+                "ALTER TABLE t SET TBLPROPERTIES"
+                f" ('write.{verb}.mode' = 'merge-on-read')"
+            )
+    run("INSERT INTO t VALUES (1, 1.0), (2, 2.0), (3, 3.0)")
+    merge = (
+        "MERGE INTO t x USING (SELECT 1 AS k, 9.0 AS v) s ON x.k = s.k"
+        " WHEN MATCHED THEN UPDATE SET *"
+        " WHEN NOT MATCHED THEN INSERT *"
+        " WHEN NOT MATCHED BY SOURCE THEN UPDATE SET {}"
+    )
+    rows = lambda: sorted(  # noqa: E731
+        (r["k"], r["v"]) for r in run("SELECT * FROM t").collect())
+    run(merge.format("x.v = x.v - 0.5"))
+    assert rows() == [(1, 9.0), (2, 1.5), (3, 2.5)]
+    run(merge.format("v = v - 0.5"))
+    assert rows() == [(1, 9.0), (2, 1.0), (3, 2.0)]
+    with pytest.raises(ValueError, match="target columns"):
+        run(merge.format("x.v = s.v - 0.5"))
+    run("UPDATE t x SET v = x.v + 1 WHERE x.k = 2")
+    run("DELETE FROM t x WHERE x.k = 3")
+    assert rows() == [(1, 9.0), (2, 2.0)]
