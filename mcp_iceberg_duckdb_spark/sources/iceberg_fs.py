@@ -20,8 +20,9 @@ every snapshot carries v2 sequence numbers.
 - write path: Spark writes parquet; every data commit goes through
   one snapshot producer (_produce, Iceberg's merging-snapshot rule):
   base manifests that hold no removed file are kept by reference,
-  the ones that do are rewritten from their own entry records, and
-  the new files' stats come from their own parquet footers
+  the ones that do are rewritten from their own entry records, the
+  kept ones fold into the commit's own manifest once 100 accumulate,
+  and the new files' stats come from their own parquet footers
   (pyarrow) — a commit reads only the files it writes. The manifest
   list then links the next metadata version (_commit_snapshot /
   _commit_meta) — snapshot history and time travel come along for
@@ -518,7 +519,9 @@ def _partition_avro_fields(spec, ice_schema):
     return out
 
 
-def _manifest_schema(part_cols, ice_schema):
+def _manifest_schema(partition_fields):
+    """The manifest-entry Avro schema whose partition record has the
+    Avro ``partition_fields`` (_partition_avro_fields of a spec)."""
     return {
         "type": "record",
         "name": "manifest_entry",
@@ -562,9 +565,7 @@ def _manifest_schema(part_cols, ice_schema):
                             "type": {
                                 "type": "record",
                                 "name": "r102",
-                                "fields": _partition_avro_fields(
-                                    part_cols, ice_schema
-                                ),
+                                "fields": partition_fields,
                             },
                             "field-id": 102,
                         },
@@ -1031,13 +1032,12 @@ def append(spark, loc: str, df, stat_cols=None, branch=None) -> dict:
     ]
     # the base is the branch head when writing to a branch, else the
     # table head; nothing is removed, so its manifests carry by reference
-    entries = _live_entries(loc, meta, base_id) if base_id != -1 else []
     summary = {
         "operation": "append",
         "added-data-files": str(len(added)),
         "added-records": str(sum(r["record_count"] for r in added)),
     }
-    return _produce(loc, meta, entries, summary, added, parent_id=base_id,
+    return _produce(loc, meta, None, summary, added, parent_id=base_id,
                     branch=branch)
 
 
@@ -1413,6 +1413,7 @@ class _Entry(NamedTuple):
     snapshot_id: int | None  # snapshot that wrote the entry
     file: dict  # the entry's data_file record
     manifest: dict  # the manifest-list record of the entry's manifest
+    avro: dict  # the Avro schema the entry's manifest was written with
 
     @property
     def path(self) -> str:
@@ -1424,41 +1425,49 @@ class _Entry(NamedTuple):
         return self.manifest.get("partition_spec_id", 0)
 
 
+def _manifest_entries(m: dict, kind=None) -> list:
+    """The live entries of the manifest whose list record is ``m``.
+    DELETED entries are dropped. An entry's data sequence number is
+    its own explicit one when present (EXISTING files carried through
+    a CoW keep their original) and otherwise the manifest's (ADDED
+    files inherit it); both are 0 for tables written before sequence
+    numbers. ``kind`` keeps only "data", "position" or "equality"
+    entries."""
+    deletes = m.get("content", 0) == 1
+    mseq = m.get("sequence_number", 0) or 0
+    avro, entries = read_container(_read_file(m["manifest_path"]))
+    out = []
+    for e in entries:
+        if e["status"] == 2:  # DELETED
+            continue
+        df_ = e["data_file"]
+        k = "data"
+        if deletes:
+            k = "equality" if df_.get("content", 1) == 2 else "position"
+        if kind is not None and k != kind:
+            continue
+        eseq = e.get("sequence_number")
+        out.append(_Entry(
+            k, mseq if eseq is None else eseq, e["status"],
+            e.get("snapshot_id"), df_, m, avro,
+        ))
+    return out
+
+
 def _live_entries(loc: str, meta: dict, snapshot_id=None, kind=None):
     """Every live manifest entry of a snapshot (default current; an
     id or a ref name otherwise), in manifest order — the one walk
-    every planner, scoper and commit filters. DELETED entries are
-    dropped. An entry's data sequence number is its own explicit one
-    when present (EXISTING files carried through a CoW keep their
-    original) and otherwise the manifest's (ADDED files inherit it);
-    both are 0 for tables written before sequence numbers. Each
-    entry carries its manifest's list record, which a commit keeps by
-    reference (_produce). ``kind`` keeps only "data", "position" or
-    "equality" entries, and skips reading manifests that cannot hold
-    that kind."""
+    every planner, scoper and commit filters (_manifest_entries per
+    manifest). Each entry carries its manifest's list record, which a
+    commit keeps by reference (_produce). ``kind`` keeps only "data",
+    "position" or "equality" entries, and skips reading manifests
+    that cannot hold that kind."""
     if not meta["snapshots"]:
         return []
     out = []
     for m in _snapshot_manifests(loc, meta, snapshot_id):
-        deletes = m.get("content", 0) == 1
-        if kind is not None and deletes == (kind == "data"):
-            continue
-        mseq = m.get("sequence_number", 0) or 0
-        _, entries = read_container(_read_file(m["manifest_path"]))
-        for e in entries:
-            if e["status"] == 2:  # DELETED
-                continue
-            df_ = e["data_file"]
-            k = "data"
-            if deletes:
-                k = "equality" if df_.get("content", 1) == 2 else "position"
-            if kind is not None and k != kind:
-                continue
-            eseq = e.get("sequence_number")
-            out.append(_Entry(
-                k, mseq if eseq is None else eseq, e["status"],
-                e.get("snapshot_id"), df_, m,
-            ))
+        if kind is None or (m.get("content", 0) == 1) != (kind == "data"):
+            out += _manifest_entries(m, kind)
     return out
 
 
@@ -2127,7 +2136,7 @@ def mor_delete_keys(spark, loc: str, key_cols, keys_df,
             meta, p, _file_stats(p, meta["schema"], set(key_cols)), ids))
         n_rows += n
     return _commit_mor(
-        loc, meta, _live_entries(loc, meta), "delete", added,
+        loc, meta, None, "delete", added,
         extra={"added-equality-deletes": str(n_rows)},
     )
 
@@ -2189,15 +2198,19 @@ def _delete_record(meta: dict, path: str, stats: dict,
 
 
 def _write_manifest(loc: str, meta: dict, entries, snapshot_id, seq,
-                    content: int = 0, spec_id=None) -> dict:
+                    content: int = 0, spec_id=None,
+                    partition_fields=None) -> dict:
     """Write ``entries`` as a manifest (content 0 = data, 1 = deletes)
     under partition spec ``spec_id`` (default the current one) and
-    return its manifest-list record."""
+    return its manifest-list record. ``partition_fields`` are the
+    Avro fields of the partition record, by default derived from the
+    spec and the current schema."""
     if spec_id is None:
         spec_id = int(meta.get("default-spec-id", 0))
-    blob = write_container(
-        _manifest_schema(_spec_fields(meta, spec_id), meta["schema"]), entries
-    )
+    if partition_fields is None:
+        partition_fields = _partition_avro_fields(
+            _spec_fields(meta, spec_id), meta["schema"])
+    blob = write_container(_manifest_schema(partition_fields), entries)
     mpath = os.path.join(
         _meta_dir(loc), f"{uuid.uuid4()}-{'d' if content else 'm'}0.avro"
     )
@@ -2214,68 +2227,132 @@ def _write_manifest(loc: str, meta: dict, entries, snapshot_id, seq,
     }
 
 
+def _existing(e: _Entry) -> dict:
+    """The EXISTING manifest row that carries live entry ``e``: its
+    record and writer snapshot copied, its data sequence number
+    explicit."""
+    return {"status": 0, "snapshot_id": e.snapshot_id,
+            "sequence_number": e.seq, "data_file": e.file}
+
+
+# Iceberg's default commit.manifest.min-count-to-merge: a commit that
+# would leave this many current-spec manifests of one content folds
+# them into the one manifest of that content it writes
+_MIN_MANIFESTS_TO_MERGE = 100
+
+
+class _Pending(NamedTuple):
+    """A manifest a commit writes: its content, spec and rows, and the
+    Avro partition fields it is written with (None: the spec's)."""
+
+    content: int
+    spec_id: int
+    rows: list
+    partition_fields: list | None = None
+
+
 def _produce(loc: str, meta: dict, entries, summary: dict, added=(),
              removed=(), parent_id=None, branch=None) -> dict:
     """The one snapshot producer of every data commit, Iceberg's
     merging-snapshot rule. ``entries`` is the statement's full walk of
-    its base snapshot (_live_entries, no ``kind``), ``added`` the records of the data
-    and delete files it wrote, ``removed`` the paths of the live files
-    it drops. The manifest list is:
+    its base snapshot (_live_entries, no ``kind``), or None for a
+    writer that removes nothing and has not walked it (append,
+    mor_delete_keys): then only the base manifest list is read.
+    ``added`` holds the records of the data and delete files the
+    statement wrote, ``removed`` the paths of the live files it drops.
+    The manifest list is:
 
     - every base manifest that holds no removed file, by reference
       (its manifest-list record verbatim);
     - every base manifest that holds one, rewritten from its own
-      entry records under its own partition spec: removed entries
-      DELETED, the others EXISTING with explicit sequence numbers —
-      stats, partition tuples and equality ids are copied, never
-      recomputed. A manifest left with no live entry is absent from
-      the next walk, so it is not carried into later snapshots;
-    - the new files as ADDED entries: in the first rewritten manifest
-      of their content under the current spec, else in one new data
-      and one new delete manifest.
+      entry records: removed entries DELETED, the others EXISTING
+      with explicit sequence numbers — stats, partition tuples and
+      equality ids are copied, never recomputed. A manifest of an
+      older spec keeps that spec and its own Avro partition record
+      (its source column may since have been dropped); a manifest
+      left with no live entry is dropped (DELETED entries are
+      informational, spec §Manifests);
+    - the new files as ADDED entries, in one data and one delete
+      manifest under the current spec, which also take the rewritten
+      current-spec rows of their content. When the list would hold
+      _MIN_MANIFESTS_TO_MERGE current-spec manifests of that content,
+      the ones kept by reference are folded in too (their live
+      entries EXISTING), so planning never reads more manifests than
+      that per content and spec.
 
-    A commit thus reads only the files it writes, and its cost follows
-    the manifests it touches, not the table. ``parent_id`` (default
-    the head) and ``branch`` go to _commit_snapshot."""
+    A commit thus reads only the files it writes (and the manifests
+    it rewrites or folds): its cost follows the manifests it touches,
+    not the table. ``parent_id`` (default the head) and ``branch`` go
+    to _commit_snapshot."""
     snapshot_id, seq = _new_snapshot(meta)
+    if parent_id is None:
+        parent_id = meta["current-snapshot-id"]
+    current = int(meta.get("default-spec-id", 0))
     removed = set(removed)
-    new = {0: [], 1: []}
-    for r in added:
-        new[int(r["content"] > 0)].append({
-            "status": 1, "snapshot_id": snapshot_id,
-            "sequence_number": None, "data_file": r,
-        })
-    groups: dict = {}
-    for e in entries:
-        groups.setdefault(e.manifest["manifest_path"], []).append(e)
-    manifests = []
-    for group in groups.values():
-        m = group[0].manifest
-        if removed.isdisjoint(e.path for e in group):
-            manifests.append(m)
+    base: dict = {}
+    if entries is None:
+        if parent_id != -1:
+            for m in _snapshot_manifests(loc, meta, parent_id):
+                base[m["manifest_path"]] = (m, ())
+    else:
+        for e in entries:
+            base.setdefault(
+                e.manifest["manifest_path"], (e.manifest, []))[1].append(e)
+    out: list = []  # kept list records and _Pending manifests, in order
+    own: dict = {}  # content -> the _Pending current-spec manifest
+
+    def own_rows(content: int) -> list:
+        if content not in own:
+            own[content] = _Pending(content, current, [])
+            out.append(own[content])
+        return own[content].rows
+
+    for m, group in base.values():
+        paths = {e.path for e in group}
+        if removed.isdisjoint(paths):
+            out.append(m)
             continue
-        content, spec_id = m.get("content", 0), group[0].spec_id
+        if paths <= removed:
+            continue
         rows = [
             # a DELETED entry names the snapshot that removed it
             {"status": 2, "snapshot_id": snapshot_id,
              "sequence_number": e.seq, "data_file": e.file}
-            if e.path in removed else
-            {"status": 0, "snapshot_id": e.snapshot_id,
-             "sequence_number": e.seq, "data_file": e.file}
+            if e.path in removed else _existing(e)
             for e in group
         ]
-        if spec_id == meta.get("default-spec-id", 0):
-            # the new files join the first rewritten manifest of their
-            # content under the current spec: one manifest file fewer
-            rows += new.pop(content, [])
-        manifests.append(_write_manifest(
-            loc, meta, rows, snapshot_id, seq, content, spec_id))
-    for content, rows in new.items():
-        if rows:
-            manifests.append(
-                _write_manifest(loc, meta, rows, snapshot_id, seq, content))
-    if parent_id is None:
-        parent_id = meta["current-snapshot-id"]
+        content, spec_id = m.get("content", 0), group[0].spec_id
+        if spec_id == current:
+            own_rows(content).extend(rows)
+        else:
+            record = next(f for f in group[0].avro["fields"]
+                          if f["name"] == "data_file")["type"]
+            part = next(f for f in record["fields"]
+                        if f["name"] == "partition")["type"]
+            out.append(_Pending(content, spec_id, rows, part["fields"]))
+    for r in added:
+        own_rows(int(r["content"] > 0)).append({
+            "status": 1, "snapshot_id": snapshot_id,
+            "sequence_number": None, "data_file": r,
+        })
+    for content, pending in own.items():
+        kept = [
+            m for m in out
+            if isinstance(m, dict) and m.get("content", 0) == content
+            and m.get("partition_spec_id", 0) == current
+        ]
+        if len(kept) + 1 >= _MIN_MANIFESTS_TO_MERGE:
+            for m in kept:
+                pending.rows.extend(map(_existing, _manifest_entries(m)))
+            folded = {m["manifest_path"] for m in kept}
+            out = [m for m in out if not isinstance(m, dict)
+                   or m["manifest_path"] not in folded]
+    manifests = [
+        m if isinstance(m, dict) else _write_manifest(
+            loc, meta, m.rows, snapshot_id, seq, m.content, m.spec_id,
+            m.partition_fields)
+        for m in out
+    ]
     return _commit_snapshot(
         loc, meta, snapshot_id, seq, manifests, summary, parent_id, branch
     )
@@ -2320,7 +2397,8 @@ def _commit_mor(loc: str, meta: dict, entries, operation: str, added,
     records of new delete files (``n_rows`` position-delete rows) and,
     for an UPDATE or MERGE, of appended data files; ``removed`` delete
     files a maintenance action replaces. No data file is rewritten.
-    Marks the table format-version 2, the spec version that
+    ``entries`` is the base walk, None when the writer read none (it
+    then removes nothing). Marks the table format-version 2, the spec version that
     introduces delete files. ``extra`` adds summary fields."""
     n_deletes = sum(r["content"] > 0 for r in added)
     meta["format-version"] = 2

@@ -1947,3 +1947,20 @@ def test_dml_values_qualified_by_target_alias(cat, spark, mode):
     run("UPDATE t x SET v = x.v + 1 WHERE x.k = 2")
     run("DELETE FROM t x WHERE x.k = 3")
     assert rows() == [(1, 9.0), (2, 2.0)]
+
+
+def test_lambda_parameter_shadows_target_alias(cat, spark):
+    """A lambda parameter named like the target alias is the
+    parameter inside the lambda's body: ``x.n`` there reads a field of
+    the parameter, not target column ``n`` (Spark's parser binds such
+    references as lambda variables, which the alias rewrite leaves
+    alone)."""
+    run = lambda s: cat.execute(spark, s)  # noqa: E731
+    run("CREATE TABLE t (k bigint, n double, a array<double>)")
+    run("INSERT INTO t VALUES (1, 0.0, array(1.0, 2.0)), (2, 0.0, array(4.0))")
+    run(
+        "UPDATE t x SET n = aggregate(x.a, named_struct('n', 10.0D),"
+        " (x, y) -> named_struct('n', x.n + y), x -> x.n) WHERE x.k = 1"
+    )
+    got = sorted((r["k"], r["n"]) for r in run("SELECT k, n FROM t").collect())
+    assert got == [(1, 13.0), (2, 0.0)]

@@ -103,3 +103,64 @@ def test_equality_delete_stats_survive_cow_commit(spark, tmp_path):
     assert stats["eq_delete_files_total"] == 1
     got = sorted(r["k"] for r in ice.read_iceberg(spark, loc).collect())
     assert got == [k for k in range(150) if k != 60]
+
+
+def test_rewrite_under_spec_whose_source_column_was_dropped(spark, tmp_path):
+    """A manifest written under an older spec keeps that spec's Avro
+    partition record when a commit rewrites it, even after the spec's
+    source column has been dropped from the schema."""
+    loc = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(k, "ab"[k % 2], float(k)) for k in range(20)],
+        "k bigint, p string, v double",
+    )
+    ice.create_table(loc, ice.spark_schema_to_iceberg(df), part_cols=["p"])
+    ice.append(spark, loc, df)
+    ice.drop_partition_field(loc, "p")
+    ice.drop_column(loc, "p")
+    ice.delete_where(spark, loc, [("k", "=", 3)])
+    got = sorted(r["k"] for r in ice.read_iceberg(spark, loc).collect())
+    assert got == [k for k in range(20) if k != 3]
+    ice.compact_files(spark, loc)
+    rows = ice.read_iceberg(spark, loc).collect()
+    assert sorted((r["k"], r["v"]) for r in rows) == [
+        (k, float(k)) for k in range(20) if k != 3]
+    assert rows[0].asDict().keys() == {"k", "v"}
+
+
+def test_append_reads_no_manifest(spark, tmp_path, monkeypatch):
+    """An append removes nothing: it reads the base manifest list,
+    never a manifest, and keeps every base manifest by reference."""
+    loc = str(tmp_path / "t")
+    before = _two_manifest_table(spark, loc)
+    read = []
+    real = ice._manifest_entries
+    monkeypatch.setattr(ice, "_manifest_entries",
+                        lambda m, *a: read.append(m) or real(m, *a))
+    ice.append(spark, loc, spark.createDataFrame([(7, 7.0)], "k bigint, v double"))
+    ice.mor_delete_keys(
+        spark, loc, ["k"], spark.createDataFrame([(7,)], "k bigint"))
+    assert read == []
+    after = ice._snapshot_manifests(loc, ice.read_table_meta(loc))
+    assert after[:2] == before and len(after) == 4
+
+
+def test_manifests_fold_at_merge_count(spark, tmp_path, monkeypatch):
+    """Once a commit would leave _MIN_MANIFESTS_TO_MERGE current-spec
+    manifests of one content, it folds the ones it keeps by reference
+    into the manifest it writes, keeping every live entry."""
+    monkeypatch.setattr(ice, "_MIN_MANIFESTS_TO_MERGE", 4)
+    loc = str(tmp_path / "t")
+    _two_manifest_table(spark, loc)
+    counts, seqs = [], []
+    for k in (200, 201, 202):
+        ice.append(spark, loc, spark.createDataFrame(
+            [(k, float(k))], "k bigint, v double"))
+        meta = ice.read_table_meta(loc)
+        counts.append(len(ice._snapshot_manifests(loc, meta)))
+        seqs.append({e.path: e.seq for e in ice._live_entries(loc, meta)})
+    assert counts == [3, 1, 2]
+    # the folded entries keep their data sequence numbers
+    assert seqs[0].items() < seqs[1].items() < seqs[2].items()
+    got = sorted(r["k"] for r in ice.read_iceberg(spark, loc).collect())
+    assert got == [*range(10), *range(100, 110), 200, 201, 202]
