@@ -27,7 +27,9 @@ callables usable without any transport.
 from __future__ import annotations
 
 import json
+import threading
 import time
+from collections import OrderedDict
 from dataclasses import dataclass
 from typing import Any
 
@@ -36,6 +38,8 @@ from pyspark.sql import SparkSession
 from mcp_iceberg_duckdb_spark import router
 
 MAX_RESULT_ROWS = 1000  # keeps JSON payloads under the ~1 MB MCP cap
+# total bytes of the warehouse SELECT answers query_table keeps for reuse
+MAX_STORED_BYTES = 32 * 1024 * 1024
 
 
 @dataclass
@@ -55,9 +59,51 @@ def _rows_to_json(df, limit: int = MAX_RESULT_ROWS) -> list[dict[str, Any]]:
     return [r.asDict(recursive=True) for r in rows]
 
 
-def _respond(rows: list[dict[str, Any]], elapsed: float) -> ToolResult:
-    body = json.dumps(rows, default=str)
+class _Answers:
+    """A least-recently-used store of serialized query_table bodies
+    whose keys plus bodies hold at most ``max_bytes`` (json.dumps
+    output is ASCII, so its length is its size), behind one lock."""
+
+    def __init__(self, max_bytes: int):
+        self.max_bytes = max_bytes
+        self.bytes = 0
+        self._bodies: OrderedDict[tuple, str] = OrderedDict()
+        self._lock = threading.Lock()
+
+    @staticmethod
+    def _size(key: tuple, body: str) -> int:
+        return len(repr(key)) + len(body)
+
+    def get(self, key: tuple) -> str | None:
+        with self._lock:
+            body = self._bodies.get(key)
+            if body is not None:
+                self._bodies.move_to_end(key)
+            return body
+
+    def put(self, key: tuple, body: str) -> None:
+        size = self._size(key, body)
+        if size > self.max_bytes:
+            return
+        with self._lock:
+            if key in self._bodies:
+                self.bytes -= self._size(key, self._bodies.pop(key))
+            self._bodies[key] = body
+            self.bytes += size
+            while self.bytes > self.max_bytes:
+                old_key, old = self._bodies.popitem(last=False)
+                self.bytes -= self._size(old_key, old)
+
+
+_ANSWERS = _Answers(MAX_STORED_BYTES)
+
+
+def _timed(body: str, elapsed: float) -> ToolResult:
     return ToolResult(f"Query execution time: {elapsed:.2f} seconds\n{body}")
+
+
+def _respond(rows: list[dict[str, Any]], elapsed: float) -> ToolResult:
+    return _timed(json.dumps(rows, default=str), elapsed)
 
 
 def _fs_catalog():
@@ -79,17 +125,33 @@ def _fs_catalog():
 def query_table(spark: SparkSession, query: str) -> ToolResult:
     """The reference's ``query_table`` tool (server.py:96-99): run a
     SQL statement against lake tables. SELECT/INSERT/CREATE/UPDATE/
-    DELETE all go through Spark SQL; errors return as text."""
-    start = time.time()
+    DELETE all go through Spark SQL; errors return as text.
+
+    With a warehouse set, a SELECT's capped, serialized answer is kept
+    in ``_ANSWERS`` (at most ``MAX_STORED_BYTES``, least recently used
+    first out) under FsCatalog's reuse key: its text, the session time
+    zone and ANSI mode, and the metadata file each table it reads is
+    at. The same SELECT over the same metadata is answered from there
+    with no Spark planning or job. Any commit to a table it reads
+    (DML, DDL, maintenance, drop and re-create) changes the key. Only
+    queries over warehouse tables and CTEs whose plans are
+    deterministic and free of current-time functions and UDFs are
+    kept, only when their tables did not move while they ran, and
+    never an error."""
+    start = time.perf_counter()
     try:
         cat = _fs_catalog()
-        df = (
-            cat.execute(spark, query)
-            if cat is not None
-            else router.execute(spark, query)
-        )
+        if cat is None:
+            df = router.execute(spark, query)
+        else:
+            df = cat.execute(spark, query, _ANSWERS.get)
+            if isinstance(df, str):  # a stored answer
+                return _timed(df, time.perf_counter() - start)
         rows = _rows_to_json(df) if df is not None else [{"status": "OK"}]
-        return _respond(rows, time.time() - start)
+        res = _respond(rows, time.perf_counter() - start)
+        if cat is not None and cat.reuse_key and cat.current(cat.reuse_key):
+            _ANSWERS.put(cat.reuse_key, res.text.partition("\n")[2])
+        return res
     except Exception as exc:  # parity: errors-as-text, server.py:106-112
         return ToolResult(f"Error executing query: {exc}", is_error=True)
 
@@ -97,7 +159,7 @@ def query_table(spark: SparkSession, query: str) -> ToolResult:
 def query_catalog(spark: SparkSession, query: str) -> ToolResult:
     """The reference's ``query_catalog`` tool (server.py:86-94):
     LIST NAMESPACES / LIST TABLES [IN ns] / DESCRIBE TABLE ns.t."""
-    start = time.time()
+    start = time.perf_counter()
     try:
         routed = router.classify(query)
         if routed.kind == "sql":
@@ -110,7 +172,7 @@ def query_catalog(spark: SparkSession, query: str) -> ToolResult:
             if cat is not None
             else router.execute(spark, query)
         )
-        return _respond(_rows_to_json(df), time.time() - start)
+        return _respond(_rows_to_json(df), time.perf_counter() - start)
     except Exception as exc:
         return ToolResult(f"Error executing query: {exc}", is_error=True)
 
@@ -120,7 +182,7 @@ def list_operators(spark: SparkSession) -> ToolResult:
     every registered operator (SURVEY.md §2 inventory) with its tags,
     oracle status, and summary — the MCP client's catalog of what
     ``run_operator`` can execute."""
-    start = time.time()
+    start = time.perf_counter()
     try:
         from mcp_iceberg_duckdb_spark import registry
 
@@ -134,7 +196,7 @@ def list_operators(spark: SparkSession) -> ToolResult:
             }
             for s in registry.QUERIES.values()
         ]
-        return _respond(rows, time.time() - start)
+        return _respond(rows, time.perf_counter() - start)
     except Exception as exc:
         return ToolResult(f"Error listing operators: {exc}", is_error=True)
 
@@ -148,7 +210,7 @@ def run_operator(
     writing SQL. ``sf_dir`` defaults to $SPARK_GRAFT_SF_DIR."""
     import os
 
-    start = time.time()
+    start = time.perf_counter()
     try:
         from mcp_iceberg_duckdb_spark import registry
 
@@ -159,7 +221,7 @@ def run_operator(
             "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
         )
         df = registry.QUERIES[name].builder(spark, sf)
-        return _respond(_rows_to_json(df), time.time() - start)
+        return _respond(_rows_to_json(df), time.perf_counter() - start)
     except Exception as exc:
         return ToolResult(f"Error executing operator: {exc}", is_error=True)
 

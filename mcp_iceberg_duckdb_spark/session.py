@@ -32,6 +32,18 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def driver_memory(phys_bytes: int | None = None) -> str:
+    """Default ``spark.driver.memory``: half the host's physical RAM
+    (``phys_bytes``, read from the OS when None), at most 16g. Where
+    the OS does not report its RAM the default stays 16g."""
+    if phys_bytes is None:
+        try:
+            phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (AttributeError, OSError, ValueError):
+            return "16g"
+    return f"{min(phys_bytes // 2, 16 << 30) >> 20}m"
+
+
 def build_session(
     app_name: str = "mcp_iceberg_duckdb_spark",
     master: str | None = None,
@@ -58,7 +70,10 @@ def build_session(
         # storage semantics and the DuckDB oracle's naive timestamps)
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory(),
+        )
         # fixture files are single small parquets; 2 MB splits let a
         # filter+agg scan use all local cores (3× on TPC-H Q1/Q3 here).
         # A production deployment reading 100 TB keeps the 128 MB

@@ -143,6 +143,39 @@ def _parse(spark, sql: str):
             sql = sql[:start] + "timestamp_ltz" + sql[stop + 1:]
 
 
+# patterns of plans whose answer can change while the tables they
+# read do not: current time/date/user/catalog, and UDFs, which report
+# themselves deterministic, or can be redefined under the same name
+_UNSTABLE = (
+    "CURRENT_LIKE", "PYTHON_UDF", "SCALA_UDF",
+    "SQL_SCALAR_FUNCTION", "SQL_TABLE_FUNCTION",
+)
+
+
+def _stable(spark, df) -> bool:
+    """Whether a query's answer depends only on the data it reads:
+    its analyzed plan (subqueries included) is deterministic — no
+    rand(), uuid(), shuffle(), Python UDTF — and holds no
+    ``_UNSTABLE`` pattern."""
+    plan = df._jdf.queryExecution().analyzed()
+    return plan.deterministic() and not any(
+        _has(spark, plan, p) for p in _UNSTABLE
+    )
+
+
+def _version(loc: str) -> tuple:
+    """(location, table-uuid, metadata version, file size, mtime) of
+    the metadata file a table is at: a new commit, a metadata-only
+    change, snapshot expiry or a drop and re-create each move it."""
+    meta = ice.read_table_meta(loc)
+    v = meta["__base-version"]
+    st = os.stat(os.path.join(loc, "metadata", f"v{v}.metadata.json"))
+    return (
+        os.path.abspath(loc), meta.get("table-uuid"), v,
+        st.st_size, st.st_mtime_ns,
+    )
+
+
 def _frame(spark, plan) -> DataFrame:
     """A DataFrame over a parsed query plan."""
     ds = _jclass(spark._jvm, "org.apache.spark.sql.classic.Dataset")
@@ -513,6 +546,9 @@ class FsCatalog:
         # manifest-pruning stats of the views the last statement
         # registered: "ns.tbl" -> {files_planned, files_total, filters}
         self.last_scan_plan: dict = {}
+        # the reuse key of the last query whose answer may be stored
+        # (see execute), else None
+        self.reuse_key: tuple | None = None
         os.makedirs(warehouse, exist_ok=True)
 
     # ---- catalog structure ----
@@ -650,9 +686,9 @@ class FsCatalog:
         ice.read_iceberg(spark, loc, snapshot_id=snap).createOrReplaceTempView(view)
         return view
 
-    def _bind(self, spark, sql: str, roots, query=None) -> str:
-        """Register a temp view for every warehouse table the parsed
-        plans under ``roots`` reference, and return ``sql`` with each
+    def _bind(self, spark, sql: str, refs: _Refs, query=None) -> str:
+        """Register a temp view for every warehouse table ``refs`` (the
+        walk of parsed plans) holds, and return ``sql`` with each
         such reference spliced to its view name at the span the
         parser recorded. A column qualifier written with an unaliased
         table's name (``sales.orders.amount``, ``t.col``) is spliced
@@ -661,7 +697,6 @@ class FsCatalog:
         referenced. ``query`` is the query whose outermost WHERE may
         prune the views (see _prune); per-table plan stats land in
         ``self.last_scan_plan``."""
-        refs = _Refs(spark, roots)
         splices, used, mentions, aliases, quals = [], {}, {}, {}, {}
         for rel, tt, alias in refs.rels:
             key = self._table(spark, _seq(rel.multipartIdentifier()), refs.ctes)
@@ -762,7 +797,9 @@ class FsCatalog:
         """``plan`` with the warehouse tables its subtrees ``roots``
         reference bound to views (see _bind); a binding that changed
         the text is parsed once more."""
-        bound = self._bind(spark, sql, roots, query) if roots else sql
+        if not roots:
+            return plan
+        bound = self._bind(spark, sql, _Refs(spark, roots), query)
         return plan if bound == sql else _parse(spark, bound)[0]
 
     def _aligned(self, spark, df, loc: str) -> DataFrame:
@@ -783,13 +820,27 @@ class FsCatalog:
 
     # ---- the SQL entry point ----
 
-    def execute(self, spark, sql: str) -> DataFrame | list[Row]:
+    def execute(
+        self, spark, sql: str, lookup=None
+    ) -> DataFrame | list[Row] | str:
         """Run one statement against the warehouse. A query returns
         its DataFrame; every other statement returns its answer as a
         list of Rows built on the driver from catalog metadata (DDL,
         DML and maintenance return a one-row status), so serving it
-        runs no Spark job."""
+        runs no Spark job.
+
+        ``lookup`` (a stored-answer getter, see server.query_table)
+        asks for a query's earlier answer. A query whose relations are
+        all warehouse tables or CTE names is keyed on its text, the
+        session time zone and ANSI mode, and the exact metadata file
+        each table is at (``_version``). When ``lookup(key)`` holds a
+        body, that str is returned: no view is bound, nothing is
+        planned. Otherwise the query's DataFrame is returned and
+        ``reuse_key`` keeps the key if the analyzed plan gives the
+        same answer for the same data (``_stable``); the caller may
+        store the answer under it while ``current(key)`` holds."""
         self.last_scan_plan = {}
+        self.reuse_key = None
         if not sql or not sql.strip():
             raise ValueError("empty query")
         for pat, handler in _HEAD:
@@ -804,7 +855,41 @@ class FsCatalog:
             and plan.child().nodeName() == "InsertIntoStatement"
         ) or _has(spark, plan, "COMMAND"):
             raise ValueError(f"unsupported statement: {sql.strip()[:80]!r}")
-        return spark.sql(self._bind(spark, sql, [plan], query=plan))
+        refs = _Refs(spark, [plan])
+        key = None if lookup is None else self._reuse_key(spark, sql, refs)
+        if key is not None and (body := lookup(key)) is not None:
+            return body
+        df = spark.sql(self._bind(spark, sql, refs, query=plan))
+        if key is not None and _stable(spark, df):
+            self.reuse_key = key
+        return df
+
+    def _reuse_key(self, spark, sql: str, refs: _Refs) -> tuple | None:
+        """The reuse key of a query (see execute), or None when a
+        relation is a session temp view, a file source or an unknown
+        name."""
+        locs = set()
+        for rel, _, _ in refs.rels:
+            parts = _seq(rel.multipartIdentifier())
+            table = self._table(spark, parts, refs.ctes)
+            if table is not None:
+                locs.add(os.path.join(self.warehouse, *table))
+            elif len(parts) != 1 or parts[0].lower() not in refs.ctes:
+                return None
+        conf = spark._jsparkSession.sessionState().conf()
+        return (
+            sql, conf.sessionLocalTimeZone(), conf.ansiEnabled(),
+            tuple(_version(loc) for loc in sorted(locs)),
+        )
+
+    @staticmethod
+    def current(key: tuple) -> bool:
+        """Whether every table a reuse key names is still at the
+        metadata file the key holds."""
+        try:
+            return tuple(_version(t[0]) for t in key[3]) == key[3]
+        except (OSError, ValueError):  # dropped since
+            return False
 
     @staticmethod
     def _ok(op: str, **extra) -> list[Row]:

@@ -231,3 +231,49 @@ def test_stdio_frames_with_warehouse_set(spark, tmp_path, monkeypatch):
         head, body = content["text"].split("\n", 1)
         assert head.startswith("Query execution time: ")
         assert body == json.dumps(want), query
+
+
+def test_stdio_repeated_select_sees_a_later_insert(tmp_path):
+    """Through the spawned server with a warehouse set: a repeated
+    SELECT gets the same body (the second from the stored answer), and
+    after an INSERT the same SELECT returns the new row."""
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_FS_WAREHOUSE=str(tmp_path / "wh"),
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        PYTHONPATH=str(REPO_ROOT),
+    )
+    env.pop("SPARK_GRAFT_SF_DIR", None)
+    p = subprocess.Popen(
+        [sys.executable, "-m", "mcp_iceberg_duckdb_spark.stdio"],
+        stdin=subprocess.PIPE,
+        stdout=subprocess.PIPE,
+        stderr=subprocess.DEVNULL,
+        env=env,
+        cwd=str(REPO_ROOT),
+        text=True,
+    )
+    ids = iter(range(1, 100))
+
+    def body(query):
+        resp = _rpc(p, "tools/call", {
+            "name": "query_table", "arguments": {"query": query},
+        }, next(ids))
+        assert not resp["result"]["isError"], resp
+        return resp["result"]["content"][0]["text"].split("\n", 1)[1]
+
+    try:
+        body("CREATE TABLE lake.t (k bigint, v string)")
+        body("INSERT INTO lake.t VALUES (1, 'a')")
+        select = "SELECT k, v FROM lake.t ORDER BY k"
+        first = body(select)
+        assert body(select) == first
+        assert json.loads(first) == [{"k": 1, "v": "a"}]
+        body("INSERT INTO lake.t VALUES (2, 'b')")
+        assert json.loads(body(select)) == [
+            {"k": 1, "v": "a"}, {"k": 2, "v": "b"},
+        ]
+    finally:
+        p.stdin.close()
+        p.wait(timeout=30)
