@@ -69,8 +69,8 @@ PRINTED_QUERIES = [
 ]
 
 # Timing-protocol marker so cross-round comparisons can detect
-# methodology changes. v2 = per-query warm + clearCache + GC settle
-# (rounds 5+); rounds 1-4 used suite-wide warmup ("v1").
+# methodology changes. v2 = per-query warm + cache release + GC
+# settle (rounds 5+); rounds 1-4 used suite-wide warmup ("v1").
 METHODOLOGY = "v2-per-query-warm"
 
 
@@ -202,7 +202,7 @@ def main() -> None:
         cluster_cc_lsh,
         lsh_verified_pairs,
     )
-    from mcp_iceberg_duckdb_spark.session import build_session
+    from mcp_iceberg_duckdb_spark.session import build_session, call_scope
 
     registry.load_all()
     spark = build_session(app_name="bench")
@@ -241,10 +241,10 @@ def main() -> None:
         import threading
 
         for name in names:
-            builder_for(name)(spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        spark.catalog.clearCache()
+            with call_scope(spark):
+                builder_for(name)(spark, SF_DIR).write.format("noop").mode(
+                    "overwrite"
+                ).save()
         spark.sparkContext._jvm.System.gc()
         lanes = [names[i::streams] for i in range(streams)]
         per_stream = [0.0] * streams
@@ -290,8 +290,9 @@ def main() -> None:
     # Per-query warm-then-time: each query warms immediately before
     # its own timed run (whole-stage-codegen/JIT are per-plan-shape
     # costs that would otherwise dominate a single cold run — q1
-    # measures 0.64 s cold vs 0.35 s warm), with the cache cleared and
-    # one GC settle between warmup and timing. The earlier
+    # measures 0.64 s cold vs 0.35 s warm), with the warmup's cached
+    # intermediates released and one GC settle between warmup and
+    # timing. The earlier
     # whole-suite-warmup-then-whole-suite-timing layout accumulated
     # allocation debt across N warmups that landed on the first timed
     # queries — measured: q1 1.3 s isolated vs 2.1 s as the first
@@ -311,25 +312,27 @@ def main() -> None:
     total = 0.0
     for name in names:
         builder = builder_for(name)
-        builder(spark, SF_DIR).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        # drop warmup persist() entries: CacheManager matches by
-        # logical plan, so the timed run would otherwise read
-        # precomputed signatures instead of measuring the pipeline
+        # each run releases its persist() entries: CacheManager
+        # matches by logical plan, so the timed run would otherwise
+        # read the warmup's precomputed signatures instead of
+        # measuring the pipeline
+        with call_scope(spark):
+            builder(spark, SF_DIR).write.format("noop").mode(
+                "overwrite"
+            ).save()
         samples = []
         for _ in range(repeats):
-            spark.catalog.clearCache()
             spark.sparkContext._jvm.System.gc()
-            start = time.perf_counter()
-            df = builder(spark, SF_DIR)
-            # noop sink: materializes EVERY output column
-            # distributed-side (count() would let Catalyst prune the
-            # computed columns away, under-measuring map-only queries;
-            # collect() would bill driver-side deserialization of
-            # large results)
-            df.write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - start)
+            with call_scope(spark):
+                start = time.perf_counter()
+                df = builder(spark, SF_DIR)
+                # noop sink: materializes EVERY output column
+                # distributed-side (count() would let Catalyst prune
+                # the computed columns away, under-measuring map-only
+                # queries; collect() would bill driver-side
+                # deserialization of large results)
+                df.write.format("noop").mode("overwrite").save()
+                samples.append(time.perf_counter() - start)
         mean = sum(samples) / len(samples)
         per_query[name] = round(mean, 3)
         if repeats > 1:

@@ -165,8 +165,13 @@ def parallelize(df: DataFrame) -> DataFrame:
     files/row groups), return the plan UNCHANGED — no exchange, no
     cost, identical to not calling this at all. Partitioning is thus
     derived from the input layout, never a constant tuned to either
-    local mode or the cluster."""
+    local mode or the cluster. With at least half as many input files
+    as the parallelism the files alone are enough scan units, so the
+    plan returns before any file is stat'ed, on any scheme: a
+    100k-file table costs no driver walk."""
     sc = df.sparkSession.sparkContext
+    if len(df.inputFiles()) * 2 >= sc.defaultParallelism:
+        return df
     splits = _scan_splits(df)
     if splits is not None and splits * 2 >= sc.defaultParallelism:
         return df

@@ -1010,8 +1010,6 @@ def connected_components(pairs):
         raise RuntimeError(
             "connected_components did not converge in 10000 rounds"
         )
-    edges.unpersist()
-    pairs.unpersist()
     return labels.select("node", "label")
 
 
@@ -1041,6 +1039,8 @@ def star_components(pairs, max_rounds: int = 30):
     node appears both as a leaf (big side) and a center (small
     side) — an exact, 1-int64 check (semi-join count), no hashing
     heuristics. Labels then read directly off the stars."""
+    # persisted: round 1 reads it four times, so the pair generation
+    # runs once; each later round reads the previous checkpoint
     edges = (
         pairs.select(
             F.greatest("src", "dst").alias("big"),
@@ -1050,13 +1050,6 @@ def star_components(pairs, max_rounds: int = 30):
         .distinct()
         .persist()
     )
-    # only the INITIAL edge relation needs a persist (it shields the
-    # expensive pair generation from round 1's four references); from
-    # round 1 on, `edges` is an eager localCheckpoint — already
-    # materialized — and the former per-round ss.persist() layered an
-    # InMemoryRelation copy on top of the checkpoint blocks (round 15:
-    # double-caching removed, one materialization per round)
-    initial = edges
     for _ in range(max_rounds):
         sym = edges.select(
             F.col("big").alias("u"), F.col("small").alias("v")
@@ -1092,9 +1085,6 @@ def star_components(pairs, max_rounds: int = 30):
             .localCheckpoint()  # truncate per-round lineage
         )
         edges = ss
-        if initial is not None:
-            initial.unpersist()
-            initial = None
         # star-forest fixed point: leaves (big) and centers (small)
         # are disjoint node sets — a cheap semi-join count over the
         # checkpointed blocks
@@ -1113,10 +1103,7 @@ def star_components(pairs, max_rounds: int = 30):
         raise RuntimeError(
             f"star_components did not converge in {max_rounds} rounds"
         )
-    # plain view over the (already checkpointed) star forest — the
-    # former extra localCheckpoint existed only so the per-round cache
-    # entry could be unpersisted before returning; with the
-    # double-caching gone there is no cache entry to release and the
+    # plain view over the (already checkpointed) star forest: the
     # distinct runs once in the caller's single action
     labels = edges.select(
         F.col("big").alias("node"), F.col("small").alias("label")
@@ -1125,8 +1112,6 @@ def star_components(pairs, max_rounds: int = 30):
             F.col("small").alias("node"), F.col("small").alias("label")
         )
     ).distinct()
-    if initial is not None:
-        initial.unpersist()
     return labels
 
 

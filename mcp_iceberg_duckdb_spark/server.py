@@ -36,6 +36,7 @@ from typing import Any
 from pyspark.sql import SparkSession
 
 from mcp_iceberg_duckdb_spark import router
+from mcp_iceberg_duckdb_spark.session import call_scope
 
 MAX_RESULT_ROWS = 1000  # keeps JSON payloads under the ~1 MB MCP cap
 # total bytes of the warehouse SELECT answers query_table keeps for reuse
@@ -207,7 +208,10 @@ def run_operator(
     """Run a registered operator by name against the lake fixtures —
     the whole tier-X pipeline surface (dedup, ANN, text analysis,
     corpus curation) becomes callable from an MCP client without
-    writing SQL. ``sf_dir`` defaults to $SPARK_GRAFT_SF_DIR."""
+    writing SQL. ``sf_dir`` defaults to $SPARK_GRAFT_SF_DIR. What the
+    operator persists or checkpoints lives for this call only
+    (``session.call_scope``), so a repeated call reads the files
+    again."""
     import os
 
     start = time.perf_counter()
@@ -220,8 +224,9 @@ def run_operator(
         sf = sf_dir or os.environ.get(
             "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
         )
-        df = registry.QUERIES[name].builder(spark, sf)
-        return _respond(_rows_to_json(df), time.perf_counter() - start)
+        with call_scope(spark):
+            rows = _rows_to_json(registry.QUERIES[name].builder(spark, sf))
+        return _respond(rows, time.perf_counter() - start)
     except Exception as exc:
         return ToolResult(f"Error executing operator: {exc}", is_error=True)
 

@@ -24,8 +24,58 @@ Design points for the 100 TB target (even though tests run local[N]):
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+
+@contextmanager
+def call_scope(spark: SparkSession):
+    """Release every intermediate the block leaves in ``spark``: the
+    CacheManager entries it added (``.persist()``, ``CACHE TABLE``)
+    are uncached and the persisted RDDs it added
+    (``.localCheckpoint()``, buffers) are unpersisted, also when the
+    block raises. Entries cached before the block stay cached with
+    their buffers, even buffers first built inside it (``CACHE LAZY
+    TABLE``). So a repeated call recomputes from the files and never
+    answers from a cache keyed by path.
+
+    The release diffs the whole session, so it holds only while one
+    scoped block runs at a time: a block running beside it would lose
+    its intermediates, or leave them behind. Uses CacheManager and
+    CachedRDDBuilder internals of the pinned Spark 4.1."""
+    jsc, jss = spark.sparkContext._jsc, spark._jsparkSession
+    cache = jss.sharedState().cacheManager()
+
+    def rdd_ids(live) -> set[int]:
+        # one py4j call: iterating the Java set costs ~20 ms even empty
+        ids = live.keySet().toString()[1:-1].split(", ")
+        return {int(i) for i in ids if i}
+
+    rdds = rdd_ids(jsc.getPersistentRDDs())
+    # an immutable snapshot; walked only when it holds an entry
+    entries = cache.cachedData() if cache.numCachedEntries() else None
+    try:
+        yield
+    finally:
+        kept = []
+        if cache.numCachedEntries():
+            now = cache.cachedData()  # newest first: dependents go first
+            for cd in (now.apply(i) for i in range(now.size())):
+                if entries is not None and entries.contains(cd):
+                    kept.append(cd)
+                else:
+                    cache.uncacheQuery(jss, cd.plan(), False, False)
+        live = jsc.getPersistentRDDs()
+        fresh = rdd_ids(live) - rdds
+        for cd in kept if fresh else ():
+            builder = cd.cachedRepresentation().cacheBuilder()
+            # the field, which cachedColumnBuffers() would build if unset
+            buffers = builder._cachedColumnBuffers()
+            if buffers is not None:
+                fresh.discard(buffers.id())
+        for i in fresh:
+            live.get(i).unpersist(False)
 
 
 def default_parallelism() -> int:

@@ -72,6 +72,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     from mcp_iceberg_duckdb_spark.compare import rows_to_multiset
+    from mcp_iceberg_duckdb_spark.session import call_scope
 
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument(
@@ -139,10 +140,14 @@ def main() -> int:
             continue
         tq = time.time()
         try:
-            sdf = queries[name](spark, sf_dir)
-            got = rows_to_multiset(
-                sdf.columns, [tuple(r) for r in sdf.collect()]
-            )
+            # each query releases what it persisted: a later query
+            # that persists the same plan must compute it, not read
+            # this one's intermediates
+            with call_scope(spark):
+                sdf = queries[name](spark, sf_dir)
+                got = rows_to_multiset(
+                    sdf.columns, [tuple(r) for r in sdf.collect()]
+                )
             if name in rows_only:
                 n_rows_only += 1
                 print(

@@ -106,6 +106,31 @@ def test_non_file_source_still_spreads(spark):
     assert _shuffles(out) == _shuffles(df) + 1
 
 
+def test_many_files_skip_the_stat_walk(spark, tmp_path, monkeypatch):
+    # with >= parallelism/2 input files the plan returns before
+    # _scan_splits stats a single file (a 100k-file table would cost
+    # 100k os.stat calls per gate decision otherwise)
+    import os
+
+    n_files = max(spark.sparkContext.defaultParallelism // 2, 1)
+    for i in range(n_files):
+        pq.write_table(pa.table({"x": [i]}), tmp_path / f"part-{i}.parquet")
+    df = spark.read.parquet(str(tmp_path))
+    stats = []
+    real_stat = os.stat
+
+    def counting_stat(*args, **kwargs):
+        stats.append(args[0])
+        return real_stat(*args, **kwargs)
+
+    monkeypatch.setattr(os, "stat", counting_stat)
+    out = parallelize(df)
+    monkeypatch.undo()
+    assert out is df
+    assert _shuffles(out) == _shuffles(df)
+    assert stats == []
+
+
 _PLANNER_CONFS = (
     "spark.sql.files.maxPartitionBytes",
     "spark.sql.files.openCostInBytes",
