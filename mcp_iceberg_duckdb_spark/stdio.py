@@ -20,9 +20,13 @@ is the part of the contract an MCP client actually breaks on.
 from __future__ import annotations
 
 import json
+import os
+import subprocess
 import sys
+from contextlib import suppress
 from typing import Any, TextIO
 
+from mcp_iceberg_duckdb_spark import session
 from mcp_iceberg_duckdb_spark.server import (
     list_operators,
     query_catalog,
@@ -192,23 +196,50 @@ class StdioServer:
             self.handle_line(line)
 
 
+def provenance(spark) -> dict[str, Any]:
+    """What a run's numbers depend on: cpus, driver memory, the Spark
+    and Java versions, the git sha of a checkout, and whether the
+    driver JVM maps, dumps or goes without its class-data archive."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sha = None
+    # only the package's own checkout; no git on the PATH leaves it None
+    with suppress(OSError):
+        if os.path.exists(os.path.join(root, ".git")):
+            git = subprocess.run(["git", "-C", root, "rev-parse", "HEAD"],
+                                 stdin=subprocess.DEVNULL, capture_output=True,
+                                 text=True, check=False)
+            sha = git.stdout.strip() or None
+    return {
+        "cpus": session.default_parallelism(),
+        "driver_memory": spark.conf.get("spark.driver.memory"),
+        "spark": spark.version,
+        "java": spark.sparkContext._jvm.System.getProperty("java.runtime.version"),
+        "git_sha": sha,
+        "archive": dict(session.class_sharing),
+    }
+
+
 def main() -> None:  # pragma: no cover - exercised via subprocess test
     """Entry point: build a session, register the lake tables, serve
-    stdio until EOF. SPARK_GRAFT_SF_DIR points at the warehouse dir
-    (parquet fixture tables registered as views, mirroring the
-    reference's catalog-connected startup)."""
-    import os
-
+    stdio until EOF, then stop the driver JVM and wait for it, so the
+    server exits only after its JVM (and any archive dump) has.
+    SPARK_GRAFT_SF_DIR points at the warehouse dir (parquet fixture
+    tables registered as views, mirroring the reference's
+    catalog-connected startup). One provenance JSON line goes to
+    stderr at start."""
     from mcp_iceberg_duckdb_spark.operators._util import views
-    from mcp_iceberg_duckdb_spark.session import build_session
     from mcp_iceberg_duckdb_spark.sources.tables import TABLE_NAMES
 
-    spark = build_session(app_name="mcp-stdio")
-    spark.sparkContext.setLogLevel("ERROR")
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
-    if sf_dir:
-        views(spark, sf_dir, *TABLE_NAMES)
-    StdioServer(spark).run()
+    spark = session.build_session(app_name="mcp-stdio")
+    try:
+        spark.sparkContext.setLogLevel("ERROR")
+        print(json.dumps(provenance(spark)), file=sys.stderr, flush=True)
+        sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
+        if sf_dir:
+            views(spark, sf_dir, *TABLE_NAMES)
+        StdioServer(spark).run()
+    finally:
+        session.stop(spark)
 
 
 if __name__ == "__main__":
