@@ -582,10 +582,11 @@ def x_graph_kcore(spark, sf_dir):
     Spark shape: PageRank's loop skeleton — the symmetric edge
     relation builds once and is localCheckpoint'd so the unrolled
     rounds don't re-inline the orders⋈lineitem subtree; each round
-    is TWO semi-joins (edges restricted to surviving endpoints — the
-    survivor relation is |V| rows and broadcasts) + ONE degree
-    groupBy with map-side combine. The threshold is a broadcast
-    1-row aggregate, never collected. Driver state: zero.
+    localCheckpoints the survivor relation, then runs TWO semi-joins
+    (edges restricted to surviving endpoints — the survivor relation
+    is |V| rows and broadcasts) + ONE degree groupBy with map-side
+    combine. The threshold is a 1-row aggregate collected once to a
+    driver int64 and inlined as a literal. Driver state: that scalar.
 
     Determinism: degrees and the floored-median threshold are pure
     int64 on both engines."""

@@ -199,7 +199,8 @@ class StdioServer:
 def provenance(spark) -> dict[str, Any]:
     """What a run's numbers depend on: cpus, driver memory, the Spark
     and Java versions, the git sha of a checkout, and whether the
-    driver JVM maps, dumps or goes without its class-data archive."""
+    driver JVM maps, dumps or goes without its class-data archive, and
+    how many compiled generated classes Spark keeps."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sha = None
     # only the package's own checkout; no git on the PATH leaves it None
@@ -216,6 +217,8 @@ def provenance(spark) -> dict[str, Any]:
         "java": spark.sparkContext._jvm.System.getProperty("java.runtime.version"),
         "git_sha": sha,
         "archive": dict(session.class_sharing),
+        "codegen_cache_entries": int(
+            spark.conf.get("spark.sql.codegen.cache.maxEntries")),
     }
 
 
@@ -226,10 +229,18 @@ def main() -> None:  # pragma: no cover - exercised via subprocess test
     SPARK_GRAFT_SF_DIR points at the warehouse dir (parquet fixture
     tables registered as views, mirroring the reference's
     catalog-connected startup). One provenance JSON line goes to
-    stderr at start."""
+    stderr at start.
+
+    Frames go to a private copy of stdout, and fd 1 becomes stderr
+    before the JVM starts: what the JVM or a native library prints to
+    its stdout (JDK 17 prints a crash summary there, whatever its
+    options say) then lands on stderr, not the protocol channel."""
     from mcp_iceberg_duckdb_spark.operators._util import views
     from mcp_iceberg_duckdb_spark.sources.tables import TABLE_NAMES
 
+    sys.stdout.flush()
+    frames = os.fdopen(os.dup(1), "w", encoding="utf-8")
+    os.dup2(2, 1)
     spark = session.build_session(app_name="mcp-stdio")
     try:
         spark.sparkContext.setLogLevel("ERROR")
@@ -237,7 +248,7 @@ def main() -> None:  # pragma: no cover - exercised via subprocess test
         sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
         if sf_dir:
             views(spark, sf_dir, *TABLE_NAMES)
-        StdioServer(spark).run()
+        StdioServer(spark, frames).run()
     finally:
         session.stop(spark)
 

@@ -1,14 +1,17 @@
 """The driver JVM's class-data-sharing archive: where it lives, when
-it is mapped or dumped, and that every failure path still serves with
-stdout carrying JSON-RPC frames only. Every spawned server gets its
-own cache dir through ``XDG_CACHE_HOME``."""
+it is mapped or dumped, and that every failure path, a crashed JVM
+included, leaves stdout carrying JSON-RPC frames only. Every spawned
+server gets its own cache dir through ``XDG_CACHE_HOME``."""
 
 from __future__ import annotations
 
 import json
 import os
+import resource
+import signal
 import subprocess
 import sys
+import time
 from contextlib import suppress
 from pathlib import Path
 
@@ -28,11 +31,11 @@ def _dead_pid() -> int:
     return p.pid
 
 
-def _serve(cache: Path, tmp: Path, **env) -> tuple[list[dict], dict]:
+def _serve(cache: Path, tmp: Path, after=None, **env) -> tuple[list[dict], dict]:
     """Run one stdio conversation with a cache dir: initialize, one
-    query, EOF. Checks that stdout held frames only and that the
-    server left nothing running in its process group; returns the
-    frames and the provenance line."""
+    query, ``after(server)`` if given, EOF. Checks that stdout held
+    frames only and that the server left nothing running in its
+    process group; returns the frames and the provenance line."""
     env = dict(
         os.environ,
         XDG_CACHE_HOME=str(cache),
@@ -65,11 +68,13 @@ def _serve(cache: Path, tmp: Path, **env) -> tuple[list[dict], dict]:
         p.stdin.write("".join(json.dumps(r) + "\n" for r in requests))
         p.stdin.flush()
         frames = [json.loads(p.stdout.readline()) for _ in range(2)]
+        if after is not None:
+            after(p)
         p.stdin.close()
         p.wait(timeout=180)
         # the server exits only after its JVM has, dump included
         assert _running(p.pid) == []
-        assert p.stdout.read() == ""  # the JVM shares the server's stdout
+        assert p.stdout.read() == ""  # frames only, whatever the JVM printed
     assert p.returncode == 0
     assert [f["id"] for f in frames] == [1, 2]
     assert all(f["jsonrpc"] == "2.0" for f in frames)
@@ -133,8 +138,10 @@ def test_cache_keeps_one_archive_and_live_temp_files(dumped):
 def test_provenance_line_keys(dumped):
     prov = dumped[3]
     assert sorted(prov) == [
-        "archive", "cpus", "driver_memory", "git_sha", "java", "spark"]
+        "archive", "codegen_cache_entries", "cpus", "driver_memory",
+        "git_sha", "java", "spark"]
     assert prov["cpus"] == 2 and prov["driver_memory"] == MEMORY
+    assert prov["codegen_cache_entries"] == session.CODEGEN_CACHE_ENTRIES
     assert prov["spark"].startswith("4.") and prov["java"]
 
 
@@ -191,3 +198,26 @@ def test_archive_key_follows_compressed_oops():
     assert session.archive_key(home, java, "2g") == KEY
     assert session.archive_key(home, java, "31g") == KEY
     assert session.archive_key(home, java, "32g") != KEY
+
+
+def test_jvm_crash_report_stays_off_stdout(tmp_path):
+    """JDK 17 prints its fatal-error summary to its stdout, whatever
+    its options say. The server's JVM inherits stderr as its stdout, so
+    a crash leaves the protocol channel with the frames already sent."""
+
+    def segv(p):
+        [jvm] = [int(st.split()[0]) for st in _running(p.pid) if "(java)" in st]
+        os.kill(jvm, signal.SIGSEGV)
+        deadline = time.monotonic() + 60
+        while any("(java)" in st for st in _running(p.pid)):
+            assert time.monotonic() < deadline, "the JVM outlived SIGSEGV"
+            time.sleep(0.2)
+
+    soft, hard = resource.getrlimit(resource.RLIMIT_CORE)
+    resource.setrlimit(resource.RLIMIT_CORE, (0, hard))  # the JVM inherits it
+    try:
+        _serve(tmp_path / "cache", tmp_path, after=segv)
+    finally:
+        resource.setrlimit(resource.RLIMIT_CORE, (soft, hard))
+    err = (tmp_path / "stderr.log").read_text()
+    assert "# A fatal error has been detected by the Java Runtime Environment" in err
